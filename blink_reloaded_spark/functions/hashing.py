@@ -278,9 +278,10 @@ def minhash_sigs_np_udf(k: int, num_hashes: int):
     sig tier: 1.78 s wall / 11.3 CPU-s → one map pass).
 
     Exactness argument (parity pinned by tests/test_functions.py):
-    * poly_hash applies ``% P`` per char, but char codes < 2^21 and k <= 5
-      keep the un-reduced Horner value < 2^42, so one final ``% P`` is the
-      same residue — all int64, no float anywhere;
+    * poly_hash applies ``% P`` per char, but char codes < 2^21 keep the
+      un-reduced Horner value <= (2^21-1)·(31^k-1)/30, under 2^63 for
+      k <= 9 (it overflows int64 at k=10), so one final ``% P`` is the same
+      residue — all int64, no float anywhere;
     * perm_hash is (a*h + b) % P with a, h < P < 2^31 → a*h < 2^62, exact
       in int64;
     * duplicate shingles cannot change a min, so array_distinct is
@@ -292,7 +293,18 @@ def minhash_sigs_np_udf(k: int, num_hashes: int):
     NULL inputs must be filtered by the caller (the explode path drops
     ids with a NULL shingle array; ``.where(col.isNotNull())`` preserves
     that contract).
+
+    Raises ValueError outside the exact contract: ``1 <= k <= 9`` (int64
+    Horner) and ``1 <= num_hashes <= len(PERMS)`` (there are no more
+    permutations; the signature would be uninitialised memory).
     """
+    if not 1 <= k <= 9:
+        raise ValueError(f"k must be in [1, 9] (int64 Horner bound), got {k}")
+    if not 1 <= num_hashes <= len(PERMS):
+        raise ValueError(
+            f"num_hashes must be in [1, {len(PERMS)}] (len(PERMS)), "
+            f"got {num_hashes}"
+        )
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

@@ -137,8 +137,8 @@ def auto_blocking_params(n_catalogue: int) -> dict[str, int]:
     k=2 shingles keep typo jaccard high; 24 bands buy the recall back
     (miss ~ (1-j^2)^24). Residual hot blocks are min-hash concentration on
     common suffix shingles (' inc', ' ltd') — non-discriminative by
-    construction; they are bounded by block purging in
-    mention_entity_candidates, not by longer shingles (which would cost
+    construction; they are bounded by block purging
+    (purged_block_keys), not by longer shingles (which would cost
     typo recall). Asserted at 10^5 entities in
     tests/test_blocking.py::test_autotuned_blocking_at_1e5.
     """
@@ -157,44 +157,12 @@ def purged_block_keys(
     max_key_pairs: int | None = None,
 ) -> DataFrame:
     """Surviving block keys from a FLAGGED key table (id, is_mention,
-    block_key): per-key mention and entity counts in ONE conditional
-    aggregation — one exchange and one scan of the (large) key table,
-    where the per-side groupBys cost two of each (r5 plan audit: the
-    unmaterialized `ok` subtree was additionally recomputed by each of
-    its two semi-join consumers, so the old shape paid 4 exchanges + 4
-    scans). Cap semantics identical to mention_entity_candidates."""
-    sz = flagged_keys.groupBy("block_key").agg(
-        F.count(F.when(F.col("is_mention"), 1)).alias("msz"),
-        F.count(F.when(~F.col("is_mention"), 1)).alias("esz"),
-    )
-    cond = F.lit(True)
-    if max_entity_block is not None:
-        cond = cond & (F.col("esz") <= max_entity_block)
-    if max_key_pairs is not None:
-        cond = cond & (F.col("esz") * F.col("msz") <= max_key_pairs)
-    return sz.where(cond).select("block_key")
+    block_key), for mention_entity_candidates' `ok_keys`: per-key mention
+    and entity counts in ONE conditional aggregation — one exchange and one
+    scan of the (large) key table, where per-side groupBys cost two of each
+    (r5 plan audit).
 
-
-def mention_entity_candidates(
-    mention_keys: DataFrame,
-    entity_keys: DataFrame,
-    max_entity_block: int | None = None,
-    max_candidates_per_mention: int | None = None,
-    max_key_pairs: int | None = None,
-    materialize_keys: bool = True,
-    materializer=None,
-    ok_keys: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate (mention, entity) pairs: equi-join of the two key tables on
-    block_key -> distinct pairs.
-
-    This is the reference's retrieval stage as a *join* (`blink/main_dense.py:
-    238-262` scores each mention against the whole catalogue; we only score
-    within shared blocks). Cost is linear in Σ_key |mentions_key|·|entities_key|
-    — a 1-to-few join since entities per key is small — never quadratic in
-    mentions. Skew on hot keys is split by AQE skew-join handling.
-
-    `max_entity_block` enables BLOCK PURGING (the standard record-linkage
+    `max_entity_block` is BLOCK PURGING (the standard record-linkage
     bound, cf. JedAI/Dedoop block purging): block keys shared by more than
     this many ENTITIES are dropped before the join. Such blocks come from
     non-discriminative keys (min-hash concentration on common suffix
@@ -212,7 +180,39 @@ def mention_entity_candidates(
     34M at 0.9971 (gold pairs share their RARE keys, so hot-key loss is
     tiny; per-record block filtering, by contrast, collapsed recall to 0.79
     because a typo'd alias's smallest buckets are exactly its UNSHARED
-    keys).
+    keys)."""
+    sz = flagged_keys.groupBy("block_key").agg(
+        F.count(F.when(F.col("is_mention"), 1)).alias("msz"),
+        F.count(F.when(~F.col("is_mention"), 1)).alias("esz"),
+    )
+    cond = F.lit(True)
+    if max_entity_block is not None:
+        cond = cond & (F.col("esz") <= max_entity_block)
+    if max_key_pairs is not None:
+        cond = cond & (F.col("esz") * F.col("msz") <= max_key_pairs)
+    return sz.where(cond).select("block_key")
+
+
+def mention_entity_candidates(
+    mention_keys: DataFrame,
+    entity_keys: DataFrame,
+    ok_keys: DataFrame | None = None,
+    max_candidates_per_mention: int | None = None,
+) -> DataFrame:
+    """Candidate (mention, entity) pairs: equi-join of the two (id,
+    block_key) tables on block_key -> distinct pairs.
+
+    This is the reference's retrieval stage as a *join* (`blink/main_dense.py:
+    238-262` scores each mention against the whole catalogue; we only score
+    within shared blocks). Cost is linear in Σ_key |mentions_key|·|entities_key|
+    — a 1-to-few join since entities per key is small — never quadratic in
+    mentions. Skew on hot keys is split by AQE skew-join handling.
+
+    `ok_keys` (block_key) restricts both sides to the keys that survive
+    block purging — computed by the caller with `purged_block_keys` over
+    its flagged key table, and materialized by the caller (its two
+    semi-join consumers would otherwise each recompute the sizing subtree)
+    under the caller's own durability contract. None = no purge.
 
     `max_candidates_per_mention` is the reference's top-k retrieval bound
     (O2, `blink/main_dense.py:238-262` keeps top_k=100 per mention): keep
@@ -225,54 +225,9 @@ def mention_entity_candidates(
     """
     m = mention_keys.select(F.col("id").alias("a"), "block_key")
     e = entity_keys.select(F.col("id").alias("b"), "block_key")
-    if max_entity_block is not None or max_key_pairs is not None:
-        # the purge consumes each key table TWICE (size aggregation + the
-        # purged join input); the tables embed the whole MinHash keying
-        # subtree, and stage reuse does not reliably dedup it — materialize
-        # the skinny (id, block_key) frames once per side (~40B/row) so the
-        # keying runs exactly once (same lesson as the scorer's
-        # multi-consumer UDF frames, perf-lessons r3). materialize_keys=
-        # False when the caller already materialized the key tables (the
-        # pipeline keys both sides in one job and splits by flag).
-        # `materializer` (ADVICE r4): callers running a durability contract
-        # (checkpoint_mode="reliable") pass their own materialize callable —
-        # the default localCheckpoint pins blocks to executors, which is
-        # fine on local mode but fatal to the job on executor loss mid-join
-        # on a real cluster (LinkagePipeline threads _materialize through).
-        mat = materializer or (lambda d: d.localCheckpoint())
-        if materialize_keys:
-            m = mat(m)
-            e = mat(e)
-        if ok_keys is not None:
-            # caller precomputed the surviving keys in one pass over its
-            # flagged union table (purged_block_keys) — the sharper shape
-            # when both sides were keyed together (build_candidates_from)
-            ok = ok_keys
-        else:
-            esz = e.groupBy("block_key").agg(F.count("*").alias("esz"))
-            if max_key_pairs is not None:
-                msz = m.groupBy("block_key").agg(F.count("*").alias("msz"))
-                ok = (
-                    esz.join(msz, "block_key")
-                    .where(
-                        (F.col("esz") * F.col("msz") <= max_key_pairs)
-                        & (
-                            F.col("esz") <= max_entity_block
-                            if max_entity_block is not None
-                            else F.lit(True)
-                        )
-                    )
-                    .select("block_key")
-                )
-            else:
-                ok = esz.where(F.col("esz") <= max_entity_block).select("block_key")
-            # materialize the (small) survivor-key table: its TWO semi-join
-            # consumers would otherwise each recompute the whole sizing
-            # subtree — 2 extra exchanges + 2 extra key-table scans per run
-            # (r5 plan audit)
-            ok = mat(ok)
-        m = m.join(ok, "block_key", "left_semi")
-        e = e.join(ok, "block_key", "left_semi")
+    if ok_keys is not None:
+        m = m.join(ok_keys, "block_key", "left_semi")
+        e = e.join(ok_keys, "block_key", "left_semi")
     if max_candidates_per_mention is None:
         # repartition("a") + dropDuplicates instead of a bare distinct (r8):
         # the same ONE exchange (hash(a) satisfies the (a, b) dedup's

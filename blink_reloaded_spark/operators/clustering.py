@@ -101,19 +101,19 @@ def star_components(edges: DataFrame, leaf: str = "src", hub: str = "dst") -> Da
     return leaves.union(hubs)
 
 
-# Local-CC gate (r8): when the canonical edge set is small enough that the
-# iteration parallelism sizing (below) lands on ONE partition, the log-round
-# loop degenerates into pure serial job latency — each round is a full job of
-# single-partition shuffles plus a driver barrier, and a ~2k-edge graph pays
-# ~4 such rounds (measured: er04's CC tail was ~2.4s of its 3.4s wall for a
-# 2k-edge graph). A single-partition graph is by definition one task's worth
-# of data, so compute its components IN that one task: a mapInPandas
-# union-find over the already-coalesced edge partition — one job, no rounds,
-# no driver loop over rows. The distributed log-round loop is untouched for
-# any graph the sizing spreads over >1 partition (the 100TB path).
-# The cap is a memory guard on the one task (~32B/edge in the dict), far
-# above the 50k-edges/partition sizing that actually triggers the path.
-LOCAL_CC_MAX_EDGES = 2_000_000
+# Edges per partition for the CC iteration parallelism sizing — and the
+# local-CC gate (r8): a graph within ONE partition's worth of edges skips
+# the log-round loop, which at that size degenerates into pure serial job
+# latency — each round is a full job of single-partition shuffles plus a
+# driver barrier, and a ~2k-edge graph pays ~4 such rounds (measured: er04's
+# CC tail was ~2.4s of its 3.4s wall for a 2k-edge graph). Its components
+# are computed IN one task instead: a mapInPandas union-find over the
+# coalesced edge partition — one job, no rounds, no driver loop over rows.
+# The gate is the edge count, not the derived partition count: at
+# defaultParallelism=1 every graph sizes to one partition, and the one
+# union-find task must stay a bounded memory footprint (~32B/edge in the
+# dict). Larger graphs take the distributed loop (the 100TB path).
+EDGES_PER_PARTITION = 50_000
 
 
 def _local_components(e: DataFrame) -> DataFrame:
@@ -213,13 +213,13 @@ def connected_components(
         # round is several shuffles of the (shrinking) edge set — running a
         # 200-edge surface graph at 32 shuffle partitions is pure task
         # overhead, while a 10^10-edge graph wants the full width
-        num_partitions = max(1, min(int(n_edges / 50_000) + 1,
+        num_partitions = max(1, min(n_edges // EDGES_PER_PARTITION + 1,
                                     e.sparkSession.sparkContext.defaultParallelism))
     if e.rdd.getNumPartitions() > num_partitions:
         e = e.coalesce(num_partitions)
-    if num_partitions == 1 and n_edges <= LOCAL_CC_MAX_EDGES:
-        # one-partition graph: single-task union-find, no round loop (see
-        # LOCAL_CC_MAX_EDGES note). Output contract identical.
+    if num_partitions == 1 and n_edges <= EDGES_PER_PARTITION:
+        # one partition's worth of edges: single-task union-find, no round
+        # loop (see EDGES_PER_PARTITION note). Output contract identical.
         return _with_singletons(_local_components(e), nodes)
     spark = e.sparkSession
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")

@@ -15,6 +15,20 @@ cluster (§7.0) — realized here as transitive closure over accepted
 mention->entity edges, with cluster ids canonicalized to the minimum mention
 id (deterministic under partitioning / row order).
 
+The four entry points are one fuzzy-join program (blocking -> similarity ->
+accept) over a shared private core: `_surfaces` (distinct surfaces +
+per-surface min id), `_blocking_keys`, `_surface_clusters` + `_expand`
+(min-id canonicalization and the join back onto mentions) and, for the
+KB-free pair, `_kb_free_components` (self-join -> score -> match edges ->
+connected components):
+
+  run                 surfaces(+entities) -> build_candidates_from ->
+                      build_links_from -> star components -> canonicalize
+  run_links           run()'s stages 2-4 -> join links onto mentions
+  run_kb_free         surfaces -> KB-free chain -> canonicalize
+  run_kb_free_append  surfaces(state ∪ delta) -> guards -> KB-free chain
+                      (new-touching pairs + state star edges) -> canonicalize
+
 Scale notes:
 * candidate generation is a key equi-join (linear in Σ_key |m_k|·|e_k|),
   never a mention×mention cross product;
@@ -41,7 +55,6 @@ from blink_reloaded_spark.operators.blocking import (
     mention_entity_candidates,
     purged_block_keys,
 )
-from blink_reloaded_spark.operators.scoring import match_edges
 from blink_reloaded_spark.operators.clustering import (
     connected_components,
     star_components,
@@ -50,6 +63,7 @@ from blink_reloaded_spark.operators.mentions import extract_mentions
 from blink_reloaded_spark.operators.scoring import (
     DEFAULT_THRESHOLD,
     link_best,
+    match_edges,
     two_phase_scored_pairs,
 )
 from blink_reloaded_spark.sources.checkpoint import CheckpointManager
@@ -84,7 +98,7 @@ class LinkagePipeline:
     max_block: int = 1000
     # entity-side block purge bound + per-mention candidate budget for the
     # KB join (None = off); set by LinkagePipeline.tuned for large
-    # catalogues — see blocking.mention_entity_candidates
+    # catalogues — see blocking.purged_block_keys
     max_entity_block: int | None = None
     max_candidates_per_mention: int | None = None
     max_key_pairs: int | None = None
@@ -136,17 +150,159 @@ class LinkagePipeline:
 
         return xxhash64_mod
 
-    def _with_node_cols(self, df: DataFrame) -> DataFrame:
-        """Scorer/blocking node columns on an (id, text) frame: tokens +
-        prefix key always; stored vectors only on the join cos path (the
-        recompute path derives cos from pair texts — no vec column, no
-        embedding pass)."""
-        out = df.withColumn("tk", tokens(F.col("text"))).withColumn(
-            "prefix_key", _prefix_key("text")
+    # ---- the shared surface-graph core (module docstring) -----------------
+
+    def _extract(
+        self,
+        transcripts: DataFrame,
+        surfaces: list[str] | None,
+        mentions: DataFrame | None,
+        **kw: Any,
+    ) -> DataFrame:
+        """The caller's pre-extracted mentions, else dictionary extraction
+        (U1) over `transcripts`."""
+        if mentions is not None:
+            return mentions
+        if surfaces is None:
+            raise ValueError("need surfaces or mentions")
+        return extract_mentions(
+            transcripts, surfaces, with_context=False, id_bits=self.id_bits, **kw
         )
+
+    def _surfaces(
+        self, df: DataFrame, cand: str, entities: DataFrame | None = None
+    ) -> DataFrame:
+        """Surface node table (id, text, is_mention, surf_min, tk[, vec])
+        from a (mention, `cand`) frame in ONE groupBy(mention): the dedup to
+        distinct surfaces and surf_min = min(cand) share the pass (the
+        cluster canonicalization needs the per-surface min; a second
+        aggregation would re-scan the corpus-sized mention frame).
+        `cand` is a mention id, or — for state surfaces in the append — the
+        surface's cluster_id, which IS the min mention id of its old
+        cluster, so min(surf_min) per component stays the new cluster id.
+        `entities` unions the catalogue titles in as anchor nodes
+        (is_mention false, surf_min NULL)."""
+        out = (
+            df.groupBy("mention")
+            .agg(F.min(cand).alias("surf_min"))
+            .select(
+                F.xxhash64(F.lit("surf"), "mention").alias("id"),
+                F.col("mention").alias("text"),
+                F.lit(True).alias("is_mention"),
+                "surf_min",
+            )
+        )
+        if entities is not None:
+            out = out.unionByName(
+                entities.select(
+                    (F.lit(ENTITY_ID_OFFSET) - F.col("entity_id")).alias("id"),
+                    F.lower(F.col("title")).alias("text"),
+                    F.lit(False).alias("is_mention"),
+                    # type follows the mention id (long, or string in
+                    # id_bits=128 mode — a hard "long" cast here corrupted
+                    # the union's column type for 128-bit ids)
+                    F.lit(None)
+                    .cast(df.schema[cand].dataType)
+                    .alias("surf_min"),
+                )
+            )
+        # tokenize ONCE per distinct surface; the scorer otherwise re-runs
+        # the normalize regex several times per candidate PAIR. Stored
+        # vectors only exist on the join cos path — in recompute mode
+        # (default) the scorer derives cos from pair texts, so the surfaces
+        # stage skips the embedding UDF pass and its ~1KB/row.
+        out = out.withColumn("tk", tokens(F.col("text")))
         if self.cos_source == "join":
             out = out.withColumn("vec", hashed_embedding_udf(F.col("text")))
         return out
+
+    def _blocking_keys(
+        self, surf: DataFrame, carry_cols: list[str] | None = None
+    ) -> DataFrame:
+        """(id, [carry_cols...], block_key): MinHash-LSH band keys plus the
+        first-token prefix key over a surface node table."""
+        return blocking_keys(
+            surf.withColumn("prefix_key", _prefix_key("text")),
+            id_col="id", text_col="text", bands=self.bands, rows=self.rows,
+            shingle_k=self.shingle_k, extra_key_cols=["prefix_key"],
+            hash_fn=self._blocking_hash(), carry_cols=carry_cols,
+        )
+
+    def _kb_free_components(
+        self,
+        surf: DataFrame,
+        keys: DataFrame,
+        threshold: float,
+        new_ids: DataFrame | None = None,
+        star: DataFrame | None = None,
+    ) -> DataFrame:
+        """KB-free edge chain: skew-bounded self-join pairs over `keys` ->
+        two-phase scoring -> every edge over `threshold` -> connected
+        components over all surfaces of `surf`. The append passes `new_ids`
+        (score only pairs touching a new surface; the filter runs AFTER
+        candidate_pairs so block-cap decisions are the full-run ones) and
+        `star` (edges encoding the state's closure)."""
+        pairs = candidate_pairs(keys, max_block=self.max_block)
+        if new_ids is not None:
+            na = new_ids.select(F.col("id").alias("a"), F.lit(1).alias("new_a"))
+            nb = new_ids.select(F.col("id").alias("b"), F.lit(1).alias("new_b"))
+            pairs = (
+                pairs.join(na, "a", "left")
+                .join(nb, "b", "left")
+                .where(F.col("new_a").isNotNull() | F.col("new_b").isNotNull())
+                .select("a", "b")
+            )
+        # argmax_prune=False: match_edges consumes the FULL accepted-edge
+        # set, so only the threshold-bound prune is lossless here (the
+        # argmax bound would drop threshold-passing non-best edges and
+        # change the transitive closure)
+        scored = two_phase_scored_pairs(
+            pairs, surf,
+            threshold=threshold, argmax_prune=False,
+            vec_join=self.vec_join, cos_source=self.cos_source,
+        )
+        edges = match_edges(scored, threshold)
+        if star is not None:
+            edges = edges.unionByName(star)
+        return connected_components(
+            self._materialize(edges),
+            nodes=surf.select("id"),
+            checkpoint_mode=self.checkpoint_mode,
+        )
+
+    @staticmethod
+    def _surface_clusters(comps: DataFrame, surf: DataFrame) -> DataFrame:
+        """(mention=surface, cluster_id) for every mention surface in a
+        component, cluster_id = min mention id of the component with ZERO
+        passes over the mention set: min-per-component = min over the
+        component's surfaces of surf_min. Only MENTION surfaces map back —
+        an exact alias equals its entity title, and entity-anchor ids must
+        never become cluster ids. All surface-cardinality; AQE picks the
+        join strategies (no broadcast hints on unbounded sides)."""
+        surf_comp = comps.join(
+            surf.where("is_mention").select(
+                F.col("id").alias("node"),
+                F.col("text").alias("mention"),
+                "surf_min",
+            ),
+            "node",
+        ).select("mention", "component", "surf_min")
+        cmin = surf_comp.groupBy("component").agg(
+            F.min("surf_min").alias("cluster_id")
+        )
+        return surf_comp.join(cmin, "component").select("mention", "cluster_id")
+
+    @staticmethod
+    def _expand(mentions: DataFrame, surf_cluster: DataFrame) -> DataFrame:
+        """The ONE join back onto (mention_id, mention) rows -> (node,
+        cluster_id); mentions of surfaces outside every component stay
+        singletons (FIXTURES F5: the reference's NIL / no-prediction case)."""
+        return mentions.join(surf_cluster, "mention", "left").select(
+            F.col("mention_id").alias("node"),
+            F.coalesce(F.col("cluster_id"), F.col("mention_id")).alias(
+                "cluster_id"
+            ),
+        )
 
     def _materialize(self, df: DataFrame) -> DataFrame:
         if self.checkpoint_mode == "reliable":
@@ -182,7 +338,7 @@ class LinkagePipeline:
         the small-catalogue regime. Explicit kwargs override the tuning."""
         params: dict[str, Any] = dict(auto_blocking_params(n_catalogue))
         if n_catalogue >= 20_000:
-            # comparison-level purge (see mention_entity_candidates for the
+            # comparison-level purge (see purged_block_keys for the
             # measured pairs-vs-recall curve) + the reference's top-k bound
             # (main_dense.py:252 keeps top_k=100 before the cross-encoder;
             # 16 suffices when ranked by shared-key count: measured at 20k
@@ -209,14 +365,7 @@ class LinkagePipeline:
         table is materialized ONCE — one keying job + one barrier instead
         of two serial per-side ones, and the purge's two consumers of each
         key table never recompute the keying subtree."""
-        keyed = surfaces_t.withColumn("prefix_key", _prefix_key("text"))
-        hf = self._blocking_hash()
-        keys_all = blocking_keys(
-            keyed,
-            id_col="id", text_col="text", bands=self.bands, rows=self.rows,
-            shingle_k=self.shingle_k, extra_key_cols=["prefix_key"],
-            hash_fn=hf, carry_cols=["is_mention"],
-        )
+        keys_all = self._blocking_keys(surfaces_t, carry_cols=["is_mention"])
         ok = None
         if self.max_entity_block is not None or self.max_key_pairs is not None:
             keys_all = self._materialize(keys_all)
@@ -233,11 +382,8 @@ class LinkagePipeline:
         return mention_entity_candidates(
             mk,
             ek,
-            max_entity_block=self.max_entity_block,
-            max_candidates_per_mention=self.max_candidates_per_mention,
-            max_key_pairs=self.max_key_pairs,
-            materialize_keys=False,
             ok_keys=ok,
+            max_candidates_per_mention=self.max_candidates_per_mention,
         )
 
     def build_links_from(
@@ -379,14 +525,7 @@ class LinkagePipeline:
 
         # -- 1. mentions ----------------------------------------------------
         def build_mentions() -> DataFrame:
-            if mentions is not None:
-                m_full = mentions
-            else:
-                assert surfaces is not None, "need surfaces or mentions"
-                m_full = extract_mentions(
-                    transcripts, surfaces, with_context=False,
-                    id_bits=self.id_bits,
-                )
+            m_full = self._extract(transcripts, surfaces, mentions)
             if ckpt is None:
                 # No resume store: run() only ever consumes (mention_id,
                 # mention) downstream (m_slim), so materialize the slim
@@ -418,46 +557,7 @@ class LinkagePipeline:
         # 10^12 turns this collapses the heavy stages by orders of magnitude;
         # it is also the first skew fix: the hottest surface becomes ONE row.
         def build_surfaces() -> DataFrame:
-            # ONE grouped pass over the mention set (r8): the dedup to
-            # distinct surfaces and the per-surface min mention id (needed
-            # later for cluster-id canonicalization) share the same
-            # groupBy(mention) — the old shape aggregated the corpus-sized
-            # mention frame twice (distinct here, min in the clusters
-            # stage). surf_min is NULL on entity rows.
-            ment_surf = (
-                m_slim.groupBy("mention")
-                .agg(F.min("mention_id").alias("surf_min"))
-                .select(
-                    F.xxhash64(F.lit("surf"), "mention").alias("id"),
-                    F.col("mention").alias("text"),
-                    F.lit(True).alias("is_mention"),
-                    "surf_min",
-                )
-            )
-            ent_surf = entities.select(
-                (F.lit(ENTITY_ID_OFFSET) - F.col("entity_id")).alias("id"),
-                F.lower(F.col("title")).alias("text"),
-                F.lit(False).alias("is_mention"),
-                # type follows the mention id (long, or string in
-                # id_bits=128 mode — a hard "long" cast here corrupted the
-                # union's column type for 128-bit ids)
-                F.lit(None)
-                .cast(m_slim.schema["mention_id"].dataType)
-                .alias("surf_min"),
-            )
-            both = ment_surf.unionByName(ent_surf)
-            # tokenize ONCE per distinct surface; the scorer otherwise
-            # re-runs the normalize regex several times per candidate PAIR.
-            # Stored vectors only exist on the join cos path — in recompute
-            # mode (default) the scorer derives cos from pair texts, so the
-            # surfaces stage skips the embedding UDF pass entirely and the
-            # checkpoint drops ~1KB/row.
-            both = both.withColumn("tk", tokens(F.col("text")))
-            if self.cos_source == "join":
-                both = both.withColumn(
-                    "vec", hashed_embedding_udf(F.col("text"))
-                )
-            return both
+            return self._surfaces(m_slim, "mention_id", entities)
 
         surfaces_t = stage("surfaces", build_surfaces, inputs=["mentions", "entities"])
         count_metric("distinct_surfaces", surfaces_t)
@@ -515,43 +615,7 @@ class LinkagePipeline:
             # most ONE entity per surface), so components collapse to one
             # aggregation — no log-round CC loop (star_components docstring)
             comps = star_components(edges)
-            # map components back through MENTION surfaces only: an exact
-            # alias equals the entity title, so joining through all
-            # surfaces_t rows would duplicate those mentions
-            # cluster_id = min mention id per component, with ZERO extra
-            # passes over the mention set: min-per-component = min over the
-            # component's surfaces of min-per-surface, and the per-surface
-            # min already rides the surfaces checkpoint (surf_min, computed
-            # in the same groupBy that deduplicates surfaces — r8; the r7
-            # shape re-aggregated the corpus-sized mention frame here).
-            # All arithmetic below is surface-cardinality until the ONE
-            # final join back onto mentions.
-            surf_comp = comps.join(
-                surfaces_t.where("is_mention").select(
-                    F.col("id").alias("node"),
-                    F.col("text").alias("mention"),
-                    "surf_min",
-                ),
-                "node",
-            ).select("mention", "component", "surf_min")
-            cmin = surf_comp.groupBy("component").agg(
-                F.min("surf_min").alias("cluster_id")
-            )
-            # surface -> cluster map (distinct-surface cardinality, small
-            # relative to mentions; no explicit broadcast hint — unbounded
-            # at 10^12 turns, AQE picks the strategy within the threshold)
-            surf_cluster = surf_comp.join(cmin, "component").select(
-                "mention", "cluster_id"
-            )
-            # NB: entity-anchor components never leak in: component ids are
-            # remapped to min *mention* id above; mentions of unlinked
-            # surfaces coalesce to themselves (FIXTURES F5 singletons)
-            return m_slim.join(surf_cluster, "mention", "left").select(
-                F.col("mention_id").alias("node"),
-                F.coalesce(F.col("cluster_id"), F.col("mention_id")).alias(
-                    "cluster_id"
-                ),
-            )
+            return self._expand(m_slim, self._surface_clusters(comps, surfaces_t))
 
         clusters = stage(
             "clusters",
@@ -579,60 +643,22 @@ class LinkagePipeline:
         cluster ids (= min mention id per component), which depend on
         which mentions share a batch. Unlinked (NIL) mentions get
         entity_id = -1, score null (the reference's no-prediction case).
-        """
-        if mentions is None:
-            assert surfaces is not None, "need surfaces or mentions"
-            mentions = extract_mentions(
-                transcripts, surfaces, with_context=False, id_bits=self.id_bits
-            )
-        m = mentions.select("mention_id", "conv_id", "turn_idx", "mention")
 
-        surf = self._materialize(
-            self._with_node_cols(
-                m.select(F.col("mention").alias("text"))
-                .distinct()
-                .select(F.xxhash64(F.lit("surf"), "text").alias("id"), "text")
-            )
+        run()'s stages 2-4 (same surfaces, candidates and links builders,
+        materialized the same way, no checkpoint store) plus one join of
+        the surface links back onto the mentions.
+        """
+        m = self._extract(transcripts, surfaces, mentions).select(
+            "mention_id", "conv_id", "turn_idx", "mention"
         )
-        ent = self._materialize(
-            self._with_node_cols(
-                entities.select(
-                    (F.lit(ENTITY_ID_OFFSET) - F.col("entity_id")).alias("id"),
-                    F.lower(F.col("title")).alias("text"),
-                )
-            )
-        )
-        kw = dict(
-            id_col="id", text_col="text", bands=self.bands, rows=self.rows,
-            shingle_k=self.shingle_k, extra_key_cols=["prefix_key"],
-            hash_fn=self._blocking_hash(),
-        )
-        cands = mention_entity_candidates(
-            blocking_keys(surf, **kw),
-            blocking_keys(ent, **kw),
-            max_entity_block=self.max_entity_block,
-            max_candidates_per_mention=self.max_candidates_per_mention,
-            max_key_pairs=self.max_key_pairs,
-            # keep this caller's durability contract: reliable mode must not
-            # drop to executor-pinned localCheckpoint inside the operator
-            materializer=self._materialize,
-        )
-        # same two-phase pruned scorer as run() — the cos term touches only
-        # cheap-score survivors, never the pair shuffle; the mention text
-        # rides the max struct (no re-attachment join)
-        scored = two_phase_scored_pairs(
-            cands, surf, ent,
-            threshold=self.threshold, argmax_prune=False,
-            vec_join=self.vec_join, cos_source=self.cos_source,
-        )
-        best = link_best(scored, self.threshold, carry=["a_text"])
-        surf_link = best.select(
-            F.col("a_text").alias("mention"),
+        surf = self._materialize(self._surfaces(m, "mention_id", entities))
+        cands = self._materialize(self.build_candidates_from(surf))
+        surf_link = self.build_links_from(cands, surf, assume_partitioned=True).select(
+            F.col("surf_text").alias("mention"),
             (F.lit(ENTITY_ID_OFFSET) - F.col("b")).alias("entity_id"),
             "score",
         )
-        out = m.join(surf_link, "mention", "left")
-        return out.select(
+        return m.join(surf_link, "mention", "left").select(
             "mention_id",
             "conv_id",
             "turn_idx",
@@ -652,88 +678,23 @@ class LinkagePipeline:
         the skew-bounded LSH SELF-join over distinct surfaces, accepted
         surface-surface edges transitively cluster, and mentions expand
         linearly. Returns (node=mention_id, component=cluster id = min
-        mention id); unmatched surfaces yield per-mention singletons only
-        when their surface never links (same NIL semantics as `run`)...
-        except that here identical surfaces DO co-cluster (there is no gold
-        KB to declare them NIL) — the exact-dedup semantics of KB-free ER.
+        mention id). Unlike `run`, identical surfaces always co-cluster
+        (there is no gold KB to declare them NIL) — the exact-dedup
+        semantics of KB-free ER.
         """
         thr = self.threshold if threshold is None else threshold
-
-        if mentions is None:
-            assert surfaces is not None, "need surfaces or mentions"
-            mentions = extract_mentions(
-                transcripts, surfaces, with_context=False, id_bits=self.id_bits
-            )
         # materialize only the consumed projection (same rationale as
         # run()'s mentions stage: the conv/turn/position columns are resume
-        # artifacts, and block-store bytes are the part of stage
-        # materialization whose CPU inflates most with core count)
-        m_slim = mentions.select("mention_id", "mention")
-        if self.checkpoint_dir is None:
-            m_slim = self._materialize(m_slim)
-
-        # ONE grouped pass dedups surfaces AND computes the per-surface min
-        # mention id the cluster-canonicalization tail needs (r8 — the old
-        # shape re-aggregated the corpus-sized mention frame at the end)
-        surf = self._materialize(
-            self._with_node_cols(
-                m_slim.groupBy("mention")
-                .agg(F.min("mention_id").alias("surf_min"))
-                .select(
-                    F.xxhash64(F.lit("surf"), "mention").alias("id"),
-                    F.col("mention").alias("text"),
-                    "surf_min",
-                )
+        # artifacts) — read by the surfaces pass and the final expansion
+        m_slim = self._materialize(
+            self._extract(transcripts, surfaces, mentions).select(
+                "mention_id", "mention"
             )
         )
-        keys = blocking_keys(
-            surf,
-            id_col="id",
-            text_col="text",
-            bands=self.bands,
-            rows=self.rows,
-            shingle_k=self.shingle_k,
-            extra_key_cols=["prefix_key"],
-            hash_fn=self._blocking_hash(),
-        )
-        pairs = candidate_pairs(keys, max_block=self.max_block)
-        # argmax_prune=False: match_edges consumes the FULL accepted-edge
-        # set, so only the threshold-bound prune is lossless here (the
-        # argmax bound would drop threshold-passing non-best edges and
-        # change the transitive closure)
-        scored = two_phase_scored_pairs(
-            pairs, surf,
-            threshold=thr, argmax_prune=False,
-            vec_join=self.vec_join, cos_source=self.cos_source,
-        )
-        edges = self._materialize(match_edges(scored, thr))
-        comps = connected_components(
-            edges, nodes=surf.select("id"), checkpoint_mode=self.checkpoint_mode
-        )
-        # cluster_id = min mention id per component with ZERO extra passes
-        # over the mention set (r8, same derivation as run()'s
-        # build_clusters): the per-surface min rides the surf node table
-        # (surf_min, computed in the same groupBy that deduplicates
-        # surfaces), so everything below is surface-cardinality until the
-        # ONE final join back onto mentions. AQE decides the join
-        # strategies (explicit broadcast hints on unbounded-cardinality
-        # sides are an OOM risk).
-        surf_comp = comps.join(
-            surf.select(
-                F.col("id").alias("node"),
-                F.col("text").alias("mention"),
-                "surf_min",
-            ),
-            "node",
-        ).select("mention", "component", "surf_min")
-        cmin = surf_comp.groupBy("component").agg(
-            F.min("surf_min").alias("cluster_id")
-        )
-        surf_cluster = surf_comp.join(cmin, "component").select(
-            "mention", "cluster_id"
-        )
-        return m_slim.join(surf_cluster, "mention").select(
-            F.col("mention_id").alias("node"), F.col("cluster_id").alias("component")
+        surf = self._materialize(self._surfaces(m_slim, "mention_id"))
+        comps = self._kb_free_components(surf, self._blocking_keys(surf), thr)
+        return self._expand(m_slim, self._surface_clusters(comps, surf)).select(
+            "node", F.col("cluster_id").alias("component")
         )
 
     def run_kb_free_append(
@@ -743,8 +704,6 @@ class LinkagePipeline:
         surfaces: list[str] | None = None,
         mentions: DataFrame | None = None,
         threshold: float | None = None,
-        validate_state: bool = True,
-        check_cap_invariant: bool = True,
         output: str = "full",
         surface_state: DataFrame | None = None,
     ) -> DataFrame:
@@ -759,6 +718,18 @@ class LinkagePipeline:
         it). Returns the same (node, component) shape as `run_kb_free` on
         old ∪ new mentions.
 
+        How: the state enters as |old distinct surfaces| star edges (every
+        old surface -> its cluster's min surface id; no rescoring), and
+        the pair scorer runs ONLY on candidate pairs touching a genuinely
+        new surface. The LSH self-join runs over the full surface set —
+        that is what makes the cap decisions, and hence the clustering,
+        batch-invariant — but that join is skinny key tables; at 10^12
+        turns the delta cost is |new surfaces x blockmates|, not
+        corpus-quadratic. Cluster ids need no mention-level pass: a state
+        surface's candidate min is its cluster_id (the min mention id of
+        its old cluster), a delta surface's is its min new mention id, and
+        the new cluster id is the min over the component (see _surfaces).
+
         EXACTNESS SCOPE (ADVICE r6): the result is IDENTICAL to a
         full-batch re-run — mention ids are content-hashed
         (batch-invariant), pair scores are pure functions of the two
@@ -772,309 +743,157 @@ class LinkagePipeline:
         old-old pair subset depends on block size/composition: the state
         may then preserve base-run merges the re-run's capped pairing
         would drop (the append result is a superset clustering there —
-        monotone, never a split, but not bit-equal). The equivalence test
-        pins the uncapped regime; `check_cap_invariant` (default on)
-        counts exactly the risky blocks — union-size > max_block with
-        >= 2 old members — into metrics["append_capped_old_blocks"] and
-        warns when non-zero, so at the 10^12-turn scale where caps bite
-        the approximation is DECLARED per run, never silent.
+        monotone, never a split, but not bit-equal).
 
-        `validate_state` (default on, VERDICT r6 #4): a corrupted state
-        sink — one surface mapped to two cluster_ids — would otherwise
-        silently weld both clusters together through that surface's two
-        star edges. In kb-free mode (surface -> cluster) is functional by
-        construction, so a violation is garbage input: raise, don't merge.
+        Two guards ALWAYS run, in one union-of-aggregates job over
+        surface-cardinality frames, before any output is produced:
+        * cap invariant — counts exactly the risky blocks above (union
+          size > max_block with >= 2 old members) into
+          metrics["append_capped_old_blocks"] and warns when non-zero, so
+          where caps bite the approximation is DECLARED per run;
+        * state validity (VERDICT r6 #4) — a corrupted state sink, one
+          surface mapped to two cluster_ids, would silently weld both
+          clusters together through that surface's two star edges. In
+          kb-free mode (surface -> cluster) is functional by construction,
+          so a violation is garbage input: raise, don't merge.
 
-        Scale shape: the state enters as |old distinct surfaces| star
-        edges (no rescoring); the expensive pair scorer runs ONLY on
-        candidate pairs touching a genuinely new surface. The LSH self-join
-        runs over the full surface set (that is what makes the cap
-        decisions — and hence the clustering — batch-invariant), but that
-        join is skinny key tables; at 10^12 turns the delta cost is
-        |new surfaces x blockmates|, not corpus-quadratic. Both guards are
-        one aggregation over an already-needed skinny frame (state
-        surfaces / the key table); opt out via the flags for
-        latency-critical appends that trust their sink.
-
-        `output` (r7, VERDICT r6 #3 — measuring the append showed the
-        FULL-output relabel, not the scorer, is where corpus cost hides):
-
-        * "full" (default): (node, component) over old ∪ new mentions —
-          the run_kb_free-compatible shape the equivalence test compares
-          bit-for-bit. Linear in the corpus by construction (it re-emits
-          every old mention row), so at 10^12 turns it is NOT the
+        `output` picks which STATE rows are re-emitted; every delta mention
+        is always emitted:
+        * "full" (default): every state row, so the result is (node,
+          component) over old ∪ new mentions — the run_kb_free-compatible
+          shape the equivalence test compares bit-for-bit. Linear in the
+          corpus by construction, so at 10^12 turns it is NOT the
           production append.
-        * "delta": the UPSERT — only rows whose assignment is new or
-          changed: every delta mention, plus old mentions of surfaces
-          whose cluster_id changed (a merge relabels the losing cluster's
-          members). Rows absent = unchanged; applying the upsert to the
-          state reproduces output="full" exactly (pinned by test). The
-          trick that makes this delta-shaped: cluster_id = min mention_id
-          per component, and an OLD cluster's min IS its cluster_id — so
-          the merged component's min is min(member old cluster_ids, delta
-          mention ids) and old mention rows are never re-expanded. The
-          only corpus-linear work left is column-pruned scans of the
-          state table (surface dedup + the changed-surface filter scan) —
-          pass `surface_state` to drop even those.
+        * "delta": the UPSERT — only old mentions of surfaces whose
+          cluster_id changed (new surfaces, or old ones whose cluster
+          merged into a lower-min one). Rows absent = unchanged; applying
+          the upsert to the state reproduces output="full" exactly (pinned
+          by test). The mention-level state is touched by one
+          column-pruned filter scan.
 
         `surface_state` (optional): the (mention=surface, cluster_id)
         PROJECTION of the state — `surface_cluster_state` builds it; a
         production job sinks it alongside the mention-level state (it is
-        surface-cardinality, trivially small next to the corpus). When
-        given, every surface-level derivation (the union surface set, the
-        star edges, the guards, the changed-surface diff) reads it instead
-        of re-deduplicating the corpus-sized state; the mention-level
-        `state` is then touched by exactly ONE column-pruned filter scan
-        (delta output's changed-member relabel) — or zero in output="full"
-        ... which still unions it, so pass surface_state WITH
-        output="delta" for the genuinely delta-shaped append. Must be
-        consistent with `state` (same run's sink); it is trusted the same
-        way state is, and validate_state checks functionality on whichever
-        table the surfaces came from.
+        surface-cardinality). When given, every surface-level derivation
+        (the union surface set, the star edges, the guards, the
+        changed-surface diff) reads it instead of re-deduplicating the
+        corpus-sized state. Pass it WITH output="delta" for the genuinely
+        delta-shaped append. It must come from the same run's sink as
+        `state`; the validity guard checks it the same way.
         """
         if output not in ("full", "delta"):
             raise ValueError(f"output must be 'full' or 'delta', got {output!r}")
         thr = self.threshold if threshold is None else threshold
-        if mentions is None:
-            assert surfaces is not None, "need surfaces or mentions"
-            # partitioning="auto" (coalesce, no exchange): a delta batch is
-            # small relative to the session's task grid, and measured (r7,
-            # 200k turns, 32 cores) the round-robin exchange plus the extra
-            # Arrow tasks billed 27 CPU-s where the same extraction over
-            # coalesced input splits billed 10 — the full-corpus default
-            # keeps repartition (balance wins at size, perf-lessons r4)
-            mentions = extract_mentions(
-                new_transcripts, surfaces, with_context=False,
-                id_bits=self.id_bits, partitioning="auto",
-            )
-        m_new = mentions.select("mention_id", "mention")
-        # surface-level view of the state: the sunk projection when given,
-        # else derived by deduplicating the corpus-sized state (one scan)
-        sstate = (
-            surface_state.select("mention", "cluster_id")
-            if surface_state is not None
-            else state.select("mention", "cluster_id").distinct()
+        # partitioning="auto" (coalesce, no exchange): a delta batch is
+        # small relative to the session's task grid, and measured (r7,
+        # 200k turns, 32 cores) the round-robin exchange plus the extra
+        # Arrow tasks billed 27 CPU-s where the same extraction over
+        # coalesced input splits billed 10. Materialized: read by the
+        # surfaces pass and the expansion.
+        m_new = self._materialize(
+            self._extract(
+                new_transcripts, surfaces, mentions, partitioning="auto"
+            ).select("mention_id", "mention")
         )
-        if output == "full":
-            # materialized: consumed by surf AND (twice) by the final
-            # expansion — unmaterialized, the union+dedup over the whole
-            # corpus re-ran per consumer (measured r7: append CPU EXCEEDED
-            # the full recompute's before this)
-            m_all = self._materialize(
-                m_new.unionByName(
-                    state.select("mention_id", "mention")
-                ).dropDuplicates(["mention_id"])
-            )
-            surf_src = m_all.select(F.col("mention").alias("text"))
-        else:
-            # delta mode never builds the corpus-sized mention union: the
-            # union SURFACE set is state-surface ∪ delta-surface. m_new is
-            # materialized — its three consumers (surface union, min
-            # candidates, the upsert's new rows) would each re-run the
-            # delta extraction
-            m_new = self._materialize(m_new)
-            surf_src = sstate.select(F.col("mention").alias("text")).unionByName(
-                m_new.select(F.col("mention").alias("text"))
-            )
-
-        surf = self._materialize(
-            self._with_node_cols(
-                surf_src.distinct().select(
-                    F.xxhash64(F.lit("surf"), "text").alias("id"), "text"
-                )
-            )
-        )
-        # surfaces already present in the state: their pairwise closure is
-        # encoded by the star edges below, so only pairs touching a NEW
-        # surface need scoring. The filter runs AFTER candidate_pairs so
-        # the block-size cap decisions are the full-run ones (equivalence).
-        # materialized: surface cardinality after the distinct, but its many
-        # consumers (guards, the new-surface anti-join's two sides, star
-        # edges, delta-mode min candidates) would each re-run the
-        # corpus-sized distinct scan of the state (or re-read the sunk
-        # surface projection)
-        old_surf_comp = self._materialize(
-            sstate.select(
-                F.xxhash64(F.lit("surf"), "mention").alias("sid"), "cluster_id"
-            )
+        # (mention, sid, cluster_id) per state surface: the sunk projection
+        # when given, else derived by deduplicating the corpus-sized state
+        # (one scan). Materialized for its many consumers (surfaces, guards,
+        # new-surface anti-join, star edges, the changed-surface diff).
+        old = self._materialize(
+            (surface_state if surface_state is not None else state)
+            .select("mention", "cluster_id")
             .distinct()
+            .withColumn("sid", F.xxhash64(F.lit("surf"), "mention"))
         )
-        keys = blocking_keys(
-            surf,
-            id_col="id",
-            text_col="text",
-            bands=self.bands,
-            rows=self.rows,
-            shingle_k=self.shingle_k,
-            extra_key_cols=["prefix_key"],
-            hash_fn=self._blocking_hash(),
-        )
-        # BOTH guards collect in ONE union-of-aggregates job (r8 — each was
-        # its own serial job barrier; same move as run()'s deferred counter
-        # metrics). The validate error still raises before any append
-        # output is produced.
-        guard_aggs = []
-        if check_cap_invariant:
-            # materialize the skinny key table once: the guard aggregation
-            # and candidate_pairs would otherwise each re-run the MinHash
-            # keying subtree (the multi-consumer lesson, perf-lessons r3)
-            keys = self._materialize(keys)
-            old_ids = old_surf_comp.select(F.col("sid").alias("id")).distinct()
-            guard_aggs.append(
-                keys.join(old_ids.withColumn("__old", F.lit(1)), "id", "left")
-                .groupBy("block_key")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.count("__old").alias("n_old"),
-                )
-                .where(
-                    (F.col("n") > self.max_block) & (F.col("n_old") >= 2)
-                )
-                .agg(F.count("*").alias("n"))
-                .select(F.lit("capped").alias("k"), "n")
-            )
-        if validate_state:
-            # (surface -> cluster) must be functional (docstring): count the
-            # surfaces claiming two clusters in one grouped aggregation over
-            # the (small) distinct state-surface frame
-            guard_aggs.append(
-                old_surf_comp.groupBy("sid")
-                .agg(F.count_distinct("cluster_id").alias("nc"))
-                .where(F.col("nc") > 1)
-                .agg(F.count("*").alias("n"))
-                .select(F.lit("conflicted").alias("k"), "n")
-            )
-        if guard_aggs:
-            one = guard_aggs[0]
-            for a in guard_aggs[1:]:
-                one = one.unionByName(a)
-            res = {r["k"]: r["n"] for r in one.collect()}
-            conflicted = res.get("conflicted", 0)
-            if conflicted:
-                raise ValueError(
-                    f"malformed append state: {conflicted} surface(s) map to "
-                    "more than one cluster_id — the state sink is corrupted "
-                    "(or was not produced by run_kb_free); appending it "
-                    "would silently weld those clusters together"
-                )
-            if check_cap_invariant:
-                capped = res.get("capped", 0)
-                self.metrics["append_capped_old_blocks"] = capped
-                if capped:
-                    import warnings
-
-                    warnings.warn(
-                        f"append-mode exactness scope exceeded: {capped} "
-                        f"block(s) holding >=2 state surfaces are over "
-                        f"max_block={self.max_block} in the union run — "
-                        "state merges inside them may not match a "
-                        "full-batch recompute (monotone superset, never a "
-                        "split; see run_kb_free_append docstring)",
-                        stacklevel=2,
-                    )
-        pairs = candidate_pairs(keys, max_block=self.max_block)
-
-        new_ids = (
-            surf.select("id")
-            .join(old_surf_comp.select(F.col("sid").alias("id")), "id", "left_anti")
-            .withColumn("is_new", F.lit(1))
-        )
-        pairs = (
-            pairs.join(new_ids.select(F.col("id").alias("a"), "is_new"), "a", "left")
-            .join(
-                new_ids.select(
-                    F.col("id").alias("b"), F.col("is_new").alias("is_new_b")
+        surf = self._materialize(
+            self._surfaces(
+                old.select("mention", F.col("cluster_id").alias("cand"))
+                .unionByName(
+                    m_new.select("mention", F.col("mention_id").alias("cand"))
                 ),
-                "b",
-                "left",
+                "cand",
             )
-            .where(F.col("is_new").isNotNull() | F.col("is_new_b").isNotNull())
-            .select("a", "b")
         )
-        scored = two_phase_scored_pairs(
-            pairs, surf,
-            threshold=thr, argmax_prune=False,
-            vec_join=self.vec_join, cos_source=self.cos_source,
+        # materialized once: the cap guard and candidate_pairs would
+        # otherwise each re-run the MinHash keying subtree
+        keys = self._materialize(self._blocking_keys(surf))
+
+        old_ids = old.select(F.col("sid").alias("id")).distinct()
+        capped = (
+            keys.join(old_ids.withColumn("__old", F.lit(1)), "id", "left")
+            .groupBy("block_key")
+            .agg(F.count("*").alias("n"), F.count("__old").alias("n_old"))
+            .where((F.col("n") > self.max_block) & (F.col("n_old") >= 2))
+            .agg(F.count("*").alias("n"))
+            .select(F.lit("capped").alias("k"), "n")
         )
-        new_edges = match_edges(scored, thr)
-        # star edges: every old surface -> its component's representative
-        # surface (min surface id). In kb-free mode all mentions of one
-        # surface share a cluster, so (surface, cluster_id) is functional.
-        rep = old_surf_comp.groupBy("cluster_id").agg(F.min("sid").alias("rep"))
-        star = old_surf_comp.join(rep, "cluster_id").select(
+        conflicted = (
+            old.groupBy("sid")
+            .agg(F.count_distinct("cluster_id").alias("nc"))
+            .where(F.col("nc") > 1)
+            .agg(F.count("*").alias("n"))
+            .select(F.lit("conflicted").alias("k"), "n")
+        )
+        res = {r["k"]: r["n"] for r in capped.unionByName(conflicted).collect()}
+        if res["conflicted"]:
+            raise ValueError(
+                f"malformed append state: {res['conflicted']} surface(s) map "
+                "to more than one cluster_id — the state sink is corrupted "
+                "(or was not produced by run_kb_free); appending it would "
+                "silently weld those clusters together"
+            )
+        self.metrics["append_capped_old_blocks"] = res["capped"]
+        if res["capped"]:
+            import warnings
+
+            warnings.warn(
+                f"append-mode exactness scope exceeded: {res['capped']} "
+                f"block(s) holding >=2 state surfaces are over "
+                f"max_block={self.max_block} in the union run — state merges "
+                "inside them may not match a full-batch recompute (monotone "
+                "superset, never a split; see run_kb_free_append docstring)",
+                stacklevel=2,
+            )
+
+        # star edges: every old surface -> its cluster's representative
+        # surface (min surface id)
+        rep = old.groupBy("cluster_id").agg(F.min("sid").alias("rep"))
+        star = old.join(rep, "cluster_id").select(
             F.col("sid").alias("src"), F.col("rep").alias("dst")
         )
-        edges = self._materialize(new_edges.unionByName(star))
-        comps = connected_components(
-            edges, nodes=surf.select("id"), checkpoint_mode=self.checkpoint_mode
+        comps = self._kb_free_components(
+            surf, keys, thr,
+            new_ids=surf.select("id").join(old_ids, "id", "left_anti"),
+            star=star,
         )
-        surf_comp = comps.join(
-            surf.select(F.col("id").alias("node"), F.col("text").alias("mention")),
-            "node",
-        ).select("mention", "component")
-        if output == "full":
-            ml = m_all.join(surf_comp, "mention")
-            cmin = ml.groupBy("component").agg(
-                F.min("mention_id").alias("cluster_id")
+        # surface -> new cluster id, materialized for its consumers (the
+        # changed-surface diff and the expansion)
+        surf_cluster = self._materialize(self._surface_clusters(comps, surf))
+        old_rows = state.select("mention_id", "mention")
+        if output == "delta":
+            changed = (
+                surf_cluster.join(
+                    old.select("mention", F.col("cluster_id").alias("old_cid")),
+                    "mention",
+                    "left",
+                )
+                .where(
+                    F.col("old_cid").isNull()
+                    | (F.col("old_cid") != F.col("cluster_id"))
+                )
+                .select("mention")
             )
-            return ml.join(cmin, "component").select(
-                F.col("mention_id").alias("node"),
-                F.col("cluster_id").alias("component"),
-            )
-
-        # ---- output == "delta": the upsert, never expanding old mentions ----
-        # min-candidate per component = member old clusters' cluster_ids
-        # (each IS the min mention_id of its old members) ∪ per-surface min
-        # of the DELTA mention ids (a delta mention of an old surface can
-        # undercut the old min — content-hashed ids are unordered)
-        old_cand = comps.join(
-            old_surf_comp.select(F.col("sid").alias("node"), "cluster_id"), "node"
-        ).select("component", F.col("cluster_id").alias("cand"))
-        new_cand = (
-            m_new.groupBy("mention")
-            .agg(F.min("mention_id").alias("cand"))
-            .join(surf_comp, "mention")
-            .select("component", "cand")
-        )
-        cmin = (
-            old_cand.unionByName(new_cand)
-            .groupBy("component")
-            .agg(F.min("cand").alias("cluster_id"))
-        )
-        # surface -> new cluster id (surface cardinality), materialized for
-        # its three consumers below
-        surf_cluster = self._materialize(
-            surf_comp.join(cmin, "component").select("mention", "cluster_id")
-        )
-        # changed surfaces: new surface, or an old surface whose cluster_id
-        # moved (its cluster merged with a lower-min one)
-        old_sc = old_surf_comp.select(
-            F.col("sid").alias("__sid"), F.col("cluster_id").alias("old_cid")
-        )
-        chg = (
-            surf_cluster.withColumn(
-                "__sid", F.xxhash64(F.lit("surf"), "mention")
-            )
-            .join(old_sc, "__sid", "left")
-            .where(
-                F.col("old_cid").isNull()
-                | (F.col("old_cid") != F.col("cluster_id"))
-            )
-            .select("mention", F.col("cluster_id").alias("new_cid"))
-        )
-        out_new = m_new.join(surf_cluster, "mention").select(
-            F.col("mention_id").alias("node"),
-            F.col("cluster_id").alias("component"),
-        )
-        # one column-pruned filter scan of the state — the delta-shaped
-        # write: |changed surfaces' members|, broadcastable chg side
-        out_old = state.join(chg, "mention").select(
-            F.col("mention_id").alias("node"),
-            F.col("new_cid").alias("component"),
-        )
+            # one column-pruned filter scan of the state — the delta-shaped
+            # write: |changed surfaces' members|
+            old_rows = old_rows.join(changed, "mention", "left_semi")
         # a delta mention re-ingesting an existing mention_id appears in
-        # both branches with the SAME component (same surface) — dedup
-        return out_new.unionByName(out_old).dropDuplicates(["node"])
+        # both branches as the SAME row (same surface, same cluster) — a
+        # whole-row distinct drops it
+        return (
+            self._expand(m_new.unionByName(old_rows), surf_cluster)
+            .select("node", F.col("cluster_id").alias("component"))
+            .distinct()
+        )
 
     @staticmethod
     def surface_cluster_state(state: DataFrame) -> DataFrame:

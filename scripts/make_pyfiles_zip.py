@@ -1,20 +1,25 @@
 #!/usr/bin/env python
 """Package blink_reloaded_spark for `spark-submit --py-files` (north_rule
-packaging requirement). Produces dist/blink_reloaded_spark.zip containing the
-package (pure Python, no build step)."""
+packaging requirement). Writes blink_reloaded_spark.zip containing the
+package (pure Python, no build step) into the given output directory,
+default dist/ at the repo root, and prints the zip's path.
+
+    python scripts/make_pyfiles_zip.py [OUT_DIR]
+"""
 
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(ROOT, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "blink_reloaded_spark.zip")
+def main(out_dir: str | None = None) -> str:
+    out_dir = out_dir or os.path.join(ROOT, "dist")
+    os.makedirs(out_dir, exist_ok=True)
+    out = os.path.join(out_dir, "blink_reloaded_spark.zip")
     pkg = os.path.join(ROOT, "blink_reloaded_spark")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for dirpath, _dirs, files in os.walk(pkg):
@@ -29,4 +34,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1] if len(sys.argv) > 1 else None)

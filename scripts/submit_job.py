@@ -8,7 +8,8 @@ Usage (cluster):
         scripts/submit_job.py --transcripts <iceberg-or-parquet-path> \
         --entities <path> --output <path> --checkpoint-dir <path>
 
-Sandbox smoke (tests/test_submit.py runs exactly this):
+Local smoke (tests/test_submit.py runs this, with the zip built into its
+temp dir via `make_pyfiles_zip.py <dir>`):
     spark-submit --master local[4] --py-files dist/blink_reloaded_spark.zip \
         scripts/submit_job.py --demo --output /tmp/out
 """

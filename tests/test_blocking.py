@@ -117,43 +117,6 @@ def test_autotuned_blocking_at_1e5(spark):
     assert recall >= 0.99, recall
 
 
-def test_candidates_materializer_plumbed(spark, tmp_path):
-    """ADVICE r4: with purge caps set, mention_entity_candidates must
-    materialize the key tables through the CALLER's materializer (e.g. the
-    pipeline's reliable RDD checkpoint) instead of an unconditional
-    localCheckpoint — and the output must be identical either way."""
-    cat = datagen.EntityCatalog.build(n_entities=30)
-    tr, me = datagen.generate_transcripts(
-        spark, cat, n_convs=20, turns_per_conv=8, hot_conv_factor=5
-    )
-    ments = me.select(
-        F.col("mention_id").alias("id"), F.col("mention").alias("text")
-    )
-    ents = cat.entities_df(spark).select(
-        (F.lit(ENTITY_ID_OFFSET) - F.col("entity_id")).alias("id"),
-        F.lower("title").alias("text"),
-    )
-    kw = dict(bands=12, rows=1, shingle_k=3)
-    mk = blocking_keys(ments, **kw)
-    ek = blocking_keys(ents, **kw)
-    caps = dict(max_entity_block=400, max_key_pairs=15_000,
-                max_candidates_per_mention=16)
-
-    calls = []
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "rdd_ckpt"))
-
-    def reliable(df):
-        calls.append(1)
-        return df.checkpoint()
-
-    got = sorted(map(tuple, mention_entity_candidates(
-        mk, ek, materializer=reliable, **caps
-    ).collect()))
-    assert len(calls) == 3  # key-table sides + the survivor-key table
-    want = sorted(map(tuple, mention_entity_candidates(mk, ek, **caps).collect()))
-    assert got == want
-
-
 def test_purged_block_keys_one_pass_equivalence(spark):
     """r5: the one-pass conditional-agg purge (purged_block_keys over the
     flagged union) must keep exactly the keys the per-side groupBy shape
@@ -182,10 +145,18 @@ def test_purged_block_keys_one_pass_equivalence(spark):
     )
     ok = purged_block_keys(flagged, caps["max_entity_block"],
                            caps["max_key_pairs"]).localCheckpoint()
+    # reference: per-side sizing, one groupBy per key table
+    esz = ek.groupBy("block_key").agg(F.count("*").alias("esz"))
+    msz = mk.groupBy("block_key").agg(F.count("*").alias("msz"))
+    ref = esz.join(msz, "block_key").where(
+        (F.col("esz") * F.col("msz") <= caps["max_key_pairs"])
+        & (F.col("esz") <= caps["max_entity_block"])
+    ).select("block_key")
+    k = caps["max_candidates_per_mention"]
     got = sorted(map(tuple, mention_entity_candidates(
-        mk, ek, materialize_keys=False, ok_keys=ok, **caps
+        mk, ek, ok_keys=ok, max_candidates_per_mention=k
     ).collect()))
     want = sorted(map(tuple, mention_entity_candidates(
-        mk, ek, materialize_keys=False, **caps
+        mk, ek, ok_keys=ref, max_candidates_per_mention=k
     ).collect()))
     assert got == want and len(got) > 0

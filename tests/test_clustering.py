@@ -92,6 +92,35 @@ def test_local_path_equals_distributed_loop(spark):
     assert local == sorted(_union_find(n + 20, edges).items())
 
 
+def test_single_partition_over_bound_runs_distributed_loop(spark, monkeypatch):
+    # one partition alone must not pick the single-task union-find: at
+    # defaultParallelism=1 every graph sizes to one partition, so the gate
+    # is the edges-per-partition bound. Shrink the bound so a small graph
+    # is "over" it.
+    from blink_reloaded_spark.operators import clustering
+
+    monkeypatch.setattr(clustering, "EDGES_PER_PARTITION", 50)
+    calls = []
+    loop = clustering._cc_loop
+
+    def spy(*a, **k):
+        calls.append(1)
+        return loop(*a, **k)
+
+    monkeypatch.setattr(clustering, "_cc_loop", spy)
+    rng = random.Random(3)
+    n, m = 200, 240
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+    e = spark.createDataFrame(edges, "src long, dst long")
+    got = sorted(
+        map(tuple, connected_components(e, num_partitions=1).collect())
+    )
+    assert calls, "graph over the bound took the single-task path"
+    gold = _union_find(n, edges)
+    touched = {x for s, d in edges if s != d for x in (s, d)}
+    assert got == sorted((x, gold[x]) for x in touched)
+
+
 def test_star_components_equals_generic_cc(spark):
     from blink_reloaded_spark.operators.clustering import star_components
 

@@ -167,6 +167,24 @@ def test_minhash_numpy_kernel_parity(spark):
     assert got == ref
 
 
+def test_minhash_numpy_kernel_rejects_out_of_contract_params():
+    """The numpy MinHash kernel is exact only inside its contract: int64
+    Horner over k code points < 2^21 overflows at k=10, and more hashes than
+    PERMS would return uninitialised memory. Both must fail at factory time,
+    not return plausible signatures."""
+    from blink_reloaded_spark.functions.hashing import PERMS, minhash_sigs_np_udf
+
+    for k in (0, 10):
+        with pytest.raises(ValueError, match="k"):
+            minhash_sigs_np_udf(k, 8)
+    for n in (0, len(PERMS) + 1):
+        with pytest.raises(ValueError, match="num_hashes"):
+            minhash_sigs_np_udf(5, n)
+    # the contract edges themselves are accepted
+    minhash_sigs_np_udf(1, 1)
+    minhash_sigs_np_udf(9, len(PERMS))
+
+
 def test_sig_agreement_flat_equals_lambda(spark):
     """r8: the unrolled codegen agreement must equal the zip_with form."""
     import random as _r

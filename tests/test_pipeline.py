@@ -78,6 +78,66 @@ def test_clusters_invariant_under_repartition(spark, fixture):
     assert sorted(map(tuple, c1.collect())) == sorted(map(tuple, c2.collect()))
 
 
+def _clusters_from_links(links):
+    """run()'s clustering rule applied to run_links output: mentions linked
+    to one entity form a cluster with id = min mention id; NIL mentions
+    (entity_id = -1) stay singletons."""
+    cmin = (
+        links.where("entity_id != -1")
+        .groupBy("entity_id")
+        .agg(F.min("mention_id").alias("cid"))
+    )
+    return links.join(cmin, "entity_id", "left").select(
+        F.col("mention_id").alias("node"),
+        F.coalesce("cid", "mention_id").alias("component"),
+    )
+
+
+@pytest.mark.parametrize("tuned", [False, True], ids=["default", "tuned20k"])
+def test_run_links_agrees_with_run(spark, fixture, tuned):
+    """run_links and run() share stages 2-4, so clusters derived from
+    run_links' (mention, entity) links must equal run()'s (node, component)
+    exactly — with the default and the large-catalogue parameter sets."""
+    cat, tr, me = fixture
+    ents = cat.entities_df(spark)
+    pipe = (
+        LinkagePipeline.tuned(spark, 20_000) if tuned else LinkagePipeline(spark)
+    )
+    got = _clusters_from_links(pipe.run_links(tr, ents, mentions=me))
+    want = pipe.run(tr, ents, mentions=me)
+    n = want.count()
+    assert got.count() == n and n > 0
+    diff = got.exceptAll(want).count() + want.exceptAll(got).count()
+    assert diff == 0, f"run_links-derived clusters diverged from run(): {diff}"
+
+
+def test_run_links_reliable_never_local_checkpoints(spark, fixture, tmp_path,
+                                                    monkeypatch):
+    """Durability contract: with checkpoint_mode='reliable' and the
+    large-catalogue purge caps on, nothing under run_links may fall back to
+    executor-pinned localCheckpoint (blocks lost with an executor would
+    fail the job on a cluster)."""
+    from pyspark.sql import DataFrame
+
+    cat, tr, me = fixture
+    ents = cat.entities_df(spark)
+    want = sorted(map(tuple, LinkagePipeline.tuned(spark, 20_000).run_links(
+        tr, ents, mentions=me
+    ).collect()))
+
+    def forbidden(self, *a, **k):
+        raise AssertionError("localCheckpoint called in reliable mode")
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", forbidden)
+    pipe = LinkagePipeline.tuned(
+        spark, 20_000, checkpoint_mode="reliable",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    assert pipe.max_key_pairs is not None
+    got = sorted(map(tuple, pipe.run_links(tr, ents, mentions=me).collect()))
+    assert got == want
+
+
 def test_turn_text_preserved(spark, fixture):
     """Per-turn text equality under stable (conv_id, turn_idx) ordering —
     input_hint invariant: the pipeline never mutates the transcript table."""
@@ -341,13 +401,6 @@ def test_append_cap_guard_flags_crossing_blocks(spark):
     assert pipe.metrics["append_capped_old_blocks"] >= 1
     # the append output is still a valid clustering over all mentions
     assert merged.count() == 5
-    # opt-out path: no warning, no metric, same frame shape
-    pipe2 = LinkagePipeline(spark, max_block=3)
-    out = pipe2.run_kb_free_append(
-        None, state, mentions=m1, check_cap_invariant=False
-    )
-    assert "append_capped_old_blocks" not in pipe2.metrics
-    assert out.count() == 5
 
 
 def test_kb_free_append_delta_output_upsert(spark, fixture):

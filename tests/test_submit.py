@@ -13,7 +13,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_spark_submit_pyfiles(tmp_path):
     zip_out = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "scripts", "make_pyfiles_zip.py")],
+        [
+            sys.executable,
+            os.path.join(ROOT, "scripts", "make_pyfiles_zip.py"),
+            str(tmp_path / "dist"),
+        ],
         capture_output=True,
         text=True,
         check=True,
