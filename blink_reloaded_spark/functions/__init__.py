@@ -1,7 +1,8 @@
 """Scalar / vectorized functions: text normalization, shingling, hashing,
 string similarity, hashed embeddings. JVM-side Column expressions wherever
 Spark built-ins suffice (reference inventory SURVEY.md §2.8); Arrow-batched
-pandas UDFs only for Jaro-Winkler and the hashed encoder."""
+Python only for Jaro-Winkler, the hashed encoder and the numpy MinHash
+kernels (hashing.minhash_sigs_np_udf, hashing.minhash_band_keys_np)."""
 
 from blink_reloaded_spark.functions.text import (  # noqa: F401
     normalize_text,

@@ -4,8 +4,11 @@ candidate_generation.py:68-115` BM25 token-overlap).
 
 The "index" is a table: every record emits blocking keys (MinHash-LSH bands
 over char shingles, random-hyperplane embedding buckets, or a cheap prefix
-key); candidate pairs are an equi-self-join on the key. All key generation is
-JVM Column arithmetic (functions/hashing.py) — no Python.
+key); candidate pairs are an equi-self-join on the key. The MinHash band keys
+come from one Arrow-batched numpy kernel (hashing.minhash_band_keys_np, run
+through mapInArrow, bit-identical to the Column-expression reference
+hashing.minhash_band_keys_exploded); text normalization and the extra keys
+stay JVM Column expressions.
 
 Skew handling (north_rule): hot keys (a mention surface occurring millions of
 times at 10^12 scale would make one block quadratic) are bounded by
@@ -26,8 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from blink_reloaded_spark.functions.hashing import minhash_band_keys_exploded
-from blink_reloaded_spark.functions.text import char_shingles, normalize_text
+from blink_reloaded_spark.functions.hashing import minhash_band_keys_np
+from blink_reloaded_spark.functions.text import normalize_text
 
 
 def blocking_keys(
@@ -43,20 +46,21 @@ def blocking_keys(
 ) -> DataFrame:
     """Emit (id, [carry_cols...], block_key) — one row per LSH band key
     (plus any extra keys such as hyperplane buckets or prefix keys passed
-    as columns). `hash_fn`: base string hash for the MinHash kernels
-    (default portable poly_hash; pass hashing.xxhash64_mod for the
-    production fast path). `carry_cols`: id-functional columns carried
-    through the keying at zero extra shuffle — lets a caller key the UNION
-    of two record sets in ONE pass and split by flag afterwards (one
-    keying job + one materialization instead of two serial ones)."""
-    # normalize once per row, not per shingle inside the transform lambda
-    norm = df.withColumn("__bk_nt", normalize_text(F.col(text_col)))
-    keyed = minhash_band_keys_exploded(
-        norm,
+    as columns; NULL extra keys are dropped). `df` holds one row per id.
+    `hash_fn`: base string hash for the MinHash kernel (default portable
+    poly_hash; pass hashing.xxhash64_mod for the production fast path).
+    `carry_cols`: id-functional columns carried through the keying at zero
+    extra shuffle — lets a caller key the UNION of two record sets in ONE
+    pass and split by flag afterwards."""
+    # normalize once per row in the JVM; the numpy kernel shingles, hashes,
+    # min-permutes and formats the band keys in the same map pass
+    keyed = minhash_band_keys_np(
+        df.withColumn("__bk_nt", normalize_text(F.col(text_col))),
         id_col,
-        char_shingles(F.col("__bk_nt"), k=shingle_k, normalize=False),
+        "__bk_nt",
         bands,
         rows,
+        shingle_k,
         hash_fn=hash_fn,
         carry_cols=carry_cols,
     )
@@ -67,7 +71,7 @@ def blocking_keys(
             F.explode(F.array(*[F.col(c).cast("string") for c in extra_key_cols])).alias(
                 "block_key"
             ),
-        )
+        ).where(F.col("block_key").isNotNull())
         keyed = keyed.unionByName(extra)
     return keyed
 
@@ -231,13 +235,12 @@ def mention_entity_candidates(
     if max_candidates_per_mention is None:
         # repartition("a") + dropDuplicates instead of a bare distinct (r8):
         # the same ONE exchange (hash(a) satisfies the (a, b) dedup's
-        # clustering requirement), but user-specified partitioning is not
-        # AQE-coalesced — a bare distinct's output collapsed to ONE
-        # post-shuffle partition at small-catalogue sizes, and the links
-        # stage (which trusts the candidates checkpoint's layout via
-        # assume_partitioned) then ran its scorer UDFs single-task.
-        # Downstream consumers inherit hash(a) at session width, exactly
-        # the distribution link_best's groupBy("a") wants.
+        # clustering requirement), and downstream consumers inherit
+        # hash(a), the distribution link_best's groupBy("a") wants. NB: a
+        # repartition by column WITHOUT a partition count IS AQE-coalesced
+        # on Spark 4.1.2 (only an explicit count pins it), so at
+        # small-catalogue sizes the pairs can still land in ONE partition
+        # and the links stage's scorer UDFs run single-task.
         return (
             m.join(e, "block_key")
             .select("a", "b")

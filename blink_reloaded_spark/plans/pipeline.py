@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blink_reloaded_spark.functions.embedding import hashed_embedding_udf
+from blink_reloaded_spark.functions.hashing import xxhash64_mod
 from blink_reloaded_spark.functions.text import tokens
 from blink_reloaded_spark.operators.blocking import (
     auto_blocking_params,
@@ -76,8 +77,10 @@ def _prefix_key(text_col: str) -> F.Column:
     """Cheap second key family: first token. Guarantees head-word
     abbreviation candidates ("acme" -> "acme corp") that MinHash bands can
     miss at low shingle-jaccard; hot first-token keys are handled by the
-    skew machinery, not by dropping the key."""
-    return F.concat(F.lit("pfx|"), F.element_at(tokens(F.col(text_col)), 1))
+    skew machinery, not by dropping the key. NULL for a text with no
+    [a-z0-9] token (e.g. "中文"; blocking_keys drops NULL extra keys) —
+    try_element_at, since element_at fails on an empty array under ANSI."""
+    return F.concat(F.lit("pfx|"), F.try_element_at(tokens(F.col(text_col)), F.lit(1)))
 
 
 @dataclass
@@ -116,16 +119,6 @@ class LinkagePipeline:
     # setting, clustering.py's documented swap). When "reliable" and
     # checkpoint_dir is set, the RDD checkpoint dir is auto-derived.
     checkpoint_mode: str = "local"
-    # base hash for the MinHash blocking keys. None = hashing.xxhash64_mod
-    # (native JVM call — fast, and its TINY expression tree keeps the
-    # blocking plan cheap for Catalyst/AQE, which re-optimizes the plan at
-    # every shuffle-stage boundary; measured r3: the interpreted poly_hash
-    # lambda trees put ~49s of SERIAL driver planning into the links stage
-    # at a 20k-entity catalogue — core-count-independent, so it capped
-    # scaling efficiency at ~0.32). Pass functions.hashing.poly_hash for
-    # bit-parity with the DuckDB oracle kernels (the oracle-checked QUERIES
-    # keep poly_hash; the pipeline's contract is F1, not hash values).
-    blocking_hash_fn: Any = None
     # scorer vector-join strategy: None lets the planner broadcast (right
     # for small node tables); "shuffle_hash" for large catalogues, where a
     # broadcast would serialize a ~100MB+ driver build and the surface-side
@@ -142,13 +135,6 @@ class LinkagePipeline:
     # can't be cheaply recomputed per pair.
     cos_source: str = "recompute"
     metrics: dict[str, Any] = field(default_factory=dict)
-
-    def _blocking_hash(self):
-        if self.blocking_hash_fn is not None:
-            return self.blocking_hash_fn
-        from blink_reloaded_spark.functions.hashing import xxhash64_mod
-
-        return xxhash64_mod
 
     # ---- the shared surface-graph core (module docstring) -----------------
 
@@ -220,12 +206,14 @@ class LinkagePipeline:
         self, surf: DataFrame, carry_cols: list[str] | None = None
     ) -> DataFrame:
         """(id, [carry_cols...], block_key): MinHash-LSH band keys plus the
-        first-token prefix key over a surface node table."""
+        first-token prefix key over a surface node table. The base hash is
+        xxhash64_mod: the pipeline's contract is F1, not the DuckDB-portable
+        poly_hash values the oracle-checked queries keep."""
         return blocking_keys(
             surf.withColumn("prefix_key", _prefix_key("text")),
             id_col="id", text_col="text", bands=self.bands, rows=self.rows,
             shingle_k=self.shingle_k, extra_key_cols=["prefix_key"],
-            hash_fn=self._blocking_hash(), carry_cols=carry_cols,
+            hash_fn=xxhash64_mod, carry_cols=carry_cols,
         )
 
     def _kb_free_components(
@@ -446,9 +434,6 @@ class LinkagePipeline:
                 # r8: surfaces checkpoint carries surf_min — a pre-r8
                 # checkpoint dir must not resume into this code
                 "surfaces_schema": 2,
-                "blocking_hash": getattr(
-                    self._blocking_hash(), "__name__", "custom"
-                ),
                 "surfaces": sorted(surfaces) if surfaces else None,
             },
             sort_keys=True,

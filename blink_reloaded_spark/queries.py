@@ -609,8 +609,9 @@ def dedup03_minhash_lsh(spark, sf_dir, hash_fn=None):
     # and shingles + signature now ride ONE lazy checkpoint, so the whole
     # query is a single job). The bench also times
     # hash_fn=hashing.xxhash64_mod, the production fast path, which keeps
-    # the native-JVM sig-table shape (its base hash is not reproducible in
-    # numpy; its sig tier is already cheap).
+    # the native-JVM sig-table shape: its sig tier is already cheap (the
+    # base hash itself IS reproducible in numpy — hashing.xxhash64_np,
+    # pinned against F.xxhash64 — and blocking_keys uses it that way).
     if hash_fn is None:
         d = base.select(
             "doc_id",

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from blink_reloaded_spark import datagen  # noqa: E402
 from blink_reloaded_spark.eval import pairwise_f1  # noqa: E402
 from blink_reloaded_spark.functions.embedding import hashed_embedding_udf  # noqa: E402
+from blink_reloaded_spark.functions.hashing import xxhash64_mod  # noqa: E402
 from blink_reloaded_spark.functions.text import tokens  # noqa: E402
 from blink_reloaded_spark.operators.blocking import blocking_keys, candidate_pairs  # noqa: E402
 from blink_reloaded_spark.operators.scoring import match_edges, two_phase_scored_pairs  # noqa: E402
@@ -53,7 +54,7 @@ def main() -> None:
     keys = blocking_keys(
         surf, id_col="id", text_col="text", bands=pipe.bands, rows=pipe.rows,
         shingle_k=pipe.shingle_k, extra_key_cols=["prefix_key"],
-        hash_fn=pipe._blocking_hash(),
+        hash_fn=xxhash64_mod,
     )
     pairs = candidate_pairs(keys, max_block=pipe.max_block).localCheckpoint()
     scored = two_phase_scored_pairs(pairs, surf, threshold=0.0).localCheckpoint()

@@ -487,3 +487,34 @@ def test_kb_free_append_chain_two_batches(spark, fixture):
     full = pipe.run_kb_free(tr.select(*tr0.columns), surfaces=surfaces)
     diff = out2.exceptAll(full).count() + full.exceptAll(out2).count()
     assert diff == 0, f"two-append chain diverged from full recompute: {diff}"
+
+
+def test_text_without_a_token_does_not_crash_any_entry_point(spark):
+    """A title or surface with no [a-z0-9] token ("中文", "") has no
+    first-token prefix key: it is keyed by its MinHash bands alone. Every
+    entry point used to fail with INVALID_ARRAY_INDEX_IN_ELEMENT_AT
+    (element_at on an empty token array under Spark 4's ANSI mode)."""
+    ents = spark.createDataFrame(
+        [(1, "Acme Corp", "", []), (2, "中文", "", []), (3, "", "", [])],
+        "entity_id long, title string, text string, aliases array<string>",
+    )
+    surfs = ["acme corp", "中文", "中文", "acme corp", ""]
+    m = spark.createDataFrame(
+        [("c1", i, 0, len(s), s, "", "", i) for i, s in enumerate(surfs)],
+        "conv_id string, turn_idx int, start_pos int, end_pos int,"
+        " mention string, context_left string, context_right string, mention_id long",
+    )
+    pipe = LinkagePipeline(spark)
+    run = dict(map(tuple, pipe.run(None, ents, mentions=m).collect()))
+    assert run[0] == run[3] == 0
+    links = {
+        r["mention_id"]: r["entity_id"]
+        for r in pipe.run_links(None, ents, mentions=m).collect()
+    }
+    assert links[0] == links[3] == 1
+    kb_free = sorted(map(tuple, pipe.run_kb_free(None, mentions=m).collect()))
+    assert dict(kb_free)[1] == dict(kb_free)[2] == 1
+    m0 = m.where("mention_id < 2")
+    state = LinkagePipeline.cluster_state(pipe.run_kb_free(None, mentions=m0), m0)
+    appended = pipe.run_kb_free_append(None, state, mentions=m.where("mention_id >= 2"))
+    assert sorted(map(tuple, appended.collect())) == kb_free
