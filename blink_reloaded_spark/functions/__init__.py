@@ -21,8 +21,6 @@ from blink_reloaded_spark.functions.similarity import (  # noqa: F401
     jaccard_from_counts,
 )
 from blink_reloaded_spark.functions.hashing import (  # noqa: F401
-    minhash_signature_cols,
-    band_keys,
     simhash64,
 )
 from blink_reloaded_spark.functions.embedding import (  # noqa: F401

@@ -71,46 +71,6 @@ def perm_hash(h: Column, i: int) -> Column:
     return (F.lit(a) * h + F.lit(b)) % F.lit(P)
 
 
-def minhash_signature_cols(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature (array<long>, length num_hashes) of a shingle array.
-
-    sig[i] = min over shingles s of perm_i(poly_hash(s)). The base hash is
-    computed once per shingle, then permuted — one array pass per hash.
-    Empty shingle set -> sig[i] = P (sentinel).
-    """
-    hashes = F.transform(shingles, poly_hash)
-
-    def _min_perm(i: int):
-        # NB: factory closure, not a default-arg lambda — PySpark treats
-        # 2-arg lambdas in transform() as (element, index)
-        return F.coalesce(
-            F.array_min(F.transform(hashes, lambda h: perm_hash(h, i))),
-            F.lit(P).cast("long"),
-        )
-
-    return F.array(*[_min_perm(i) for i in range(num_hashes)])
-
-
-def band_keys(sig: Column, bands: int, rows: int) -> Column:
-    """LSH band keys: array<string> of `bands` entries, each
-    '<band_idx>|<sig values of that band joined by _>'.
-
-    Two docs share a band key iff their signatures agree on all `rows`
-    positions of that band — the standard MinHash-LSH bucketing.
-    """
-    keys = [
-        F.concat_ws(
-            "|",
-            F.lit(str(b)),
-            F.concat_ws(
-                "_", *[F.slice(sig, b * rows + r + 1, 1)[0].cast("string") for r in range(rows)]
-            ),
-        )
-        for b in range(bands)
-    ]
-    return F.array(*keys)
-
-
 def simhash64(toks: Column, nbits: int = 32) -> Column:
     """Portable SimHash over a token array (nbits <= 62, default 32).
 
@@ -252,25 +212,13 @@ def minhash_band_keys_exploded(
     hash_fn=None,
     carry_cols: list[str] | None = None,
 ):
-    """Scale-path MinHash-LSH keys: (id, [carry_cols...], block_key), one
-    row per band. Equivalent by construction to
-    band_keys(minhash_signature_cols(...)) — pinned by a test. `hash_fn`
-    as in minhash_sig_table."""
+    """Column-expression MinHash-LSH keys: (id, [carry_cols...],
+    block_key), one row per band — the reference tests/test_kernels.py
+    checks minhash_band_keys_np against. `hash_fn` as in
+    minhash_sig_table."""
     sig = minhash_sig_table(df, id_col, shingles, bands * rows,
                             hash_fn=hash_fn, carry_cols=carry_cols)
     return band_keys_from_sig_table(sig, bands, rows, carry_cols=carry_cols)
-
-
-def minhash_signatures_exploded(
-    df, id_col: str, shingles: Column, num_hashes: int, hash_fn=None
-):
-    """Full MinHash signature per id: returns (id, sig: array<long>).
-    Companion of `minhash_band_keys_exploded`; same arithmetic as
-    `minhash_signature_cols` (pinned by test)."""
-    return sig_array_from_sig_table(
-        minhash_sig_table(df, id_col, shingles, num_hashes, hash_fn=hash_fn),
-        num_hashes,
-    )
 
 
 # Spark's XXH64 (catalyst.expressions.XXH64): F.xxhash64 hashes a string's

@@ -1,25 +1,34 @@
 """Mention extraction (U1) — the reference's NER front-end
 (`blink/ner.py:29-42` flair predict; `blink/main_dense.py:76-97` `_annotate`)
-re-expressed as a dictionary/regex extractor in `mapInPandas`.
+re-expressed as a dictionary extractor: one flat-map kernel per Arrow batch.
 
-One input turn row flat-maps to N mention rows with exact char offsets;
-contexts are the lowercased left/right slices (`main_dense.py:85-92`).
-The surface dictionary is compiled once per executor into a single
-alternation regex (longest-first so overlapping surfaces resolve to the
-longest match) — the inner loop is C-regex `finditer` over each text, the
-batch boundary is Arrow.
+One input turn row flat-maps to N mention rows. Matching runs on the
+lowercased turn (Python `str.lower()`); start_pos/end_pos are char offsets
+into that lowercased text and the contexts are its left/right slices
+(`main_dense.py:85-92`). Matches are leftmost-longest, non-overlapping and
+bounded by non-[a-z0-9] chars on both sides.
+
+The production matcher, `_gen_token_arrow` in `mapInArrow`, tokenizes each
+batch once and looks 1-3-token phrases up in hash sets: O(tokens) per row
+whatever the dictionary size. A dictionary with any other surface
+(punctuation, more than 3 tokens, double spaces) runs `_gen_regex`, a
+longest-first alternation regex, in `mapInPandas` instead.
 
 Invariant (reference assert `create_BLINK_zeshel_data.py:115`):
-``mention == lower(substring(text, start_pos+1, end_pos-start_pos))`` —
-tested in tests/test_mentions.py.
+``mention == lower(text)[start_pos:end_pos]`` — tested in
+tests/test_mentions.py.
 """
 
 from __future__ import annotations
 
 import re
 from collections.abc import Iterator
+from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -49,14 +58,22 @@ def _schema(with_context: bool) -> StructType:
 
 
 _TOK_RX = re.compile(r"[a-z0-9]+")
+_TOK_RX_B = re.compile(rb"[a-z0-9]+")
+
+
+def _check_surfaces(surfaces: list[str]) -> None:
+    """An empty surface would match the empty string between any two
+    non-token chars, and every such mention would share one surface."""
+    blank = sorted({s for s in surfaces if not s.strip()})
+    if blank:
+        raise ValueError(f"empty or whitespace-only surfaces: {blank!r}")
 
 
 def _gen_regex(surfaces: list[str], with_context: bool = True):
-    """Alternation-regex matcher (reference-faithful baseline): leftmost-
-    longest via longest-first alternation + word-boundary lookarounds.
-    O(|text| x |dict|) per row — kept for the parity test and for
-    dictionaries with non-token surfaces; the token matcher below is the
-    production path."""
+    """Alternation-regex matcher: leftmost-longest via longest-first
+    alternation + word-boundary lookarounds. O(|text| x |dict|) per row —
+    the production path only for dictionaries with non-token surfaces,
+    and the reference the token matcher is tested against."""
     pat = "|".join(re.escape(s) for s in sorted(set(surfaces), key=len, reverse=True))
     pattern = f"(?<![a-z0-9])({pat})(?![a-z0-9])"
 
@@ -84,85 +101,18 @@ def _gen_regex(surfaces: list[str], with_context: bool = True):
     return gen
 
 
-def _gen_token(surfaces: list[str], with_context: bool = True):
-    """Token-hash dictionary matcher (the 100TB path): tokenize each turn
-    once with a tiny C regex, then match 1..3-token phrases against hash
-    sets — O(|tokens|) per row instead of O(|text| x |dict|) (a
-    2500-surface alternation costs ~90us/row; this ~6us/row). Semantics
-    identical to the regex matcher (leftmost-longest, non-overlapping,
-    single-space-joined phrases); pinned by
-    tests/test_mentions.py::test_token_matcher_equals_regex."""
-    by_len: dict[int, set[str]] = {1: set(), 2: set(), 3: set()}
-    for s in set(surfaces):
-        toks = s.lower().split(" ")
-        if 1 <= len(toks) <= 3 and all(_TOK_RX.fullmatch(t) for t in toks):
-            by_len[len(toks)].add(s.lower())
-        else:
-            raise ValueError(f"token matcher supports 1-3 word-token surfaces: {s!r}")
-    max_n = max((n for n, v in by_len.items() if v), default=1)
+class _Dictionary(NamedTuple):
+    """The token dictionary typed like one batch buffer (bytes or str)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in _schema(with_context).fields}
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                if not text:
-                    continue
-                low = text.lower()
-                toks = [(m.start(), m.end()) for m in _TOK_RX.finditer(low)]
-                last_end = -1
-                for i in range(len(toks)):
-                    start = toks[i][0]
-                    if start < last_end:
-                        continue  # inside a previous (longer) match
-                    # longest phrase first at each start position
-                    for n in range(min(max_n, len(toks) - i), 0, -1):
-                        if not by_len[n]:
-                            continue
-                        end = toks[i + n - 1][1]
-                        phrase = low[start:end]
-                        # multi-token phrases must be exactly space-joined
-                        if n > 1 and phrase.count(" ") != n - 1:
-                            continue
-                        if phrase in by_len[n]:
-                            last_end = end
-                            out["conv_id"].append(conv_id)
-                            out["turn_idx"].append(turn_idx)
-                            out["start_pos"].append(start)
-                            out["end_pos"].append(end)
-                            out["mention"].append(phrase)
-                            if with_context:
-                                out["context_left"].append(low[:start])
-                                out["context_right"].append(low[end:])
-                            break
-            yield pd.DataFrame(out)
-
-    return gen
+    by_len: dict  # token count -> lowercased phrases
+    first2: set  # first words of the 2-token phrases
+    first3: set  # first words of the 3-token phrases
+    tok_rx: re.Pattern
 
 
-def _gen_token_vec(surfaces: list[str], with_context: bool = True):
-    """Batch-vectorized token-hash matcher — identical semantics to
-    `_gen_token` (pinned by tests/test_mentions.py::test_vec_matcher_*),
-    with the per-TOKEN Python loop replaced by numpy/pandas over the whole
-    Arrow batch; Python touches only the sparse match candidates:
-
-      1. join the batch's lowered texts with '\\x00' into one string; token
-         spans come from a numpy char-class pass (diff of an is-[a-z0-9]
-         mask over the code array — no per-token Python), token strings
-         from ONE C-level findall;
-      2. 1/2/3-gram dictionary membership via vectorized Series.isin;
-         multi-token phrases require an exactly-single-space gap (numpy
-         check on the separator char) and cannot cross rows ('\\x00'
-         breaks both the mask and the gap check); the gap guarantee means
-         an n-gram phrase IS the contiguous slice big[starts[i]:ends[i+n-1]]
-         — sliced, not joined;
-      3. leftmost-longest non-overlap resolution is a Python loop over the
-         CANDIDATE matches only (sparse: ~1 per turn vs ~20 tokens);
-      4. rows recovered by searchsorted over cumulative text offsets;
-         output columns are built as numpy arrays (fancy-indexed from the
-         input columns), not per-match Python list appends.
-    """
+def _dictionaries(surfaces: list[str]) -> tuple[_Dictionary, _Dictionary]:
+    """(bytes, str) token dictionaries; ValueError unless every surface is
+    1-3 [a-z0-9]+ tokens joined by single spaces (after lowercasing)."""
     by_len: dict[int, set[str]] = {1: set(), 2: set(), 3: set()}
     for s in set(surfaces):
         toks = s.lower().split(" ")
@@ -171,198 +121,110 @@ def _gen_token_vec(surfaces: list[str], with_context: bool = True):
         else:
             raise ValueError(f"token matcher supports 1-3 word-token surfaces: {s!r}")
 
-    import numpy as np
+    def typed(enc, tok_rx) -> _Dictionary:
+        phrases = {n: {enc(p) for p in v} for n, v in by_len.items()}
+        first2, first3 = ({enc(p.split(" ", 1)[0]) for p in by_len[n]} for n in (2, 3))
+        return _Dictionary(phrases, first2, first3, tok_rx)
 
-    # first-word prefilter for multi-token phrases: building phrase strings
-    # is the expensive step, so do it only where the first token can start
-    # a dictionary phrase (sparse) instead of at every token position
-    first2 = {p.split(" ", 1)[0] for p in by_len[2]}
-    first3 = {p.split(" ", 1)[0] for p in by_len[3]}
+    return typed(lambda p: p.encode("ascii"), _TOK_RX_B), typed(str, _TOK_RX)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in _schema(with_context).fields}
-            lows = pdf["text"].fillna("").astype(str).str.lower().tolist()
-            conv_ids = pdf["conv_id"].tolist()
-            turn_idxs = pdf["turn_idx"].tolist()
-            big = "\x00".join(lows)
-            if big:
-                # ASCII fast path (r5): byte codes are char codes 1:1, so a
-                # uint8 buffer gives identical offsets with 4x less memory
-                # traffic than utf-32 — the matcher is memory-bandwidth-
-                # bound at high core counts. Any non-ASCII batch falls back
-                # to utf-32 char codes (offsets must be CHAR positions).
-                if big.isascii():
-                    codes = np.frombuffer(big.encode("latin-1"), dtype=np.uint8)
-                else:
-                    codes = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32)
-                is_tok = ((codes >= 97) & (codes <= 122)) | (
-                    (codes >= 48) & (codes <= 57)
-                )
-                d = np.diff(is_tok.astype(np.int8))
-                starts = np.flatnonzero(d == 1) + 1
-                ends = np.flatnonzero(d == -1) + 1
-                if is_tok[0]:
-                    starts = np.concatenate(([0], starts))
-                if is_tok[-1]:
-                    ends = np.concatenate((ends, [len(codes)]))
-            else:
-                starts = ends = np.empty(0, dtype=np.int64)
-            n_tok = len(starts)
-            if n_tok:
-                toks = pd.Series(_TOK_RX.findall(big), dtype=object)
-                assert len(toks) == n_tok
-                cand_n = np.zeros(n_tok, dtype=np.int8)
-                if by_len[1]:
-                    cand_n = np.where(toks.isin(by_len[1]).to_numpy(), 1, cand_n)
-                # gap between consecutive tokens is exactly one space. An
-                # n-gram phrase with the single-space gap IS the contiguous
-                # slice big[starts[i]:ends[i+n-1]] — sliced, not joined.
-                # (A vectorized reduceat polynomial token hash was tried
-                # here in r5 to kill findall+isin: warm it measured ~10%
-                # SLOWER — its ~8 full passes over per-char weight/offset
-                # temporaries outweigh one C findall pass. Keep findall.)
-                if n_tok >= 2 and (by_len[2] or by_len[3]):
-                    gap1 = (starts[1:] - ends[:-1] == 1) & (codes[ends[:-1]] == 32)
-                    s_list = starts.tolist()
-                    e_list = ends.tolist()
-                if n_tok >= 2 and by_len[2]:
-                    at2 = np.flatnonzero(
-                        toks.iloc[:-1].isin(first2).to_numpy() & gap1
-                    )
-                    for i in at2.tolist():
-                        if big[s_list[i]:e_list[i + 1]] in by_len[2]:
-                            cand_n[i] = 2
-                if n_tok >= 3 and by_len[3]:
-                    at3 = np.flatnonzero(
-                        toks.iloc[:-2].isin(first3).to_numpy()
-                        & gap1[:-1]
-                        & gap1[1:]
-                    )
-                    for i in at3.tolist():
-                        if big[s_list[i]:e_list[i + 2]] in by_len[3]:
-                            cand_n[i] = 3
-                idxs = np.flatnonzero(cand_n)
-                if len(idxs):
-                    # row offsets: row r's text spans [row_starts[r],
-                    # row_starts[r] + len(lows[r]))
-                    lens = np.fromiter((len(t) for t in lows), dtype=np.int64,
-                                       count=len(lows))
-                    row_starts = np.zeros(len(lows), dtype=np.int64)
-                    np.cumsum(lens[:-1] + 1, out=row_starts[1:])
-                    # leftmost-longest non-overlap resolution: the ONLY
-                    # sequential step, over plain-int candidate spans (r5:
-                    # the old per-match body made a SCALAR np.searchsorted
-                    # call and five np-scalar casts per match — ~45% of
-                    # kernel wall at 2 matches/turn; everything after the
-                    # keep-list is now one vectorized pass)
-                    cs = starts[idxs]
-                    ce = ends[idxs + cand_n[idxs] - 1]
-                    s_l = cs.tolist()
-                    e_l = ce.tolist()
-                    keep: list[int] = []
-                    last_end = -1
-                    for j in range(len(s_l)):
-                        if s_l[j] < last_end:
-                            continue  # inside a previous (longer) match
-                        keep.append(j)
-                        last_end = e_l[j]
-                    ka = np.asarray(keep, dtype=np.int64)
-                    s_k = cs[ka]
-                    e_k = ce[ka]
-                    rows = np.searchsorted(row_starts, s_k, side="right") - 1
-                    rs = row_starts[rows]
-                    row_l = rows.tolist()
-                    # ndarray columns, not per-match list appends: pandas
-                    # wraps them without a sanitize/convert pass (the
-                    # DataFrame build was ~22% of kernel wall as lists)
-                    def _obj(vals: list) -> "np.ndarray":
-                        a = np.empty(len(vals), dtype=object)
-                        a[:] = vals
-                        return a
 
-                    out["conv_id"] = np.asarray(conv_ids, dtype=object)[rows]
-                    out["turn_idx"] = np.asarray(turn_idxs)[rows]
-                    out["start_pos"] = s_k - rs
-                    out["end_pos"] = e_k - rs
-                    out["mention"] = _obj(
-                        [big[s:e] for s, e in zip(s_k.tolist(), e_k.tolist())]
-                    )
-                    if with_context:
-                        sp = out["start_pos"].tolist()
-                        ep = out["end_pos"].tolist()
-                        out["context_left"] = _obj(
-                            [lows[r][:p] for r, p in zip(row_l, sp)]
-                        )
-                        out["context_right"] = _obj(
-                            [lows[r][p:] for r, p in zip(row_l, ep)]
-                        )
-            yield pd.DataFrame(out)
+def _match_spans(big, codes: np.ndarray, dct: _Dictionary):
+    """Leftmost-longest, non-overlapping dictionary matches in one batch
+    buffer. `big` is the batch's lowered texts joined by '\\x00' (bytes or
+    str — findall, set lookups and slicing work alike on both), `codes` its
+    char codes, `dct` the dictionary typed like `big`. Returns the kept
+    matches' (start, end) positions in `big`.
 
-    return gen
+    Token spans come from a numpy char-class pass (no per-token Python),
+    token strings from ONE C-level findall; '\\x00' ends a token, so no
+    token or phrase crosses rows. A multi-token phrase needs an exactly
+    single-space gap between its tokens, so it IS the contiguous slice
+    big[start:end] — sliced, not joined. Python touches only the sparse
+    match candidates."""
+    is_tok = ((codes >= 97) & (codes <= 122)) | ((codes >= 48) & (codes <= 57))
+    d = np.diff(is_tok.astype(np.int8))
+    starts = np.flatnonzero(d == 1) + 1
+    ends = np.flatnonzero(d == -1) + 1
+    if is_tok[0]:
+        starts = np.concatenate(([0], starts))
+    if is_tok[-1]:
+        ends = np.concatenate((ends, [len(codes)]))
+    n_tok = len(starts)
+    if not n_tok:
+        return starts, ends
+    by_len = dct.by_len
+    # (A vectorized reduceat polynomial token hash was tried in place of
+    # findall+isin: warm it measured ~10% SLOWER — its ~8 full passes over
+    # per-char temporaries outweigh one C findall pass.)
+    toks = pd.Series(dct.tok_rx.findall(big), dtype=object)
+    assert len(toks) == n_tok
+    cand_n = np.zeros(n_tok, dtype=np.int8)
+    if by_len[1]:
+        cand_n = np.where(toks.isin(by_len[1]).to_numpy(), 1, cand_n)
+    if n_tok >= 2 and (by_len[2] or by_len[3]):
+        gap1 = (starts[1:] - ends[:-1] == 1) & (codes[ends[:-1]] == 32)
+        s_list = starts.tolist()
+        e_list = ends.tolist()
+    # building phrase strings is the expensive step, so do it only where
+    # the first token can start a dictionary phrase (sparse)
+    if n_tok >= 2 and by_len[2]:
+        at2 = np.flatnonzero(toks.iloc[:-1].isin(dct.first2).to_numpy() & gap1)
+        for i in at2.tolist():
+            if big[s_list[i] : e_list[i + 1]] in by_len[2]:
+                cand_n[i] = 2
+    if n_tok >= 3 and by_len[3]:
+        at3 = np.flatnonzero(
+            toks.iloc[:-2].isin(dct.first3).to_numpy() & gap1[:-1] & gap1[1:]
+        )
+        for i in at3.tolist():
+            if big[s_list[i] : e_list[i + 2]] in by_len[3]:
+                cand_n[i] = 3
+    idxs = np.flatnonzero(cand_n)
+    cs = starts[idxs]
+    ce = ends[idxs + cand_n[idxs] - 1]
+    # leftmost-longest non-overlap: the ONLY sequential step, over plain-int
+    # candidate spans (~1 per turn against ~20 tokens)
+    e_l = ce.tolist()
+    keep: list[int] = []
+    last_end = -1
+    for j, s in enumerate(cs.tolist()):
+        if s < last_end:
+            continue  # inside a previous (longer) match
+        keep.append(j)
+        last_end = e_l[j]
+    ka = np.asarray(keep, dtype=np.int64)
+    return cs[ka], ce[ka]
 
 
 def _gen_token_arrow(surfaces: list[str], with_context: bool = True):
-    """Arrow-native token matcher — output identical to `_gen_token_vec`
-    (parity-pinned by tests/test_mentions.py), consuming the record batch's
-    raw Arrow buffers zero-copy instead of through the pandas object-string
-    decode.
+    """Token-hash dictionary matcher over raw Arrow record batches
+    (`mapInArrow`) — output identical to the row-loop and regex references
+    in tests/.
 
-    Why this exists (VERDICT r6 #2a): MENTIONS_SPLIT.json attributes the
-    extraction stage's ~1.33x per-CPU inflation at high core counts to the
-    Arrow/IPC memory path — the kernel itself conserves CPU standalone
-    (EXTRACTION_CONTENTION.json, inflation 1.03-1.11). `mapInPandas`
-    materializes every text as a Python str (Arrow decode), lowercases each
-    into a SECOND str, then joins them into the kernel's single buffer —
-    three allocator-heavy object passes per batch. Here the whole batch is
-    processed as ONE uint8 numpy view of the Arrow data buffer: row
-    separators via a single vectorized `np.insert`, lowercase via an
-    in-place `|= 0x20` on the [A-Z] mask. Python strings are created only
-    for the sparse match outputs, and the output goes back as Arrow arrays
-    (`pyarrow.compute.take` on the input columns — no object round-trip).
-
-    ASCII fast path only: a batch containing any byte >= 0x80 falls back to
-    the pandas kernel for that batch (UTF-8 byte offsets != char offsets,
-    and the start_pos/end_pos contract is CHAR positions — same contract as
-    `_gen_token_vec`'s utf-32 fallback).
+    Two front ends build the batch buffer `_match_spans` reads:
+    * ASCII batch (no byte >= 0x80): ONE uint8 numpy view of the Arrow data
+      buffer, zero-copy; row separators via a single vectorized `np.insert`,
+      lowercase via an in-place `|= 0x20` on the [A-Z] mask. Byte offsets
+      are char offsets, and the buffer stays `bytes` (C findall over bytes
+      is ~20% cheaper than over str).
+    * any other batch: Python `str.lower()` per text, joined by '\\x00',
+      read as UTF-32 codes — offsets must be CHAR positions, and lowering
+      can change a text's length ('İ' -> 'i̇') or map a char into [a-z]
+      (Kelvin sign -> 'k'), which no in-place byte lowering reproduces.
+    One back end for both: conv_id/turn_idx via `pc.take` on the input
+    columns (no object round-trip); Python strings only for the sparse
+    match outputs.
     """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    d_bytes, d_str = _dictionaries(surfaces)
+    names = _schema(with_context).fieldNames()
 
-    by_len: dict[int, set[bytes]] = {1: set(), 2: set(), 3: set()}
-    for s in set(surfaces):
-        toks = s.lower().split(" ")
-        if 1 <= len(toks) <= 3 and all(_TOK_RX.fullmatch(t) for t in toks):
-            by_len[len(toks)].add(s.lower().encode("ascii"))
-        else:
-            raise ValueError(f"token matcher supports 1-3 word-token surfaces: {s!r}")
-    first2 = {p.split(b" ", 1)[0] for p in by_len[2]}
-    first3 = {p.split(b" ", 1)[0] for p in by_len[3]}
-    tok_rx_b = re.compile(rb"[a-z0-9]+")
-
-    fields = [
-        pa.field("conv_id", pa.string()),
-        pa.field("turn_idx", pa.int32()),
-        pa.field("start_pos", pa.int32()),
-        pa.field("end_pos", pa.int32()),
-        pa.field("mention", pa.string()),
-    ]
-    if with_context:
-        fields += [
-            pa.field("context_left", pa.string()),
-            pa.field("context_right", pa.string()),
-        ]
-    out_schema = pa.schema(fields)
-    # non-ASCII batches reuse the pandas kernel verbatim (rare path)
-    pd_gen = _gen_token_vec(surfaces, with_context)
-
-    def gen(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             n = batch.num_rows
             if not n:
                 continue
-            tcol = batch.column(batch.schema.get_field_index("text"))
+            tcol = batch.column("text")
             if tcol.null_count:
                 tcol = pc.fill_null(tcol, "")
             # offsets/data straight off the Arrow buffers (zero-copy);
@@ -377,132 +239,53 @@ def _gen_token_arrow(surfaces: list[str], with_context: bool = True):
                 if bufs[2] is not None
                 else np.empty(0, dtype=np.uint8)
             )
-            codes_all = data[offs[0] : offs[-1]]
-            if codes_all.size and int(codes_all.max()) >= 0x80:
-                pdf = batch.to_pandas()
-                for out_pdf in pd_gen(iter([pdf])):
-                    if len(out_pdf):
-                        yield pa.RecordBatch.from_pandas(
-                            out_pdf, schema=out_schema, preserve_index=False
-                        )
+            codes = data[offs[0] : offs[-1]]
+            if codes.size and int(codes.max()) >= 0x80:
+                lows = [t.lower() for t in tcol.to_pylist()]
+                big = "\x00".join(lows)
+                codes = np.frombuffer(big.encode("utf-32-le"), dtype=np.uint32)
+                lens = np.fromiter(map(len, lows), dtype=np.int64, count=n)
+                dct = d_str
+            else:
+                rel = offs - offs[0]
+                codes = np.insert(codes, rel[1:-1], 0)  # a copy, also for n == 1
+                codes[(codes >= 65) & (codes <= 90)] |= 0x20
+                big = codes.tobytes()
+                lens = np.diff(rel)
+                dct = d_bytes
+            if not codes.size:
                 continue
-            rel = offs - offs[0]
-            # one vectorized pass builds the '\x00'-joined batch buffer the
-            # kernel contract needs (tokens must not cross rows)
-            big_codes = (
-                np.insert(codes_all, rel[1:-1], 0) if n > 1 else codes_all.copy()
-            )
-            if not big_codes.size:
+            s_k, e_k = _match_spans(big, codes, dct)
+            if not len(s_k):
                 continue
-            up = (big_codes >= 65) & (big_codes <= 90)
-            big_codes[up] |= 0x20
-            row_starts = rel[:-1] + np.arange(n, dtype=np.int64)
-            lens = np.diff(rel)
-            is_tok = ((big_codes >= 97) & (big_codes <= 122)) | (
-                (big_codes >= 48) & (big_codes <= 57)
-            )
-            d = np.diff(is_tok.astype(np.int8))
-            starts = np.flatnonzero(d == 1) + 1
-            ends = np.flatnonzero(d == -1) + 1
-            if is_tok[0]:
-                starts = np.concatenate(([0], starts))
-            if is_tok[-1]:
-                ends = np.concatenate((ends, [len(big_codes)]))
-            n_tok = len(starts)
-            if not n_tok:
-                continue
-            big_b = big_codes.tobytes()
-            toks = pd.Series(tok_rx_b.findall(big_b), dtype=object)
-            assert len(toks) == n_tok
-            cand_n = np.zeros(n_tok, dtype=np.int8)
-            if by_len[1]:
-                cand_n = np.where(toks.isin(by_len[1]).to_numpy(), 1, cand_n)
-            if n_tok >= 2 and (by_len[2] or by_len[3]):
-                gap1 = (starts[1:] - ends[:-1] == 1) & (
-                    big_codes[ends[:-1]] == 32
-                )
-                s_list = starts.tolist()
-                e_list = ends.tolist()
-            if n_tok >= 2 and by_len[2]:
-                at2 = np.flatnonzero(toks.iloc[:-1].isin(first2).to_numpy() & gap1)
-                for i in at2.tolist():
-                    if big_b[s_list[i] : e_list[i + 1]] in by_len[2]:
-                        cand_n[i] = 2
-            if n_tok >= 3 and by_len[3]:
-                at3 = np.flatnonzero(
-                    toks.iloc[:-2].isin(first3).to_numpy() & gap1[:-1] & gap1[1:]
-                )
-                for i in at3.tolist():
-                    if big_b[s_list[i] : e_list[i + 2]] in by_len[3]:
-                        cand_n[i] = 3
-            idxs = np.flatnonzero(cand_n)
-            if not len(idxs):
-                continue
-            cs = starts[idxs]
-            ce = ends[idxs + cand_n[idxs] - 1]
-            s_l = cs.tolist()
-            e_l = ce.tolist()
-            keep: list[int] = []
-            last_end = -1
-            for j in range(len(s_l)):
-                if s_l[j] < last_end:
-                    continue  # inside a previous (longer) match
-                keep.append(j)
-                last_end = e_l[j]
-            ka = np.asarray(keep, dtype=np.int64)
-            s_k = cs[ka]
-            e_k = ce[ka]
+            # row r's text spans [row_starts[r], row_starts[r] + lens[r])
+            row_starts = np.zeros(n, dtype=np.int64)
+            np.cumsum(lens[:-1] + 1, out=row_starts[1:])
             rows = np.searchsorted(row_starts, s_k, side="right") - 1
             rs = row_starts[rows]
-            start_pos = (s_k - rs).astype(np.int32)
-            end_pos = (e_k - rs).astype(np.int32)
             take = pa.array(rows)
-            conv_out = pc.take(
-                batch.column(batch.schema.get_field_index("conv_id")), take
-            )
+            conv_out = pc.take(batch.column("conv_id"), take)
             if not pa.types.is_string(conv_out.type):
                 conv_out = pc.cast(conv_out, pa.string())
-            turn_out = pc.cast(
-                pc.take(batch.column(batch.schema.get_field_index("turn_idx")), take),
-                pa.int32(),
-            )
+            s_l = s_k.tolist()
+            e_l = e_k.tolist()
             arrays = [
                 conv_out,
-                turn_out,
-                pa.array(start_pos, type=pa.int32()),
-                pa.array(end_pos, type=pa.int32()),
-                pa.array(
-                    [
-                        big_b[s:e].decode("ascii")
-                        for s, e in zip(s_k.tolist(), e_k.tolist())
-                    ],
-                    type=pa.string(),
-                ),
+                pc.cast(pc.take(batch.column("turn_idx"), take), pa.int32()),
+                pa.array((s_k - rs).astype(np.int32)),
+                pa.array((e_k - rs).astype(np.int32)),
+                pa.array([big[s:e] for s, e in zip(s_l, e_l)], type=pa.string()),
             ]
             if with_context:
                 rs_l = rs.tolist()
-                ln_l = lens[rows].tolist()
-                sp = start_pos.tolist()
-                ep = end_pos.tolist()
-                arrays.append(
-                    pa.array(
-                        [
-                            big_b[a : a + p].decode("ascii")
-                            for a, p in zip(rs_l, sp)
-                        ],
-                        type=pa.string(),
-                    )
-                )
-                arrays.append(
-                    pa.array(
-                        [
-                            big_b[a + q : a + ln].decode("ascii")
-                            for a, q, ln in zip(rs_l, ep, ln_l)
-                        ],
-                        type=pa.string(),
-                    )
-                )
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+                re_l = (rs + lens[rows]).tolist()
+                arrays.append(pa.array(
+                    [big[a:s] for a, s in zip(rs_l, s_l)], type=pa.string()
+                ))
+                arrays.append(pa.array(
+                    [big[e:b] for e, b in zip(e_l, re_l)], type=pa.string()
+                ))
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return gen
 
@@ -510,7 +293,6 @@ def _gen_token_arrow(surfaces: list[str], with_context: bool = True):
 def extract_mentions(
     transcripts: DataFrame,
     surfaces: list[str],
-    impl: str = "token_arrow",
     with_context: bool = True,
     id_bits: int = 64,
     partitioning: str = "repartition",
@@ -522,18 +304,16 @@ def extract_mentions(
     stable ordering key (conv_id, turn_idx, start_pos) — W6: ids are data,
     never positions (unlike the reference's list indices).
 
-    impl='token_arrow' (default): the token matcher consuming the raw
-    Arrow buffers via mapInArrow (no pandas object-string decode — see
-    _gen_token_arrow for the bus-pressure rationale; falls back to regex
-    when the dictionary has non-token surfaces, and per-batch to the
-    pandas kernel on non-ASCII text); impl='token': the batch-vectorized
-    pandas token-hash matcher (_gen_token_vec); impl='token_loop': the
-    row-loop token matcher (parity baseline); impl='regex': the
-    alternation baseline (identical output, slowest on big dicts).
-    All four are output-identical (parity-pinned in tests/test_mentions).
-    Measured at 24M turns (MENTIONS_SPLIT*.json, pinned): token_arrow
-    cuts the extraction stage's Python CPU 22-26% at both 2 and 8 cores
-    and wall -14% at 2 cores vs 'token'.
+    The token matcher `_gen_token_arrow` runs on the raw Arrow batches
+    (`mapInArrow`); a dictionary with a surface it cannot match (not 1-3
+    [a-z0-9]+ tokens joined by single spaces) runs the `_gen_regex`
+    alternation in `mapInPandas` instead. Both give identical output where
+    both apply (parity-pinned in tests/ against a row-loop reference).
+    Raises ValueError for an empty or whitespace-only surface.
+
+    `partitioning`: "repartition" (the batch entry points) hash-spreads the
+    turns over one task per core; "auto" (small delta batches) coalesces
+    instead when the input already has that many partitions.
 
     ID NOTE (ADVICE r1 / VERDICT r2 #7): with id_bits=64 (default),
     mention_id = xxhash64(conv_id, turn_idx, start_pos) as a long. At 10^12
@@ -549,36 +329,28 @@ def extract_mentions(
     """
     if id_bits not in (64, 128):
         raise ValueError(f"id_bits must be 64 or 128, got {id_bits}")
-    gens = {
-        "token_arrow": _gen_token_arrow,
-        "token": _gen_token_vec,
-        "token_loop": _gen_token,
-        "regex": _gen_regex,
-    }
-    arrow_native = False
-    if impl in ("token_arrow", "token", "token_loop"):
-        try:
-            gen = gens[impl](surfaces, with_context)
-            arrow_native = impl == "token_arrow"
-        except ValueError:
-            gen = _gen_regex(surfaces, with_context)
-    else:
+    if partitioning not in ("repartition", "auto"):
+        raise ValueError(f"unknown partitioning: {partitioning!r}")
+    _check_surfaces(surfaces)
+    try:
+        gen = _gen_token_arrow(surfaces, with_context)
+        arrow_native = True
+    except ValueError:
         gen = _gen_regex(surfaces, with_context)
+        arrow_native = False
 
     # with_context=False skips materializing the left/right context slices
     # (each ~the whole turn text, PER MENTION) — the linkage pipeline never
     # reads them, and they dominate the mentions-stage checkpoint bytes
     cols = transcripts.select("conv_id", "turn_idx", "text")
     # own the parallelism (r1 finding: AQE coalesces small shuffle outputs
-    # far below the core count, starving the CPU-heavy matcher). Default
-    # "repartition": measured r4 at 24M turns, the no-shuffle alternatives
-    # LOSE at high core counts — "coalesce" (merge input splits into the
-    # task layout) was ~1.8x slower at local[8] (79s vs ~43s) while equal
-    # at local[2], and "none" (raw splits) was a 40% regression at low
-    # core counts in r3 — the shuffle's compact row batches feed the
-    # Python workers better than iterating coarse cached/scan partitions.
-    # Knobs "auto"/"coalesce"/"none" remain for measurement
-    # (scripts/profile_extraction.py).
+    # far below the core count, starving the CPU-heavy matcher). Measured
+    # r4 at 24M turns, the no-shuffle layouts LOSE at high core counts:
+    # coalescing the input splits into the task layout was ~1.8x slower at
+    # local[8] (79s vs ~43s) while equal at local[2], and the raw splits
+    # were a 40% regression at low core counts in r3 — the shuffle's
+    # compact row batches feed the Python workers better than iterating
+    # coarse cached/scan partitions. So only "auto"'s small batches skip it.
     # r8: the rebalance exchange hashes on (conv_id, turn_idx) instead of
     # round-robin. Round-robin pays a local sort of every input partition
     # before the exchange (spark.sql.execution.sortBeforeRepartition, kept
@@ -595,25 +367,14 @@ def extract_mentions(
     # measured at 2M turns / 32 cores: 32 tasks 1.3s/32 CPU-s, 64 tasks
     # 1.6s/39, 96 tasks 2.0s/47. ONE wave of equal tasks keeps every
     # reused Python worker on a single continuous Arrow stream. The CPU
-    # saving (-30%) also carries to the low-core scaling shapes; finer
-    # granularity remains available via partitioning="none" + an explicit
-    # upstream repartition.
+    # saving (-30%) also carries to the low-core scaling shapes.
     par = transcripts.sparkSession.sparkContext.defaultParallelism
-    _hash_keys = [F.col("conv_id"), F.col("turn_idx")]
-    if partitioning in ("auto", "coalesce"):
-        n_in = cols.rdd.getNumPartitions()
-        if n_in >= par:
-            cols = cols.coalesce(par)
-        else:
-            cols = cols.repartition(par, *_hash_keys)
-    elif partitioning == "repartition":
-        cols = cols.repartition(par, *_hash_keys)
-    elif partitioning != "none":
-        raise ValueError(f"unknown partitioning: {partitioning!r}")
-    if arrow_native:
-        mentions = cols.mapInArrow(gen, schema=_schema(with_context))
+    if partitioning == "auto" and cols.rdd.getNumPartitions() >= par:
+        cols = cols.coalesce(par)
     else:
-        mentions = cols.mapInPandas(gen, schema=_schema(with_context))
+        cols = cols.repartition(par, F.col("conv_id"), F.col("turn_idx"))
+    flat_map = cols.mapInArrow if arrow_native else cols.mapInPandas
+    mentions = flat_map(gen, schema=_schema(with_context))
     # stable id from the ordering contract; xxhash64 is collision-safe enough
     # at test scale and avoids a global sort; a monotonic row_number variant
     # is available for strict density (used by datagen gold fixtures).

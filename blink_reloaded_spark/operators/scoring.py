@@ -122,11 +122,9 @@ def score_pairs(
 
 def two_phase_scored_pairs(
     cands: DataFrame,
-    a_nodes: DataFrame,
-    b_nodes: DataFrame | None = None,
+    nodes: DataFrame,
     threshold: float = DEFAULT_THRESHOLD,
     argmax_prune: bool = False,
-    repartition_to: int | None = None,
     vec_join: str | None = None,
     cos_source: str = "join",
     assume_partitioned: bool = False,
@@ -175,13 +173,11 @@ def two_phase_scored_pairs(
       survivors dominates (e.g. much wider vectors).
     Both modes pinned by tests/test_pipeline.py::test_two_phase_scoring_parity.
 
-    `a_nodes`/`b_nodes`: (id, text, tk, vec); b_nodes=None reuses a_nodes
-    (self-join case). `repartition_to` rebalances the text-pair frame
-    round-robin before the feature UDFs; default None — the join chain
-    already spreads pair rows by hash(b) then hash(a), per-key row counts
-    are bounded upstream (top-k budget / max_block), and the extra
-    exchange was a pure stage-boundary cost (VERDICT r3 #1a). Pass a
-    number only when feeding UNBOUNDED per-key pair counts.
+    `nodes`: (id, text, tk, vec), the node table of both pair sides.
+    There is no rebalance before the feature UDFs: the join chain already
+    spreads pair rows by hash(b) then hash(a), per-key row counts are
+    bounded upstream (top-k budget / max_block), and an extra exchange was
+    a pure stage-boundary cost (VERDICT r3 #1a).
 
     `cos_source` (r5, VERDICT r4 #4 — the links chain's residual fixed
     latency was its shuffle-stage boundaries): "join" ships the stored
@@ -191,8 +187,8 @@ def two_phase_scored_pairs(
     embedding.pair_cos_from_text_udf — bit-identical scores when `vec` IS
     the hashed text embedding (the pipeline's case; parity pinned by
     tests/test_pipeline.py::test_cos_recompute_parity) and removes BOTH
-    vector joins and their four exchanges; a_nodes/b_nodes then don't need
-    a `vec` column at all. At 10^12 turns "recompute" is also the right
+    vector joins and their four exchanges; nodes then needs no `vec`
+    column at all. At 10^12 turns "recompute" is also the right
     cluster shape for hashed embeddings: the join path shuffles two
     |surfaces|-row ~1KB/row vec tables per run, the recompute path does a
     numpy pass over survivor texts with in-batch distinct-string dedup.
@@ -221,12 +217,10 @@ def two_phase_scored_pairs(
     """
     if cos_source not in ("join", "recompute"):
         raise ValueError(f"cos_source must be 'join' or 'recompute': {cos_source}")
-    if b_nodes is None:
-        b_nodes = a_nodes
-    na_t = a_nodes.select(
+    na_t = nodes.select(
         F.col("id").alias("a"), F.col("text").alias("a_text"), F.col("tk").alias("a_tk")
     )
-    nb_t = b_nodes.select(
+    nb_t = nodes.select(
         F.col("id").alias("b"), F.col("text").alias("b_text"), F.col("tk").alias("b_tk")
     )
     # hash-repartition the SKINNY id-pair frame (16B/row — the cheapest
@@ -239,8 +233,6 @@ def two_phase_scored_pairs(
     # old round-robin, without shuffling the WIDE text frame.
     tp = cands if assume_partitioned else cands.repartition("a")
     tp = tp.join(na_t, "a").join(nb_t, "b")
-    if repartition_to:
-        tp = tp.repartition(repartition_to)
     feats = pair_features(tp, a_toks="a_tk", b_toks="b_tk").withColumn(
         "cheap",
         F.col("jw") * W_JW + F.col("lev_sim") * W_LEV + F.col("overlap") * W_OVL,
@@ -282,10 +274,9 @@ def two_phase_scored_pairs(
             "a", "b", "a_text", "b_text", "jw", "lev_sim", "jacc", "overlap",
             "cos", "score",
         )
-    va = a_nodes.select(F.col("id").alias("a"), F.col("vec").alias("a_vec"))
-    vb = b_nodes.select(F.col("id").alias("b"), F.col("vec").alias("b_vec"))
-    # b-vec first (survivors are already partitioned by b when
-    # repartition_to is off), a-vec last so downstream per-`a` consumers
+    va = nodes.select(F.col("id").alias("a"), F.col("vec").alias("a_vec"))
+    vb = nodes.select(F.col("id").alias("b"), F.col("vec").alias("b_vec"))
+    # b-vec first (survivors are already partitioned by b), a-vec last so downstream per-`a` consumers
     # (link_best) inherit hash(a) partitioning. `vec_join="shuffle_hash"`
     # (the LARGE-node-table setting, chosen by LinkagePipeline.tuned): the
     # vec tables are the WIDE dims (~1KB/row); a broadcast join builds a

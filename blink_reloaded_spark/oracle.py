@@ -48,7 +48,8 @@ def sql_poly_hash(e: str) -> str:
 
 
 def sql_minhash(e_shingles: str, i: int) -> str:
-    """Mirror of hashing.minhash sig[i]: min over shingles of perm_i(poly)."""
+    """Mirror of hashing.minhash_sig_table column mh{i}: min over shingles
+    of perm_i(poly)."""
     a, b = PERMS[i]
     return (
         f"coalesce(list_min(list_transform({e_shingles},"
@@ -57,7 +58,7 @@ def sql_minhash(e_shingles: str, i: int) -> str:
 
 
 def sql_band_key(e_shingles: str, band: int, rows: int) -> str:
-    """Mirror of hashing.band_keys entry `band`."""
+    """Mirror of the `band`-th block_key of hashing.band_keys_from_sig_table."""
     parts = ", ".join(
         f"CAST({sql_minhash(e_shingles, band * rows + r)} AS VARCHAR)"
         for r in range(rows)

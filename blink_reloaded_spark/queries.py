@@ -991,7 +991,7 @@ SQL_ER_DICT = "(VALUES " + ", ".join(
 def er01_mentions(spark, sf_dir):
     """U1 dictionary mention extraction, first occurrence per (turn, word),
     1-based char offset via instr — SQL-parity variant of operators/
-    mentions.extract_mentions (the full multi-occurrence regex extractor is
+    mentions.extract_mentions (the full multi-occurrence dictionary extractor is
     exercised by the pipeline tests)."""
     tr = _derived_transcripts(spark, sf_dir)
     d = F.broadcast(_er_dict_df(spark))

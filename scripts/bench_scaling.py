@@ -52,10 +52,11 @@ cat = datagen.EntityCatalog.build(n_entities=n_entities)
 tr, _ = datagen.generate_transcripts(spark, cat, n_convs=n_convs,
                                      turns_per_conv=tpc, hot_conv_factor=100,
                                      hot_mention_pct=hot_pct)
-# write enough splits that every tested core count can COALESCE into its
-# task layout instead of shuffling the full text column (a 100TB input
-# always has plenty of splits; a 19-split local file would be the
-# small-data artifact) — see operators/mentions.extract_mentions "auto"
+# write enough splits that every tested core count reads the input in
+# parallel (a 100TB input always has plenty of splits; a 19-split local
+# file would be the small-data artifact). The extractor then hash-spreads
+# the turns over one task per core — see the partitioning note in
+# operators/mentions.extract_mentions
 tr.select("conv_id", "turn_idx", "text").repartition(96).write.mode(
     "overwrite").parquet(out)
 print("GEN_OK", tr.count())
@@ -84,8 +85,8 @@ cat = datagen.EntityCatalog.build(n_entities=n_entities)
 surfaces = [a["surface"] for a in cat.aliases]
 # identical bytes at every level and trial: read the pre-generated input.
 # Spread to 96 partitions BEFORE the (untimed) localCheckpoint: the parquet
-# reader re-bins small files into ~128MB splits, which would defeat the
-# extractor's no-shuffle coalesce path; a production table at this scale
+# reader re-bins small files into ~128MB splits, which would serialize the
+# scan ahead of the extractor's exchange; a production table at this scale
 # always has a fine-grained layout
 tr = spark.read.parquet(inp).repartition(96).localCheckpoint()
 n_turns = tr.count()

@@ -54,7 +54,7 @@ def test_minhash_sql_monotone_under_identity(s: str):
 
 
 # ---------------------------------------------------------------------------
-# matcher-implementation parity: vec == loop == regex on random inputs
+# matcher parity: Arrow kernel == row loop == regex on random inputs
 # ---------------------------------------------------------------------------
 
 _WORDS = ["a", "ab", "abc", "b", "bc", "c", "x9", "zz", "q", "longword"]
@@ -83,13 +83,13 @@ def _dict_and_texts(draw):
 @given(_dict_and_texts())
 @settings(max_examples=300, deadline=None)
 def test_matcher_impl_parity_property(case):
-    import pandas as pd
+    import pyarrow as pa
 
     from blink_reloaded_spark.operators.mentions import (
         _gen_regex,
-        _gen_token,
-        _gen_token_vec,
+        _gen_token_arrow,
     )
+    from mention_reference import arrow_rows, gen_token_loop, pandas_rows
 
     surfaces, texts = case
     pdf = pd.DataFrame(
@@ -99,13 +99,9 @@ def test_matcher_impl_parity_property(case):
             "text": texts,
         }
     )
-
-    def run(factory):
-        out = pd.concat(list(factory(surfaces)(iter([pdf]))), ignore_index=True)
-        return sorted(map(tuple, out.itertuples(index=False)))
-
-    vec, loop, rx = run(_gen_token_vec), run(_gen_token), run(_gen_regex)
-    assert vec == loop == rx
+    arrow = arrow_rows(_gen_token_arrow, surfaces, pa.RecordBatch.from_pandas(pdf))
+    assert arrow == pandas_rows(gen_token_loop, surfaces, pdf)
+    assert arrow == pandas_rows(_gen_regex, surfaces, pdf)
 
 
 def test_kernel_dtype_paths_agree():
