@@ -1,24 +1,28 @@
 """Portable hashing primitives: polynomial string hash, MinHash signatures,
 LSH band keys, SimHash.
 
-The Column-expression kernels are pure int64 arithmetic (whole-stage
-codegen) AND engine-portable: the DuckDB oracle reproduces the exact values,
-so LSH blocking itself is correctness-checked, not just smoke-tested. The
-numpy kernels (shingle_hashes_np, minhash_np and their two Spark entry
-points minhash_sigs_np_udf and minhash_band_keys_np) compute the same
-values per Arrow batch in Python, pinned bit-identical to the Column forms
-by tests/test_kernels.py and tests/test_functions.py.
+The Column-expression kernels (poly_hash, perm_hash, simhash_exploded) are
+pure int64 arithmetic (whole-stage codegen) AND engine-portable: the DuckDB
+oracle reproduces the exact values, so LSH itself is correctness-checked,
+not just smoke-tested. MinHash has one implementation, the numpy kernel:
+shingle_hashes_np -> minhash_np per Arrow batch, behind two Spark entry
+points, minhash_sigs_np_udf (signature arrays, dedup03) and
+minhash_band_keys_np (band keys, pipeline blocking). Its Column-expression
+references (explode -> groupBy(id) signature table, band keys, per-bit
+SimHash, zip_with agreement) live in tests/hashing_reference.py, and
+tests/test_kernels.py and tests/test_functions.py pin the kernels
+bit-identical to them.
 
 Reference analogue: the FAISS ANN index (`blink/indexer/faiss_indexer.py:
 47-141`) — here the index *is* a table of band keys; retrieval is an
 equi-join on the band key (SURVEY.md J7/J8).
 
 Production note: at 100 TB you swap `poly_hash` for `xxhash64_mod` (one
-native JVM hash call per string instead of an interpreted per-char
-aggregate; not DuckDB-portable, but reproduced exactly in numpy by
-xxhash64_np) — every MinHash kernel below takes the
-base hash as the `hash_fn` parameter, and the swap preserves band
-SEMANTICS (same candidate sets on a duplicate fixture, pinned by
+native hash per shingle instead of a per-char Horner; not DuckDB-portable,
+but Spark's xxhash64 reproduced exactly in numpy by xxhash64_np). Both
+MinHash entry points take the base hash as the `hash_fn` parameter and
+resolve it through one helper, and the swap preserves band SEMANTICS (same
+candidate sets on a duplicate fixture, pinned by
 tests/test_functions.py::test_minhash_xxhash64_band_semantics).
 """
 
@@ -71,118 +75,13 @@ def perm_hash(h: Column, i: int) -> Column:
     return (F.lit(a) * h + F.lit(b)) % F.lit(P)
 
 
-def simhash64(toks: Column, nbits: int = 32) -> Column:
-    """Portable SimHash over a token array (nbits <= 62, default 32).
-
-    bit_j is set iff the majority of token hashes have parity 1 under
-    permutation j: ((a_j*h + b_j) % P) & 1. Hamming distance between two
-    simhashes = bit_count(x ^ y) — both Spark and DuckDB have bit_count/xor.
-    """
-    hashes = F.transform(toks, poly_hash)
-    n = F.size(hashes)
-
-    def _parity_count(j: int):
-        return F.size(F.filter(hashes, lambda h: perm_hash(h, j) % F.lit(2) == F.lit(1)))
-
-    out = F.lit(0).cast("long")
-    for j in range(nbits):
-        bit = (_parity_count(j) * F.lit(2) > n).cast("long")
-        out = out + bit * F.lit(1 << j)
-    return out
-
-
-def id_shingle_hashes(df, id_col: str, shingles: Column, hash_fn=None,
-                      dedup_shingles: bool | None = None,
-                      carry_cols: list[str] | None = None):
-    """(id, h): one row per (id, shingle) with the base hash computed ONCE
-    per DISTINCT shingle and joined back.
-
-    The interpreted per-char `poly_hash` aggregate dominates MinHash cost;
-    on real corpora the shingle vocabulary is orders of magnitude smaller
-    than the (doc, shingle) row count (Heaps' law), so hashing the distinct
-    vocabulary and equi-joining it back trades ~Nx redundant per-char
-    aggregates for one shuffle of skinny rows — AQE broadcasts the hashed
-    vocabulary when it is small. Same values as hashing in place (the join
-    key IS the shingle), pinned by tests/test_functions.py.
-    """
-    hf = hash_fn or poly_hash
-    carry = [F.col(c) for c in (carry_cols or [])]
-    e = df.select(F.col(id_col).alias("id"), *carry,
-                  F.explode(shingles).alias("s"))
-    if dedup_shingles is None:
-        # the distinct-vocabulary pass pays for itself only when the base
-        # hash is the INTERPRETED poly_hash aggregate; a native hash_fn
-        # (xxhash64_mod) is cheaper than the distinct+join shuffles it
-        # would save (r3 measured on the 20k-entity blocking keys). Keyed
-        # on the resolved function, not on argument presence: a caller
-        # passing poly_hash EXPLICITLY (the oracle-parity path) keeps the
-        # optimization (ADVICE r3)
-        dedup_shingles = hf is poly_hash
-    cnames = list(carry_cols or [])
-    if not dedup_shingles:
-        return e.select("id", *cnames, hf(F.col("s")).alias("h"))
-    dist = e.select("s").distinct().select("s", hf(F.col("s")).alias("h"))
-    return e.join(dist, "s").select("id", *cnames, "h")
-
-
-def minhash_sig_table(
-    df, id_col: str, shingles: Column, num_hashes: int, hash_fn=None,
-    carry_cols: list[str] | None = None,
-):
-    """Wide MinHash signature table: (id, [carry_cols...], mh0..mh{n-1})
-    via explode -> distinct-shingle hash join -> groupBy(id) with map-side
-    partial mins. All expressions stay flat (no nested array lambdas ->
-    codegen holds); the one data shuffle is the groupBy(id). Null-free:
-    empty-shingle ids never appear after explode; positions coalesce to the
-    P sentinel. `hash_fn` (default poly_hash) is the base string hash —
-    pass `xxhash64_mod` for the production fast path. `carry_cols`:
-    id-functional columns (e.g. a side flag) carried through the groupBy as
-    extra grouping keys — zero extra shuffle, lets callers key a UNION of
-    tables in one pass and split after."""
-    h = id_shingle_hashes(df, id_col, shingles, hash_fn=hash_fn,
-                          carry_cols=carry_cols)
-    aggs = [
-        F.coalesce(F.min(perm_hash(F.col("h"), i)), F.lit(P)).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return h.groupBy("id", *(carry_cols or [])).agg(*aggs)
-
-
-def band_keys_from_sig_table(sig, bands: int, rows: int,
-                             carry_cols: list[str] | None = None):
-    """(id, [carry_cols...], block_key) exploded band keys from a
-    minhash_sig_table frame — share one materialized sig table between band
-    keys and signatures instead of recomputing the shingle pass per
-    consumer."""
-    keys = [
-        F.concat_ws(
-            "|",
-            F.lit(str(b)),
-            F.concat_ws(
-                "_",
-                *[F.col(f"mh{b * rows + r}").cast("string") for r in range(rows)],
-            ),
-        )
-        for b in range(bands)
-    ]
-    return sig.select("id", *(carry_cols or []),
-                      F.explode(F.array(*keys)).alias("block_key"))
-
-
-def sig_array_from_sig_table(sig, num_hashes: int):
-    """(id, sig: array<long>) from a minhash_sig_table frame."""
-    return sig.select(
-        "id", F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def simhash_exploded(df, id_col: str, toks: Column, nbits: int = 32):
     """(id, simhash) with the explode->groupBy shape: one poly_hash per
     DISTINCT token (joined back), then nbits conditional-count aggregates
-    per id. Same values as `simhash64` (pinned by test) — which evaluates
-    the whole token-hash array once PER BIT (nbits full passes per row) and
-    is kept as the single-expression variant for inline use. Duplicate
-    tokens count once per occurrence, exactly like simhash64's transform.
+    per id. Same values as the single-expression `simhash64` of
+    tests/hashing_reference.py (pinned by test), which evaluates the whole
+    token-hash array once PER BIT. Duplicate tokens count once per
+    occurrence, exactly like that reference's transform.
     Ids with empty/missing token arrays do not appear (explode drops them);
     callers union them back with simhash 0 if needed."""
     e = df.select(F.col(id_col).alias("id"), F.explode(toks).alias("s"))
@@ -201,24 +100,6 @@ def simhash_exploded(df, id_col: str, toks: Column, nbits: int = 32):
             1 << j
         )
     return g.select("id", out.alias("simhash"))
-
-
-def minhash_band_keys_exploded(
-    df,
-    id_col: str,
-    shingles: Column,
-    bands: int,
-    rows: int,
-    hash_fn=None,
-    carry_cols: list[str] | None = None,
-):
-    """Column-expression MinHash-LSH keys: (id, [carry_cols...],
-    block_key), one row per band — the reference tests/test_kernels.py
-    checks minhash_band_keys_np against. `hash_fn` as in
-    minhash_sig_table."""
-    sig = minhash_sig_table(df, id_col, shingles, bands * rows,
-                            hash_fn=hash_fn, carry_cols=carry_cols)
-    return band_keys_from_sig_table(sig, bands, rows, carry_cols=carry_cols)
 
 
 # Spark's XXH64 (catalyst.expressions.XXH64): F.xxhash64 hashes a string's
@@ -366,6 +247,18 @@ def minhash_np(h: np.ndarray, ptr: np.ndarray, num_hashes: int) -> np.ndarray:
     return sig
 
 
+def _base_name(hash_fn) -> str:
+    """The numpy kernel's name for a MinHash base hash: None and poly_hash
+    -> "poly_hash", xxhash64_mod -> "xxhash64_mod"; ValueError otherwise."""
+    if hash_fn is None or hash_fn is poly_hash:
+        return "poly_hash"
+    if hash_fn is xxhash64_mod:
+        return "xxhash64_mod"
+    raise ValueError(
+        f"hash_fn must be poly_hash or xxhash64_mod, got {hash_fn!r}"
+    )
+
+
 def _check_minhash_contract(k: int, num_hashes: int, base: str) -> None:
     max_k = POLY_MAX_K if base == "poly_hash" else XXH_MAX_BYTES // 4
     if not 1 <= k <= max_k:
@@ -379,26 +272,28 @@ def _check_minhash_contract(k: int, num_hashes: int, base: str) -> None:
         )
 
 
-def minhash_sigs_np_udf(k: int, num_hashes: int):
+def minhash_sigs_np_udf(k: int, num_hashes: int, hash_fn=None):
     """Factory: pandas UDF computing the MinHash signature array (length
     `num_hashes`) over the k-char shingles of an ALREADY-NORMALIZED string
-    column — bit-identical to
-    ``minhash_sig_table(df, id, char_shingles(nt, k, normalize=False), n)``
-    with the default poly_hash base (guide §4.2: hand the whole batch to
-    numpy instead of the explode → distinct-vocabulary hash join → groupBy
-    shape, which costs three shuffles of the corpus-sized (id, shingle)
-    frame plus the interpreted per-char aggregate; measured r8 on dedup03's
-    sig tier: 1.78 s wall / 11.3 CPU-s → one map pass). The arithmetic is
-    shingle_hashes_np + minhash_np (exactness argued there; parity pinned
-    by tests/test_functions.py). NULL inputs must be filtered by the
-    caller (the explode path drops ids with a NULL shingle array;
-    ``.where(col.isNotNull())`` preserves that contract).
+    column, `hash_fn` (poly_hash by default, or xxhash64_mod) as the base
+    hash — bit-identical to the explode -> groupBy(id) signature table of
+    tests/hashing_reference.py over ``char_shingles(nt, k,
+    normalize=False)`` (guide §4.2: hand the whole batch to numpy instead
+    of shuffling the corpus-sized (id, shingle) frame; measured r8 on
+    dedup03's poly_hash sig tier: 1.78 s wall / 11.3 CPU-s -> one map
+    pass). The arithmetic is shingle_hashes_np + minhash_np (exactness
+    argued there; parity pinned by tests/test_functions.py). NULL inputs
+    must be filtered by the caller (``.where(col.isNotNull())``), as the
+    reference drops them under poly_hash.
 
-    Raises ValueError outside the exact contract: ``1 <= k <= 9`` (int64
-    Horner) and ``1 <= num_hashes <= len(PERMS)`` (there are no more
-    permutations; the signature would be uninitialised memory).
+    Raises ValueError for any other hash_fn and outside the exact
+    contract: ``1 <= k <= 9`` for poly_hash (int64 Horner), ``4*k <= 31``
+    UTF-8 bytes for xxhash64_mod, and ``1 <= num_hashes <= len(PERMS)``
+    (there are no more permutations; the signature would be uninitialised
+    memory).
     """
-    _check_minhash_contract(k, num_hashes, "poly_hash")
+    base = _base_name(hash_fn)
+    _check_minhash_contract(k, num_hashes, base)
     import pandas as pd
     import pyarrow as pa
     from pyspark.sql.functions import pandas_udf
@@ -409,9 +304,7 @@ def minhash_sigs_np_udf(k: int, num_hashes: int):
     # 'pd.Series' would not resolve at pandas_udf inspection time
     @pandas_udf(ArrayType(LongType()))
     def _sigs(texts):
-        h, ptr = shingle_hashes_np(
-            pa.array(texts.fillna(""), type=pa.string()), k, "poly_hash"
-        )
+        h, ptr = shingle_hashes_np(pa.array(texts, type=pa.string()), k, base)
         return pd.Series(list(minhash_np(h, ptr, num_hashes)), dtype=object)
 
     return _sigs
@@ -430,31 +323,23 @@ def minhash_band_keys_np(
     """(id, [carry_cols...], block_key) MinHash-LSH band keys of an
     ALREADY-NORMALIZED text column from ONE mapInArrow pass: per Arrow
     batch, shingle_hashes_np -> minhash_np -> '<band>|<v>_<v>' strings
-    built by pyarrow compute. Bit-identical to
-    ``minhash_band_keys_exploded(df, id_col, char_shingles(text, k,
-    normalize=False), bands, rows, hash_fn, carry_cols)`` (multiset pinned
-    by tests/test_kernels.py) without its explode -> groupBy(id) exchange
-    and its bands*rows-aggregate expression tree — given one row per
-    (id, carry...), which the reference's groupBy would merge.
+    built by pyarrow compute. Bit-identical to the explode -> groupBy(id)
+    band keys of tests/hashing_reference.py over ``char_shingles(text, k,
+    normalize=False)`` (multiset pinned by tests/test_kernels.py) without
+    their exchange and bands*rows-aggregate expression tree — given one
+    row per (id, carry...), which the reference's groupBy would merge.
 
     `hash_fn`: poly_hash (default) or xxhash64_mod. NULL text keys like
-    the reference: dropped under poly_hash (its NULL shingle never joins
-    the hashed vocabulary), one NULL shingle hashed to xxhash64's seed
-    under xxhash64_mod. Raises ValueError for any other hash_fn, for
+    the reference: dropped under poly_hash (poly_hash of its one NULL
+    shingle is NULL), that NULL shingle hashed to xxhash64's seed under
+    xxhash64_mod. Raises ValueError for any other hash_fn, for
     bands*rows > len(PERMS), and for a k outside the numpy kernel's exact
     domain (k <= 9 for poly_hash, 4*k <= 31 UTF-8 bytes for xxhash64)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql.types import StringType, StructField, StructType
 
-    if hash_fn is None or hash_fn is poly_hash:
-        base = "poly_hash"
-    elif hash_fn is xxhash64_mod:
-        base = "xxhash64_mod"
-    else:
-        raise ValueError(
-            f"hash_fn must be poly_hash or xxhash64_mod, got {hash_fn!r}"
-        )
+    base = _base_name(hash_fn)
     if bands < 1 or rows < 1:
         raise ValueError(f"bands and rows must be >= 1, got {bands}, {rows}")
     nh = bands * rows
@@ -506,7 +391,7 @@ def minhash_band_keys_np(
 
 def band_keys_from_sig_array(sig: Column, bands: int, rows: int) -> Column:
     """array<string> of band keys from a signature ARRAY column — same key
-    format as band_keys_from_sig_table ('<band>|<v>_<v>...')."""
+    format as minhash_band_keys_np ('<band>|<v>_<v>...')."""
     keys = [
         F.concat_ws(
             "|",
@@ -521,19 +406,13 @@ def band_keys_from_sig_array(sig: Column, bands: int, rows: int) -> Column:
     return F.array(*keys)
 
 
-def sig_agreement(a: Column, b: Column) -> Column:
-    """Fraction of agreeing MinHash positions — an unbiased estimate of the
-    shingle jaccard. Used as a cheap pre-filter before exact verification."""
-    return F.size(
-        F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda v: v)
-    ) / F.size(a).cast("double")
-
-
 def sig_agreement_flat(a: Column, b: Column, num_hashes: int) -> Column:
-    """sig_agreement for a KNOWN signature length, unrolled into flat
-    position comparisons (whole-stage codegen; the zip_with/filter form
-    runs interpreted per element — r8, measured on dedup03's 464k-pair
-    agreement tier). Same value for equal-length arrays."""
+    """Fraction of agreeing MinHash positions of two signatures of KNOWN
+    length — an unbiased estimate of the shingle jaccard, used as a cheap
+    pre-filter before exact verification. Unrolled into flat position
+    comparisons (whole-stage codegen; the zip_with/filter form of
+    tests/hashing_reference.py runs interpreted per element — r8, measured
+    on dedup03's 464k-pair agreement tier)."""
     agree = sum(
         (a.getItem(i) == b.getItem(i)).cast("int") for i in range(num_hashes)
     )

@@ -6,9 +6,9 @@ The "index" is a table: every record emits blocking keys (MinHash-LSH bands
 over char shingles, random-hyperplane embedding buckets, or a cheap prefix
 key); candidate pairs are an equi-self-join on the key. The MinHash band keys
 come from one Arrow-batched numpy kernel (hashing.minhash_band_keys_np, run
-through mapInArrow, bit-identical to the Column-expression reference
-hashing.minhash_band_keys_exploded); text normalization and the extra keys
-stay JVM Column expressions.
+through mapInArrow, bit-identical to the Column-expression reference in
+tests/hashing_reference.py); text normalization and the extra keys stay JVM
+Column expressions.
 
 Skew handling (north_rule): hot keys (a mention surface occurring millions of
 times at 10^12 scale would make one block quadratic) are bounded by

@@ -48,8 +48,8 @@ def sql_poly_hash(e: str) -> str:
 
 
 def sql_minhash(e_shingles: str, i: int) -> str:
-    """Mirror of hashing.minhash_sig_table column mh{i}: min over shingles
-    of perm_i(poly)."""
+    """Mirror of column i of hashing.minhash_np over poly_hash shingle
+    hashes: min over shingles of perm_i(poly)."""
     a, b = PERMS[i]
     return (
         f"coalesce(list_min(list_transform({e_shingles},"
@@ -57,21 +57,9 @@ def sql_minhash(e_shingles: str, i: int) -> str:
     )
 
 
-def sql_band_key(e_shingles: str, band: int, rows: int) -> str:
-    """Mirror of the `band`-th block_key of hashing.band_keys_from_sig_table."""
-    parts = ", ".join(
-        f"CAST({sql_minhash(e_shingles, band * rows + r)} AS VARCHAR)"
-        for r in range(rows)
-    )
-    if rows == 1:
-        joined = parts
-    else:
-        joined = f"concat_ws('_', {parts})"
-    return f"concat('{band}', '|', {joined})"
-
-
 def sql_simhash(e_tokens: str, nbits: int = 32) -> str:
-    """Mirror of hashing.simhash64 (portable variant)."""
+    """Mirror of simhash64 in tests/hashing_reference.py (the per-bit
+    SimHash that hashing.simhash_exploded computes by groupBy)."""
     hashes = f"list_transform({e_tokens}, s -> {sql_poly_hash('s')})"
     terms = []
     for j in range(nbits):

@@ -24,11 +24,9 @@ from blink_reloaded_spark.functions import text as tx
 from blink_reloaded_spark.functions.hashing import (
     band_keys_from_sig_array,
     exact_text_key,
-    minhash_sig_table,
     minhash_sigs_np_udf,
     poly_hash,
     sig_agreement_flat,
-    sig_array_from_sig_table,
     simhash_exploded,
 )
 from blink_reloaded_spark.functions.similarity import (
@@ -576,13 +574,14 @@ def dedup03_minhash_lsh(spark, sf_dir, hash_fn=None):
     short-shingle vocabulary) — not taken.
 
     r8 restructure (same three tiers, same output, ~2.2x faster): the sig
-    tier is a numpy batch kernel (minhash_sigs_np_udf, bit-parity pinned);
-    the agreement filter rides the band join map-side before the dedup
-    exchange; the exact verify is one array_intersect per surviving pair
-    over the stored distinct-shingle arrays instead of the explode-join
-    (which built a candidates x |shingles| row intermediate). Candidate
-    admission counts are bit-identical (463632 band candidates / 44445
-    survivors at sf0.1, matching DIAG_DEDUP03.json).
+    tier is a numpy batch kernel (minhash_sigs_np_udf, bit-parity pinned;
+    both base hashes now run it); the agreement filter rides the band join
+    map-side before the dedup exchange; the exact verify is one
+    array_intersect per surviving pair over the stored distinct-shingle
+    arrays instead of the explode-join (which built a candidates x
+    |shingles| row intermediate). Candidate admission counts are
+    bit-identical (463632 band candidates / 44445 survivors at sf0.1,
+    matching DIAG_DEDUP03.json).
     """
     # own the parallelism BEFORE the shingle transform: a small parquet scan
     # is 1 split, and the shingle/signature pass is the heaviest map-side
@@ -599,44 +598,24 @@ def dedup03_minhash_lsh(spark, sf_dir, hash_fn=None):
         # shingle (see char_shingles docstring)
         .select("doc_id", tx.normalize_text(F.col("text")).alias("nt"))
     )
-    # ONE signature table feeds both band keys and agreement signatures
-    # (round 1 recomputed the full shingle-hash pass per consumer).
-    # hash_fn=None -> portable poly_hash via the numpy batch kernel
-    # (minhash_sigs_np_udf — bit-identical values, pinned by
-    # tests/test_functions.py::test_minhash_numpy_kernel_parity; r8 guide
-    # §4.2: replaces the explode → distinct-shingle hash join → groupBy
-    # shape, 3 shuffles of the (doc, shingle) frame, with one map pass —
-    # and shingles + signature now ride ONE lazy checkpoint, so the whole
-    # query is a single job). The bench also times
-    # hash_fn=hashing.xxhash64_mod, the production fast path, which keeps
-    # the native-JVM sig-table shape: its sig tier is already cheap (the
-    # base hash itself IS reproducible in numpy — hashing.xxhash64_np,
-    # pinned against F.xxhash64 — and blocking_keys uses it that way).
-    if hash_fn is None:
-        d = base.select(
-            "doc_id",
-            "nt",
-            tx.char_shingles(F.col("nt"), 5, normalize=False).alias("sh"),
-            minhash_sigs_np_udf(5, nh)(F.col("nt")).alias("sig"),
-        ).localCheckpoint(eager=False)
-        # null-text docs never entered the explode-path sig table — filter
-        # them from the keyed side the same way (the corpus has none; the
-        # contract is preserved regardless)
-        sigs = d.where(F.col("nt").isNotNull()).select("doc_id", "sig")
-    else:
-        # lazy checkpoints here too (r8): plan truncation + one
-        # materialization per frame, but no dedicated job barrier each
-        d = base.select(
-            "doc_id",
-            "nt",
-            tx.char_shingles(F.col("nt"), 5, normalize=False).alias("sh"),
-        ).localCheckpoint(eager=False)
-        sig_t = minhash_sig_table(
-            d, "doc_id", F.col("sh"), nh, hash_fn=hash_fn
-        ).localCheckpoint(eager=False)
-        sigs = sig_array_from_sig_table(sig_t, nh).withColumnRenamed(
-            "id", "doc_id"
-        )
+    # ONE signature pass feeds both band keys and agreement signatures:
+    # the numpy batch kernel (minhash_sigs_np_udf) over either base hash —
+    # hash_fn=None is the portable poly_hash, hash_fn=hashing.xxhash64_mod
+    # the production fast path (numpy port of Spark's xxhash64). Values are
+    # bit-identical to the explode -> groupBy(id) signature table (pinned by
+    # tests/test_functions.py::test_minhash_numpy_kernel_parity); r8 guide
+    # §4.2: one map pass instead of shuffling the (doc, shingle) frame, and
+    # shingles + signature ride ONE lazy checkpoint, so the whole query is
+    # a single job.
+    d = base.select(
+        "doc_id",
+        "nt",
+        tx.char_shingles(F.col("nt"), 5, normalize=False).alias("sh"),
+        minhash_sigs_np_udf(5, nh, hash_fn)(F.col("nt")).alias("sig"),
+    ).localCheckpoint(eager=False)
+    # null-text docs get no signature (the kernel's NULL contract) — the
+    # corpus has none; the contract is kept regardless
+    sigs = d.where(F.col("nt").isNotNull()).select("doc_id", "sig")
     # band-bucket self-join with the signature RIDING the key rows (144B of
     # fixed payload per key row), so the agreement filter runs MAP-SIDE in
     # the join stage — before any distinct — and the dedup exchange only

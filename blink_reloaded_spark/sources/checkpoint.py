@@ -7,7 +7,7 @@ SURVEY.md O1/S7/S8). Here each pipeline stage writes an atomic table; a rerun
 skips any stage whose checkpoint is complete, so a killed job resumes without
 recomputation.
 
-Format: Iceberg when an Iceberg catalog is configured on the session
+Format: Iceberg when a catalog named `iceberg` is configured on the session
 (production path — snapshot isolation, schema evolution, time travel);
 otherwise parquet-directory checkpoints with an atomic `_MANIFEST.json`
 written after the data commit (the parquet write itself is atomic via
@@ -30,9 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 MANIFEST = "_MANIFEST.json"
 
 
-def _iceberg_available(spark: SparkSession, catalog: str) -> bool:
+def _iceberg_available(spark: SparkSession) -> bool:
     try:
-        impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
+        impl = spark.conf.get("spark.sql.catalog.iceberg", None)
     except Exception:
         impl = None
     return impl is not None
@@ -51,14 +51,13 @@ class CheckpointManager:
 
     spark: SparkSession
     root: str
-    catalog: str = "spark_catalog"
     run_id: str = "run0"
     use_iceberg: bool | None = None
     _log: list[dict[str, Any]] = field(default_factory=list)
 
     def __post_init__(self) -> None:
         if self.use_iceberg is None:
-            self.use_iceberg = _iceberg_available(self.spark, "iceberg")
+            self.use_iceberg = _iceberg_available(self.spark)
         if not self.use_iceberg:
             os.makedirs(self.root, exist_ok=True)
 
@@ -86,7 +85,6 @@ class CheckpointManager:
         df: DataFrame,
         inputs: list[str] | None = None,
         metrics: dict[str, Any] | None = None,
-        partition_by: list[str] | None = None,
         fingerprint: str | None = None,
     ) -> DataFrame:
         """Write a stage table + manifest (lineage: inputs, row/partition
@@ -103,10 +101,6 @@ class CheckpointManager:
                 # a rerun with changed params rebuilds instead of returning
                 # the stale table
                 w = w.tableProperty("blink.fingerprint", fingerprint)
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
             w.createOrReplace()
             out = self.spark.read.table(full)
             # same row/file-count lineage as the parquet manifest (VERDICT
@@ -143,16 +137,13 @@ class CheckpointManager:
             self._log.append(man)
         else:
             path = self._dir(name)
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
+            df.write.mode("overwrite").parquet(path)
             out = self.spark.read.parquet(path)
             # per-partition lineage: file-level row counts from the committed
             # parquet footers (cheap metadata scan)
             n_files = len(
                 [f for f in os.listdir(path) if f.endswith(".parquet")]
-            ) if not partition_by else None
+            )
             man = {
                 "stage": name,
                 "run_id": self.run_id,
@@ -192,8 +183,6 @@ class CheckpointManager:
         name: str,
         build: Any,
         inputs: list[str] | None = None,
-        partition_by: list[str] | None = None,
-        force: bool = False,
         fingerprint: str | None = None,
     ) -> DataFrame:
         """Resume-aware stage: skip `build` entirely when the checkpoint is
@@ -207,7 +196,7 @@ class CheckpointManager:
         params against the same checkpoint_dir must not yield old output.
         None opts out (existence-only resume, the round-1 behavior).
         """
-        if not force and self.exists(name):
+        if self.exists(name):
             stale = False
             if fingerprint is not None:
                 old = self._stored_fingerprint(name)
@@ -217,10 +206,7 @@ class CheckpointManager:
                 return self.read(name)
             self._log.append({"stage": name, "rebuilt": "fingerprint_mismatch"})
         df = build()
-        return self.write(
-            name, df, inputs=inputs, partition_by=partition_by,
-            fingerprint=fingerprint,
-        )
+        return self.write(name, df, inputs=inputs, fingerprint=fingerprint)
 
     @property
     def log(self) -> list[dict[str, Any]]:

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""VERDICT r5 #2, part 2: er04 in ISOLATION is flat (scripts/diag_er04.py:
+"""VERDICT r5 #2, part 2: er04 in ISOLATION is flat (scripts/diag_er04.py, now in git history:
 walls fall 14.5 -> 2.7s over 8 trials, shm/heap/RDD counts all bounded).
 The driver's rising trials [6.84, 9.37, 14.95] happened after six other
 headline entries ran 3 trials each in the same process. Reproduce that

@@ -10,9 +10,9 @@ fixture suites the engine is accepted on (FIXTURES.md):
                (labeled pairs from a 25% mention sample: the hot surface
                makes the full pair self-join quadratic)
   kb_free    — no catalogue: LSH self-join + transitive clustering at
-               threshold 0.70 (diagnosed r4, scripts/diagnose_kb_free.py:
-               at the old 0.8 threshold, 81/83 missed gold pairs were
-               BLOCKED but under-scored — abbreviation pairs like
+               threshold 0.70 (diagnosed r4 by scripts/diagnose_kb_free.py,
+               now in git history: at the old 0.8 threshold, 81/83
+               missed gold pairs were BLOCKED but under-scored — abbreviation pairs like
                "jopi systems"~"jopi sys" score 0.794 — and only 2/83 were
                LSH misses; the sweep gives recall 1.0 at precision
                0.9989 for thr in [0.60, 0.70] vs recall 0.92 at 0.80

@@ -13,7 +13,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from blink_reloaded_spark.functions.embedding import DIM, hashed_embedding_udf
-from blink_reloaded_spark.functions.hashing import P, PERMS, poly_hash
+from blink_reloaded_spark.functions.hashing import (
+    P,
+    PERMS,
+    minhash_sigs_np_udf,
+    poly_hash,
+    xxhash64_mod,
+)
 from blink_reloaded_spark.functions.similarity import jaro_winkler_np
 from blink_reloaded_spark.functions.text import rolling_fingerprint, lang_id_col
 from blink_reloaded_spark.oracle import sql_poly_hash, sql_norm
@@ -109,7 +115,9 @@ def test_fingerprint_and_langid(spark):
 def test_simhash_exploded_equals_inline(spark):
     from pyspark.sql import functions as F
 
-    from blink_reloaded_spark.functions.hashing import simhash64, simhash_exploded
+    from hashing_reference import simhash64
+
+    from blink_reloaded_spark.functions.hashing import simhash_exploded
     from blink_reloaded_spark.functions.text import tokens
 
     rows = [
@@ -130,15 +138,15 @@ def test_simhash_exploded_equals_inline(spark):
     assert inline[0] == inline[1] and inline[0] != inline[2]
 
 
-def test_minhash_numpy_kernel_parity(spark):
-    """r8: the numpy MinHash batch kernel (minhash_sigs_np_udf) must be
-    bit-identical to the explode -> poly_hash -> groupBy-min sig table on
-    normalized text, including the short-string (<k), empty-string and
-    non-ASCII-BMP edge cases char_shingles defines."""
-    from blink_reloaded_spark.functions.hashing import (
-        minhash_sig_table,
-        minhash_sigs_np_udf,
-    )
+@pytest.mark.parametrize("hash_fn", [poly_hash, xxhash64_mod], ids=["poly", "xxh"])
+def test_minhash_numpy_kernel_parity(spark, hash_fn):
+    """The numpy MinHash batch kernel (minhash_sigs_np_udf) must be
+    bit-identical to the explode -> base hash -> groupBy-min signature
+    table of tests/hashing_reference.py on normalized text, for both base
+    hashes, including the short-string (<k), empty-string, non-ASCII-BMP
+    and non-BMP edge cases char_shingles defines."""
+    from hashing_reference import minhash_sig_table, sig_array_from_sig_table
+
     from blink_reloaded_spark.functions.text import char_shingles
 
     rows = [
@@ -150,30 +158,29 @@ def test_minhash_numpy_kernel_parity(spark):
         (5, "abcde"),     # exactly k
         (6, "naïve café résumé"),  # BMP non-ASCII
         (7, "aaaaaaa"),   # duplicate shingles collapse
+        (8, "東京 a😀b😀c 𝔘𝔫𝔦"),  # CJK and non-BMP: 4-byte UTF-8 shingles
     ]
-    d = spark.createDataFrame(rows, "id long, nt string")
-    ref = {
-        r["id"]: [r[f"mh{i}"] for i in range(18)]
-        for r in minhash_sig_table(
-            d, "id", char_shingles(F.col("nt"), 5, normalize=False), 18
-        ).collect()
-    }
+    d = spark.createDataFrame(rows, "id long, nt string").repartition(2)
+    sig_t = minhash_sig_table(
+        d, "id", char_shingles(F.col("nt"), 5, normalize=False), 18, hash_fn=hash_fn
+    )
+    ref = {r["id"]: list(r["sig"]) for r in sig_array_from_sig_table(sig_t, 18).collect()}
     got = {
         r["id"]: list(r["sig"])
         for r in d.select(
-            "id", minhash_sigs_np_udf(5, 18)(F.col("nt")).alias("sig")
+            "id", minhash_sigs_np_udf(5, 18, hash_fn)(F.col("nt")).alias("sig")
         ).collect()
     }
+    assert len(ref) == len(rows)
     assert got == ref
 
 
 def test_minhash_numpy_kernel_rejects_out_of_contract_params():
     """The numpy MinHash kernel is exact only inside its contract: int64
     Horner over k code points < 2^21 overflows at k=10, and more hashes than
-    PERMS would return uninitialised memory. Both must fail at factory time,
-    not return plausible signatures."""
-    from blink_reloaded_spark.functions.hashing import PERMS, minhash_sigs_np_udf
-
+    PERMS would return uninitialised memory, and XXH64's short path covers
+    31 UTF-8 bytes (k=7). All must fail at factory time, not return
+    plausible signatures; so must a base hash the kernel does not have."""
     for k in (0, 10):
         with pytest.raises(ValueError, match="k"):
             minhash_sigs_np_udf(k, 8)
@@ -183,16 +190,20 @@ def test_minhash_numpy_kernel_rejects_out_of_contract_params():
     # the contract edges themselves are accepted
     minhash_sigs_np_udf(1, 1)
     minhash_sigs_np_udf(9, len(PERMS))
+    minhash_sigs_np_udf(7, 8, xxhash64_mod)
+    with pytest.raises(ValueError, match="k must"):
+        minhash_sigs_np_udf(8, 8, xxhash64_mod)
+    with pytest.raises(ValueError, match="hash_fn"):
+        minhash_sigs_np_udf(5, 8, lambda c: F.xxhash64(c))
 
 
 def test_sig_agreement_flat_equals_lambda(spark):
     """r8: the unrolled codegen agreement must equal the zip_with form."""
     import random as _r
 
-    from blink_reloaded_spark.functions.hashing import (
-        sig_agreement,
-        sig_agreement_flat,
-    )
+    from hashing_reference import sig_agreement
+
+    from blink_reloaded_spark.functions.hashing import sig_agreement_flat
 
     rng = _r.Random(5)
     rows = []
@@ -215,10 +226,8 @@ def test_minhash_xxhash64_band_semantics(spark):
     duplicate-heavy fixture is identical to the portable poly_hash path
     (exact dups collide deterministically under ANY base hash; the
     high-jaccard near-dup pair has miss prob (1-j^2)^bands ~ 1e-7)."""
-    from blink_reloaded_spark.functions.hashing import (
-        minhash_band_keys_exploded,
-        xxhash64_mod,
-    )
+    from hashing_reference import minhash_band_keys_exploded
+
     from blink_reloaded_spark.functions.text import char_shingles, normalize_text
 
     base = "the quick brown fox jumps over the lazy dog again and again " * 3
@@ -277,31 +286,6 @@ def test_jw_nul_never_matches_padding(spark):
     assert got == pytest.approx(want)
     # NUL-vs-NUL strings: no real matches -> 0.0, not NaN/crash
     assert jaro_winkler_np(pd.Series(["\x00\x00"]), pd.Series(["\x00"]))[0] == 0.0
-
-
-def test_id_shingle_hashes_dedup_keyed_on_resolved_fn(spark):
-    """ADVICE r3: the distinct-vocabulary optimization must key on the
-    RESOLVED hash function — passing poly_hash explicitly (the documented
-    oracle-parity path) keeps the distinct+join shape; a native hash
-    (xxhash64_mod) stays in-place."""
-    from blink_reloaded_spark.functions import hashing
-
-    df = spark.createDataFrame(
-        [(1, ["ab", "bc", "ab"]), (2, ["bc"])], "id long, sh array<string>"
-    )
-
-    def has_join(d):
-        return "Join" in d._jdf.queryExecution().optimizedPlan().toString()
-
-    explicit = hashing.id_shingle_hashes(df, "id", F.col("sh"),
-                                         hash_fn=hashing.poly_hash)
-    default = hashing.id_shingle_hashes(df, "id", F.col("sh"))
-    native = hashing.id_shingle_hashes(df, "id", F.col("sh"),
-                                       hash_fn=hashing.xxhash64_mod)
-    assert has_join(explicit) and has_join(default) and not has_join(native)
-    assert sorted(map(tuple, explicit.collect())) == sorted(
-        map(tuple, default.collect())
-    )
 
 
 def test_vectorized_embedding_kernels_match_column_forms(spark):

@@ -1,7 +1,8 @@
 """Differential tests of the numpy blocking kernels against their Spark
 references: numpy XXH64 vs F.xxhash64, and the mapInArrow band-key kernel
 (operators.blocking.blocking_keys) vs the explode -> groupBy(id)
-minhash_band_keys_exploded reference, compared as key multisets."""
+minhash_band_keys_exploded reference of tests/hashing_reference.py,
+compared as key multisets."""
 
 from __future__ import annotations
 
@@ -16,7 +17,6 @@ from blink_reloaded_spark.functions.hashing import (
     PERMS,
     XXH_MAX_BYTES,
     XXH_SEED,
-    minhash_band_keys_exploded,
     minhash_band_keys_np,
     poly_hash,
     xxhash64_mod,
@@ -24,6 +24,7 @@ from blink_reloaded_spark.functions.hashing import (
 )
 from blink_reloaded_spark.functions.text import char_shingles, normalize_text
 from blink_reloaded_spark.operators.blocking import blocking_keys
+from hashing_reference import minhash_band_keys_exploded
 
 # code point pools by UTF-8 width; the 3-byte pool skips the surrogates
 _POOLS = {

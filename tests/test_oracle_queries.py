@@ -65,3 +65,19 @@ def test_entry_runs(spark):
     df = entrymod.entry(spark)
     assert df.count() >= 0
     assert set(df.columns) == {"mention_id", "cluster_id"}
+
+
+def test_dedup03_xxhash64_equals_exact_jaccard(spark):
+    """dedup03 on the xxhash64 base (the production fast path, no DuckDB
+    oracle of its own) returns exactly the exact n-gram jaccard pairs of
+    dedup02 — the LSH, agreement and verify tiers lose no near-dup."""
+    from blink_reloaded_spark.functions.hashing import xxhash64_mod
+    from blink_reloaded_spark.queries import (
+        dedup02_ngram_jaccard,
+        dedup03_minhash_lsh,
+    )
+
+    got = dedup03_minhash_lsh(spark, SF_UNIT, hash_fn=xxhash64_mod).toPandas()
+    want = dedup02_ngram_jaccard(spark, SF_UNIT).toPandas()
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(_normalize(got), _normalize(want))
