@@ -1,9 +1,12 @@
 """Scalar / vectorized functions: text normalization, shingling, hashing,
 string similarity, hashed embeddings. JVM-side Column expressions wherever
 Spark built-ins suffice (reference inventory SURVEY.md §2.8); Arrow-batched
-Python only for Jaro-Winkler, the hashed encoder and the one numpy MinHash
-kernel behind hashing.minhash_sigs_np_udf and hashing.minhash_band_keys_np
-(its Column-expression references are in tests/hashing_reference.py)."""
+Python only for Jaro-Winkler, the hashed encoder, the vector kernels
+(embedding.cosine_similarity, dot_product_udf, hyperplane_buckets_udf) and
+the one numpy MinHash kernel behind hashing.minhash_sigs_np_udf and
+hashing.minhash_band_keys_np. The Column-expression references of the vector
+and MinHash kernels are in tests/embedding_reference.py and
+tests/hashing_reference.py."""
 
 from blink_reloaded_spark.functions.text import (  # noqa: F401
     normalize_text,
@@ -23,7 +26,7 @@ from blink_reloaded_spark.functions.similarity import (  # noqa: F401
 )
 from blink_reloaded_spark.functions.embedding import (  # noqa: F401
     hashed_embedding_udf,
-    dot_product,
+    dot_product_udf,
     cosine_similarity,
-    hyperplane_bucket,
+    hyperplane_buckets_udf,
 )

@@ -1,7 +1,9 @@
 """Embedding kernels: deterministic hashed-feature encoder (the sandbox
 stand-in for the reference's BERT bi-encoder, `blink/biencoder/biencoder.py:
-159-170`), dot/cosine as JVM array expressions, and random-hyperplane sign
-buckets (the LSH analogue of the FAISS index, `blink/indexer/faiss_indexer.py`).
+159-170`), Arrow-batched numpy dot/cosine, and random-hyperplane sign buckets
+(the LSH analogue of the FAISS index, `blink/indexer/faiss_indexer.py`).
+The sequential JVM Column forms these kernels are checked against live in
+tests/embedding_reference.py.
 
 The encoder is a hashed char-trigram count projection: trigram g increments
 dimension h(g) % dim, then L2-normalize. It is a deterministic function of
@@ -13,8 +15,6 @@ signature.
 """
 
 from __future__ import annotations
-
-
 
 import numpy as np
 import pandas as pd
@@ -161,53 +161,62 @@ def pair_cos_from_text_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 pair_cos_from_text_udf = pair_cos_from_text_udf.asNondeterministic()
 
 
+def _vec_matrices(
+    *cols: pd.Series, dim: int | None = None
+) -> tuple[list[np.ndarray], np.ndarray | None]:
+    """Series of array<float/double> rows -> one float64 (n, dim) matrix per
+    column, plus the mask of rows where every column is non-NULL, or None
+    when no row is NULL. `dim` defaults to the row length of the batch; a
+    row of any other length raises.
+
+    A batch of equal-length non-NULL rows (every pipeline batch) takes one
+    np.asarray per column and nothing else. Only a batch that fails it is
+    looked at row by row: NULL rows are zero-filled and callers emit NULL
+    for them, as the JVM Column forms do (an aggregate over a NULL array is
+    NULL)."""
+    try:
+        mats = [np.asarray(c.to_list(), dtype=np.float64) for c in cols]
+    except ValueError:  # ragged: a NULL or wrong-length row
+        mats = []
+    if mats and all(m.ndim == 2 and m.shape == mats[0].shape for m in mats) and (
+        dim is None or mats[0].shape[1] == dim
+    ):
+        return mats, None
+    ok = ~np.logical_or.reduce([c.isna().to_numpy() for c in cols])
+    mats = []
+    for c in cols:
+        rows = c[ok].to_list()
+        if dim is None:
+            dim = len(rows[0]) if rows else 0
+        bad = [len(r) for r in rows if len(r) != dim]
+        if bad:
+            raise ValueError(
+                f"vector rows must have {dim} elements; got a row of {bad[0]}"
+            )
+        m = np.zeros((len(c), dim))
+        if rows:
+            m[ok] = np.asarray(rows, dtype=np.float64)
+        mats.append(m)
+    return mats, ok
+
+
+def _null_rows(values: np.ndarray, ok: np.ndarray | None) -> pd.Series:
+    """Per-row kernel output with NULL where `_vec_matrices` saw a NULL."""
+    if ok is not None:
+        values[~ok] = np.nan
+    return pd.Series(values)
+
+
 @pandas_udf(DoubleType())
 def dot_product_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-vectorized dot product of two fixed-dim array<float> columns
-    (numpy row-wise). The hot-path alternative to `dot_product`: Spark's
-    higher-order aggregate runs INTERPRETED per element, i.e. ~256 virtual
-    calls per pair — measured as the dominant cost of the pair scorer.
-    numpy's pairwise summation can differ from the sequential JVM sum in
-    the last ulp; scores are rounded to 6dp downstream, and the pipeline's
-    determinism contract is per-platform (same input -> same output), which
-    numpy satisfies. Null vectors are not supported (pipeline vectors are
-    always present); ragged batches raise a clear shape error from the
-    reshape below rather than a misleading AxisError (ADVICE r2)."""
-    if len(a) == 0:
-        return pd.Series([], dtype=float)
-    ma = np.asarray(a.to_list(), dtype=np.float64).reshape(len(a), -1)
-    mb = np.asarray(b.to_list(), dtype=np.float64).reshape(len(b), -1)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-
-def dot_product(a: Column, b: Column) -> Column:
-    """Dot product of two array<float/double> columns, JVM-side.
-
-    Sequential left-to-right summation in double — matches DuckDB
-    list_dot_product on double lists for oracle parity.
-    """
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity, rounded to 6dp for engine-portable comparison."""
-    return F.round(
-        dot_product(a, b) / F.greatest(l2_norm(a) * l2_norm(b), F.lit(1e-12)), 6
-    )
+    (numpy row-wise einsum): the pair scorer's cos term. numpy's pairwise
+    summation can differ from a sequential sum in the last ulp; scores are
+    rounded to 6dp downstream, and the pipeline's determinism contract is
+    per-platform (same input -> same output), which numpy satisfies. A NULL
+    vector gives NULL (see _vec_matrices)."""
+    (ma, mb), ok = _vec_matrices(a, b)
+    return _null_rows(np.einsum("ij,ij->i", ma, mb), ok)
 
 
 def _hyperplanes(nplanes: int, dim: int = DIM, seed: int = 42) -> np.ndarray:
@@ -219,42 +228,39 @@ def _hyperplanes(nplanes: int, dim: int = DIM, seed: int = 42) -> np.ndarray:
 
 @pandas_udf(DoubleType())
 def cosine_raw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Unrounded cosine similarity, numpy-batched — the vectorized
-    replacement for `cosine_similarity`'s interpreted dot+norm aggregates
-    on hot re-rank paths (~192 interpreted ops/pair -> one einsum). Callers
-    apply the same F.round(..., 6) the Column version uses, so rounding
-    semantics (JVM HALF_UP) are identical; the pre-rounding value differs
-    from the sequential JVM sum only in final ulps (oracle hash checks pin
-    the rounded equality)."""
-    if len(a) == 0:
-        return pd.Series([], dtype=float)
-    ma = np.asarray(a.to_list(), dtype=np.float64).reshape(len(a), -1)
-    mb = np.asarray(b.to_list(), dtype=np.float64).reshape(len(b), -1)
+    """Unrounded cosine similarity, numpy-batched: one einsum and two row
+    norms per batch. The value differs from a sequential sum (the DuckDB
+    oracle's list_dot_product) only in final ulps; the 6dp rounding of
+    `cosine_similarity` absorbs that (pinned by
+    tests/test_functions.py::test_vectorized_embedding_kernels_match_column_forms).
+    A NULL vector gives NULL."""
+    (ma, mb), ok = _vec_matrices(a, b)
     num = np.einsum("ij,ij->i", ma, mb)
     den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-    return pd.Series(num / np.maximum(den, 1e-12))
+    return _null_rows(num / np.maximum(den, 1e-12), ok)
 
 
-def cosine_similarity_fast(a: Column, b: Column) -> Column:
-    """cosine_similarity semantics (rounded 6dp) on the vectorized kernel."""
+def cosine_similarity(a: Column, b: Column) -> Column:
+    """Cosine similarity of two vector columns, rounded to 6dp (JVM HALF_UP)
+    for engine-portable comparison."""
     return F.round(cosine_raw_udf(a, b), 6)
 
 
 def hyperplane_buckets_udf(nplanes: int, dim: int, seeds: tuple[int, ...]):
-    """Factory: pandas UDF computing the hyperplane bucket id for EVERY
-    table seed in ONE Arrow pass -> array<long> of len(seeds), entry t =
-    hyperplane_bucket(vec, nplanes, dim, seed=seeds[t]).
+    """Factory: pandas UDF computing the random-hyperplane LSH bucket id for
+    EVERY table seed in ONE Arrow pass -> array<long> of len(seeds); entry t
+    has bit j = sign(vec . plane_j) over `_hyperplanes(nplanes, dim,
+    seeds[t])`. Vectors in the same bucket are cosine-close with high
+    probability. A NULL vector gives a NULL array.
 
-    Same semantics as mapping `hyperplane_bucket` over the seeds, but the
-    multi-table JVM form is the wrong shape for Catalyst AND execution:
-    each table embeds nplanes 64-literal plane arrays with interpreted
-    higher-order dot products — 16 tables x 4 planes is a ~4k-literal
-    expression tree the driver re-analyzes on every query build (measured:
-    ann05's bench wall was dominated by per-trial planning + single-split
-    interpreted dots, 7.7s for a 2.1s-warm query), while here the planes
-    live in ONE numpy (T*P, dim) matrix and the buckets are a single
-    matmul + bit-pack per batch. Sign parity with the sequential JVM dot
-    is pinned by tests/test_oracle_queries (driver hash check) — a sign
+    The planes live in ONE numpy (T*P, dim) matrix and the buckets are a
+    single matmul + bit-pack per batch. A Column form embeds nplanes
+    dim-literal plane arrays per table with interpreted higher-order dot
+    products — 16 tables x 4 planes is a ~4k-literal expression tree the
+    driver re-analyzes on every query build (measured: ann05's bench wall
+    was dominated by per-trial planning + single-split interpreted dots,
+    7.7s for a 2.1s-warm query). Sign parity with the sequential dot is
+    pinned by tests/test_functions.py against the tests reference — a sign
     flip needs |dot| within float rounding of 0 (~1e-14 odds per dot).
     """
     planes = np.vstack([_hyperplanes(nplanes, dim, s) for s in seeds])
@@ -263,29 +269,13 @@ def hyperplane_buckets_udf(nplanes: int, dim: int, seeds: tuple[int, ...]):
 
     @pandas_udf(ArrayType(LongType()))
     def _buckets(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        m = np.asarray(vecs.to_list(), dtype=np.float64).reshape(len(vecs), -1)
+        (m,), ok = _vec_matrices(vecs, dim=dim)
         bits = (m @ planes.T > 0).astype(np.int64)
         b = bits.reshape(len(vecs), n_tables, nplanes) @ weights
-        return pd.Series(list(b))
+        out = list(b)
+        if ok is not None:
+            for i in np.flatnonzero(~ok):
+                out[i] = None
+        return pd.Series(out)
 
     return _buckets
-
-
-def hyperplane_bucket(
-    vec: Column, nplanes: int = 8, dim: int = DIM, seed: int = 42
-) -> Column:
-    """Random-hyperplane LSH bucket id (long): bit j = sign(vec . plane_j).
-
-    Pure Column arithmetic — the planes are literal arrays, the dot products
-    stay in codegen. Vectors in the same bucket are cosine-close with high
-    probability; used for embedding-based blocking and ANN.
-    """
-    planes = _hyperplanes(nplanes, dim, seed)
-    out = F.lit(0).cast("long")
-    for j in range(nplanes):
-        plane = F.array(*[F.lit(float(w)) for w in planes[j]])
-        d = dot_product(vec, plane)
-        out = out + (d > 0).cast("long") * F.lit(1 << j)
-    return out

@@ -35,7 +35,7 @@ def _canonical(edges: DataFrame) -> DataFrame:
     )
 
 
-def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -46,10 +46,10 @@ def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
         .where(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     )
-    # dedup=False when composed with _small_star, whose _canonical starts
-    # with its own orient+distinct — the trailing distinct here would be a
-    # redundant extra shuffle every round
-    return out.distinct() if dedup else out
+    # no distinct: the output feeds _small_star, whose _canonical starts
+    # with its own orient+distinct — one here would be a redundant extra
+    # shuffle every round
+    return out
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
@@ -79,11 +79,12 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def star_components(edges: DataFrame, leaf: str = "src", hub: str = "dst") -> DataFrame:
-    """Connected components of a graph KNOWN to be a union of stars: every
-    `leaf` node has exactly one edge, to its `hub`. Then components are
-    exactly the hub-groups, and the generic log-round CC loop collapses to
-    ONE aggregation + one join — no driver-side iterations at all.
+def star_components(edges: DataFrame) -> DataFrame:
+    """Connected components of a (src, dst) graph KNOWN to be a union of
+    stars: every `src` leaf has exactly one edge, to its `dst` hub. Then
+    components are exactly the hub-groups, and the generic log-round CC loop
+    collapses to ONE aggregation + one join — no driver-side iterations at
+    all.
 
     This is the KB-linking case (pipeline.run): `link_best` emits at most one
     argmax entity per surface, so the surface->entity edge set is a star
@@ -91,13 +92,13 @@ def star_components(edges: DataFrame, leaf: str = "src", hub: str = "dst") -> Da
     caller's invariant; component ids are canonicalized to the component
     minimum, same as connected_components.
     """
-    cmin = edges.groupBy(hub).agg(F.min(leaf).alias("_mn")).select(
-        hub, F.least(F.col("_mn"), F.col(hub)).alias("component")
+    cmin = edges.groupBy("dst").agg(F.min("src").alias("_mn")).select(
+        "dst", F.least(F.col("_mn"), F.col("dst")).alias("component")
     )
-    leaves = edges.join(cmin, hub).select(
-        F.col(leaf).alias("node"), "component"
+    leaves = edges.join(cmin, "dst").select(
+        F.col("src").alias("node"), "component"
     )
-    hubs = cmin.select(F.col(hub).alias("node"), "component")
+    hubs = cmin.select(F.col("dst").alias("node"), "component")
     return leaves.union(hubs)
 
 
@@ -255,7 +256,7 @@ def _cc_loop(
         # lazy checkpoint every round: cuts lineage, and the checksum
         # action both tests convergence and materializes the round — the
         # next round never re-executes this one, at one job per round
-        e = _ckpt(_small_star(_large_star(e, dedup=False)), checkpoint_mode)
+        e = _ckpt(_small_star(_large_star(e)), checkpoint_mode)
         cur = _checksum(e)
         if cur == prev:
             break

@@ -6,7 +6,7 @@ Features per pair, all Arrow-batched / JVM-side (north_rule F11):
 * Jaro-Winkler (numpy-vectorized pandas UDF, functions/similarity.py)
 * normalized Levenshtein (Spark built-in, JVM)
 * token-set Jaccard (array intersection, JVM)
-* embedding dot product when vectors are present (JVM array aggregate)
+* embedding dot product (numpy-vectorized pandas UDF, functions/embedding.py)
 
 Combined score = fixed convex combination (deterministic — the parity
 requirement F1>=0.99 demands the scorer be a pure function of the pair text,
@@ -92,8 +92,8 @@ def score_pairs(
     pairs: DataFrame,
     a_text: str = "a_text",
     b_text: str = "b_text",
-    a_vec: str | None = None,
-    b_vec: str | None = None,
+    a_vec: str = "a_vec",
+    b_vec: str = "b_vec",
     a_toks: str | None = None,
     b_toks: str | None = None,
 ) -> DataFrame:
@@ -104,20 +104,11 @@ def score_pairs(
     split subtree several times PER PAIR (sibling expressions are not
     CSE'd), and the texts repeat across pairs (tokenize once per distinct
     surface in the node table, ship the small array through the join).
-    The dot product runs in an Arrow-vectorized pandas UDF; the
-    interpreted JVM aggregate was ~256 virtual calls per pair (see
-    embedding.dot_product_udf)."""
+    `cos` is the dot product of the (L2-normalized) `a_vec`/`b_vec`
+    columns, computed by the Arrow-vectorized embedding.dot_product_udf."""
     out = pair_features(pairs, a_text, b_text, a_toks, b_toks)
-    if a_vec and b_vec:
-        out = out.withColumn("cos", _cos_col(a_vec, b_vec))
-        return out.withColumn("score", _full_score_col())
-    z = W_JW + W_LEV + W_OVL
-    score = (
-        F.col("jw") * (W_JW / z)
-        + F.col("lev_sim") * (W_LEV / z)
-        + F.col("overlap") * (W_OVL / z)
-    )
-    return out.withColumn("score", F.round(score, 6))
+    out = out.withColumn("cos", _cos_col(a_vec, b_vec))
+    return out.withColumn("score", _full_score_col())
 
 
 def two_phase_scored_pairs(

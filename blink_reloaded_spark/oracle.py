@@ -144,17 +144,20 @@ def sql_levenshtein_sim(a: str, b: str) -> str:
 
 def sql_jaro_winkler(a: str, b: str) -> str:
     """DuckDB built-in; similarity.jaro_winkler_udf matches it exactly
-    (verified on 10k random pairs, tests/test_oracle_parity.py)."""
+    (tests/test_functions.py::test_jaro_winkler_matches_duckdb_exactly and
+    tests/test_property_parity.py::test_jw_matches_duckdb)."""
     return f"round(jaro_winkler_similarity({a}, {b}), 6)"
 
 
 def sql_dot(a: str, b: str) -> str:
-    """Mirror of embedding.dot_product (double, sequential)."""
+    """Mirror of the sequential double dot product in
+    tests/embedding_reference.py (the numpy kernels' parity reference)."""
     return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
 
 
 def sql_cosine(a: str, b: str) -> str:
-    """Mirror of embedding.cosine_similarity."""
+    """Mirror of the rounded cosine in tests/embedding_reference.py, which
+    embedding.cosine_similarity matches at 6dp."""
     return (
         f"round({sql_dot(a, b)} / greatest(sqrt({sql_dot(a, a)}) *"
         f" sqrt({sql_dot(b, b)}), 1e-12), 6)"
@@ -162,7 +165,8 @@ def sql_cosine(a: str, b: str) -> str:
 
 
 def sql_hyperplane_bucket(e: str, planes) -> str:
-    """Mirror of embedding.hyperplane_bucket with literal plane arrays."""
+    """Mirror of tests/embedding_reference.hyperplane_bucket with literal
+    plane arrays; embedding.hyperplane_buckets_udf matches it per table."""
     terms = []
     for j, row in enumerate(planes):
         arr = "[" + ", ".join(repr(float(w)) for w in row) + "]"

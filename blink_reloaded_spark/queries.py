@@ -49,7 +49,15 @@ DEDUP_BANDS, DEDUP_ROWS = 6, 3  # P(miss j=0.93) = (1-j^3)^6 ~ 6e-5; background 
 ANN_K = 5
 ANN_NQUERY = 30
 EMB_DIM = 64  # the driver's embeddings.parquet dimension
-HP_PLANES = emb._hyperplanes(8, EMB_DIM)
+HP_NPLANES, HP_SEED = 8, 42  # the single hyperplane table of ann02/03/04/06
+HP_PLANES = emb._hyperplanes(HP_NPLANES, EMB_DIM, HP_SEED)  # oracle SQL side
+# Spark side, same planes. Deterministic, but marked nondeterministic so
+# Catalyst cannot push the bucket joins' inferred `isnotnull(bucket)` filter
+# below the projection, which would run the kernel twice per scan (once for
+# the filter, once for the column).
+HP_BUCKETS = emb.hyperplane_buckets_udf(
+    HP_NPLANES, EMB_DIM, (HP_SEED,)
+).asNondeterministic()
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -592,6 +600,13 @@ def dedup03_minhash_lsh(spark, sf_dir, hash_fn=None):
     base = (
         T(spark, sf_dir, "documents")
         .select("doc_id", "text")
+        # null-text docs get no signature (the kernel's NULL contract), so
+        # they never become candidates: drop them at the scan, so the
+        # checkpoint below holds no text column at all. The test is on the
+        # raw text (NULL iff its normalized form is): a filter on `nt` would
+        # be pushed into the one-task scan as a second normalize pass. The
+        # corpus has none; the contract is kept regardless.
+        .where(F.col("text").isNotNull())
         # hash keys, not round-robin (r8): no sort-before-repartition pass
         .repartition(par, F.col("doc_id"))
         # normalize ONCE per row; inside the shingle lambda it would run per
@@ -609,13 +624,10 @@ def dedup03_minhash_lsh(spark, sf_dir, hash_fn=None):
     # a single job.
     d = base.select(
         "doc_id",
-        "nt",
         tx.char_shingles(F.col("nt"), 5, normalize=False).alias("sh"),
         minhash_sigs_np_udf(5, nh, hash_fn)(F.col("nt")).alias("sig"),
     ).localCheckpoint(eager=False)
-    # null-text docs get no signature (the kernel's NULL contract) — the
-    # corpus has none; the contract is kept regardless
-    sigs = d.where(F.col("nt").isNotNull()).select("doc_id", "sig")
+    sigs = d.select("doc_id", "sig")
     # band-bucket self-join with the signature RIDING the key rows (144B of
     # fixed payload per key row), so the agreement filter runs MAP-SIDE in
     # the join stage — before any distinct — and the dedup exchange only
@@ -716,9 +728,27 @@ def _sql_dedup04():
 # --------------------------------------------------------------------------
 
 
+def _top_by_cos(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of scored (qid, nid, cos) rows: rank by cos
+    descending, ties broken by the smaller nid."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cos"), "nid")
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("qid", "nid", "rank", "cos")
+    )
+
+
+def _hp_bucket(vec):
+    """Bucket id of the single hyperplane table (HP_BUCKETS) for a vector
+    column; NULL for a NULL vector."""
+    return HP_BUCKETS(vec)[0]
+
+
 def ann01_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k: the correctness baseline. Query side is
-    broadcast; candidate scan stays JVM-side (zip_with/aggregate)."""
+    broadcast; every (query, vector) pair is scored by the numpy cosine
+    kernel."""
     v = T(spark, sf_dir, "embeddings")
     q = v.where(F.col("vec_id") < ANN_NQUERY).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
@@ -731,12 +761,7 @@ def ann01_cosine_topk(spark, sf_dir):
         "nid",
         emb.cosine_similarity(F.col("qv"), F.col("nv")).alias("cos"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), "nid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= ANN_K)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return _top_by_cos(scored, ANN_K)
 
 
 def _sql_ann01():
@@ -761,7 +786,7 @@ def ann02_hyperplane_bucket(spark, sf_dir):
     join within bucket instead of full cross)."""
     v = T(spark, sf_dir, "embeddings")
     return v.select(
-        "vec_id", emb.hyperplane_bucket(F.col("embedding"), 8, EMB_DIM).alias("bucket")
+        "vec_id", _hp_bucket(F.col("embedding")).alias("bucket")
     )
 
 
@@ -785,7 +810,7 @@ def ann03_lsh_topk(spark, sf_dir):
     v = T(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
-        emb.hyperplane_bucket(F.col("embedding"), 8, EMB_DIM).alias("bucket"),
+        _hp_bucket(F.col("embedding")).alias("bucket"),
     )
     a = v.select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"), "bucket"
@@ -798,12 +823,7 @@ def ann03_lsh_topk(spark, sf_dir):
         .where(F.col("qid") != F.col("nid"))
         .select("qid", "nid", emb.cosine_similarity(F.col("qv"), F.col("nv")).alias("cos"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), "nid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 3)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return _top_by_cos(scored, 3)
 
 
 def _sql_ann03():
@@ -837,7 +857,7 @@ def ann06_multiprobe_lsh(spark, sf_dir):
     v = T(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
-        emb.hyperplane_bucket(F.col("embedding"), 8, EMB_DIM).alias("bucket"),
+        _hp_bucket(F.col("embedding")).alias("bucket"),
     )
     masks = [0] + [1 << j for j in range(8)]
     probes = F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks])
@@ -856,12 +876,7 @@ def ann06_multiprobe_lsh(spark, sf_dir):
             "qid", "nid", emb.cosine_similarity(F.col("qv"), F.col("nv")).alias("cos")
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), "nid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 3)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return _top_by_cos(scored, 3)
 
 
 def _sql_ann06():
@@ -899,10 +914,12 @@ def ann04_block_matmul(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    v = T(spark, sf_dir, "embeddings").select(
+    # a NULL vector has a NULL bucket, which ann03's equi-join never
+    # matches: drop it here too rather than group it
+    v = T(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull()).select(
         "vec_id",
         "embedding",
-        emb.hyperplane_bucket(F.col("embedding"), 8, EMB_DIM).alias("bucket"),
+        _hp_bucket(F.col("embedding")).alias("bucket"),
     )
 
     def topk(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1105,6 +1122,45 @@ SELECT u AS mention_id, min(v) AS cluster_id FROM reach GROUP BY u
 ER_APPEND_SPLIT = 40
 
 
+def _er_base_state(m: DataFrame) -> DataFrame:
+    """The prior state of an append run: (node, component) clusters of the
+    base batch's mentions alone. In production it is read back from the
+    previous run's sink; built here by the same operator so the queries
+    stay self-contained and deterministic."""
+    base_m = m.where(F.col("mention_id") < ER_APPEND_SPLIT * 10)
+    base_edges = (
+        _er_scored_pairs(_er_pairs_of(base_m))
+        .where(F.col("score") >= ER_THRESHOLD)
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    )
+    return connected_components(
+        base_edges, nodes=base_m.select(F.col("mention_id").alias("node"))
+    )
+
+
+def _er_append(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
+    """(state, cc) of an append run: `state` = _er_base_state, `cc` = the
+    clusters of every mention after the delta batch merged in. Blocking
+    runs over the full frame (same keys as the base run) but ONLY
+    delta-touching pairs are scored; the state enters as star edges."""
+    split_id = ER_APPEND_SPLIT * 10
+    m = er01_mentions(spark, sf_dir)
+    state = _er_base_state(m)
+    delta_edges = (
+        _er_scored_pairs(_er_pairs_of(m).where(F.col("b") >= split_id))
+        .where(F.col("score") >= ER_THRESHOLD)
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    )
+    star = state.select(
+        F.col("node").alias("src"), F.col("component").alias("dst")
+    )
+    cc = connected_components(
+        delta_edges.unionByName(star),
+        nodes=m.select(F.col("mention_id").alias("node")),
+    )
+    return state, cc
+
+
 def er05_incremental_clusters(spark, sf_dir):
     """Append-mode linkage (VERDICT r5 #5a): a NEW batch of transcripts
     arrives against an EXISTING cluster state and must merge into it
@@ -1128,33 +1184,7 @@ def er05_incremental_clusters(spark, sf_dir):
     append invariant itself — incremental(state, delta) == batch(full).
     """
     split_id = ER_APPEND_SPLIT * 10
-    m = er01_mentions(spark, sf_dir)
-    base_m = m.where(F.col("mention_id") < split_id)
-
-    # ---- prior state: clusters over the base batch only ----
-    base_edges = (
-        _er_scored_pairs(_er_pairs_of(base_m))
-        .where(F.col("score") >= ER_THRESHOLD)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    state = connected_components(
-        base_edges, nodes=base_m.select(F.col("mention_id").alias("node"))
-    )
-
-    # ---- delta: block over the full frame (same keys as the base run),
-    # score ONLY delta-touching pairs ----
-    delta_edges = (
-        _er_scored_pairs(_er_pairs_of(m).where(F.col("b") >= split_id))
-        .where(F.col("score") >= ER_THRESHOLD)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    star = state.select(
-        F.col("node").alias("src"), F.col("component").alias("dst")
-    )
-    cc = connected_components(
-        delta_edges.unionByName(star),
-        nodes=m.select(F.col("mention_id").alias("node")),
-    )
+    _, cc = _er_append(spark, sf_dir)
     return cc.select(
         F.col("node").alias("mention_id"),
         F.col("component").alias("cluster_id"),
@@ -1189,18 +1219,10 @@ def er06_cluster_drift(spark, sf_dir):
     """
     split_id = ER_APPEND_SPLIT * 10
 
-    # run N: base batch clustered alone (the er05 state, rebuilt here so
-    # the query is self-contained)
-    m = er01_mentions(spark, sf_dir)
-    base_m = m.where(F.col("mention_id") < split_id)
-    base_edges = (
-        _er_scored_pairs(_er_pairs_of(base_m))
-        .where(F.col("score") >= ER_THRESHOLD)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    # run N: base batch clustered alone (the er05 state)
+    prev = _er_base_state(er01_mentions(spark, sf_dir)).select(
+        F.col("node").alias("mention_id"), F.col("component").alias("c")
     )
-    prev = connected_components(
-        base_edges, nodes=base_m.select(F.col("mention_id").alias("node"))
-    ).select(F.col("node").alias("mention_id"), F.col("component").alias("c"))
 
     # run N+1: full clustering, restricted to the overlapping (base) mentions
     curr = (
@@ -1300,31 +1322,7 @@ def er07_append_upsert(spark, sf_dir):
     the driver's value-hash check pins the upsert-selection semantics on
     top of er05's incremental==batch invariant.
     """
-    split_id = ER_APPEND_SPLIT * 10
-    m = er01_mentions(spark, sf_dir)
-    base_m = m.where(F.col("mention_id") < split_id)
-
-    base_edges = (
-        _er_scored_pairs(_er_pairs_of(base_m))
-        .where(F.col("score") >= ER_THRESHOLD)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    state = connected_components(
-        base_edges, nodes=base_m.select(F.col("mention_id").alias("node"))
-    )
-
-    delta_edges = (
-        _er_scored_pairs(_er_pairs_of(m).where(F.col("b") >= split_id))
-        .where(F.col("score") >= ER_THRESHOLD)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    star = state.select(
-        F.col("node").alias("src"), F.col("component").alias("dst")
-    )
-    cc = connected_components(
-        delta_edges.unionByName(star),
-        nodes=m.select(F.col("mention_id").alias("node")),
-    )
+    state, cc = _er_append(spark, sf_dir)
     old = state.select("node", F.col("component").alias("old_c"))
     return (
         cc.join(old, "node", "left")
@@ -1773,6 +1771,19 @@ BM25_QTOKENS = 8
 BM25_K = 5
 
 
+def _rerank(v: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact re-rank of LSH candidates (qid, nid): re-join both vectors from
+    the embeddings table `v`, score by cosine, keep the top ANN_K."""
+    qv = v.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+    nv = v.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("nv"))
+    scored = cand.join(qv, "qid").join(nv, "nid").select(
+        "qid",
+        "nid",
+        emb.cosine_similarity(F.col("qv"), F.col("nv")).alias("cos"),
+    )
+    return _top_by_cos(scored, ANN_K)
+
+
 def ann05_multitable_lsh(spark, sf_dir):
     """OR-amplified ANN (the reference's flat-vs-HNSW recall trade,
     `blink/indexer/faiss_indexer.py:71-141`): 16 INDEPENDENT 4-plane
@@ -1808,19 +1819,7 @@ def ann05_multitable_lsh(spark, sf_dir):
         .select("qid", "nid")
         .distinct()
     )
-    qv = v.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-    nv = v.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("nv"))
-    scored = cand.join(qv, "qid").join(nv, "nid").select(
-        "qid",
-        "nid",
-        emb.cosine_similarity_fast(F.col("qv"), F.col("nv")).alias("cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), "nid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= ANN_K)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return _rerank(v, cand)
 
 
 def _sql_ann05():
@@ -1911,19 +1910,7 @@ def ann07_multiprobe_tables(spark, sf_dir):
         .select("qid", "nid")
         .distinct()
     )
-    qv = v.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-    nv = v.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("nv"))
-    scored = cand.join(qv, "qid").join(nv, "nid").select(
-        "qid",
-        "nid",
-        emb.cosine_similarity_fast(F.col("qv"), F.col("nv")).alias("cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), "nid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= ANN_K)
-        .select("qid", "nid", "rank", "cos")
-    )
+    return _rerank(v, cand)
 
 
 def _sql_ann07():

@@ -4,6 +4,7 @@ meaningful rather than coincidental."""
 
 from __future__ import annotations
 
+import functools
 import random
 
 import duckdb
@@ -289,53 +290,112 @@ def test_jw_nul_never_matches_padding(spark):
 
 
 def test_vectorized_embedding_kernels_match_column_forms(spark):
-    """ADVICE r5: ann05/ann07's oracle-checked cosine and bucket ids come
-    from numpy kernels (einsum / matmul) whose summation order is
-    BLAS/numpy-version dependent, while DuckDB parity was established on
-    the sequential JVM Column forms. Pin kernel == Column on the actual
-    sf0.01 embeddings fixture, so an environment change fails loudly at
-    the kernel instead of as an opaque driver oracle-hash mismatch."""
+    """ADVICE r5: every oracle-checked cosine and bucket id comes from numpy
+    kernels (einsum / matmul) whose summation order is BLAS/numpy-version
+    dependent, while DuckDB parity was established on the sequential JVM
+    Column forms (tests/embedding_reference.py). Pin kernel == Column on the
+    actual sf0.01 embeddings fixture, so an environment change fails loudly
+    at the kernel instead of as an opaque driver oracle-hash mismatch. Rows
+    with a NULL vector on either side must give NULL, as the Column forms
+    do."""
     from blink_reloaded_spark.functions import embedding as emb
     from blink_reloaded_spark.queries import (
         ANN_PLANES,
         ANN_TABLE_SEEDS,
         EMB_DIM,
+        HP_NPLANES,
+        HP_SEED,
     )
+    from tests import embedding_reference as ref
     from tests.conftest import SF_ORACLE
 
     v = spark.read.parquet(SF_ORACLE + "/embeddings.parquet")
+    vec_t = v.schema["embedding"].dataType
+    one = v.where(F.col("vec_id") == 0).select("embedding")
+    null_vec = F.lit(None).cast(vec_t)
 
-    # rounded cosine: Column form (sequential aggregate sum) vs einsum UDF
+    # consecutive-id pairs, plus pairs with a NULL vector on one/both sides
     pairs = v.select(
         F.col("vec_id").alias("ia"), F.col("embedding").alias("va")
     ).join(
         v.select((F.col("vec_id") - 1).alias("ia"), F.col("embedding").alias("vb")),
         "ia",
-    )
-    mism = (
-        pairs.select(
-            emb.cosine_similarity(F.col("va"), F.col("vb")).alias("c_col"),
-            emb.cosine_similarity_fast(F.col("va"), F.col("vb")).alias("c_np"),
+    ).unionByName(
+        one.select(
+            F.lit(-1).cast("long").alias("ia"),
+            F.col("embedding").alias("va"),
+            null_vec.alias("vb"),
         )
-        .where(F.col("c_col") != F.col("c_np"))
-        .count()
+        .unionByName(one.select(
+            F.lit(-2).cast("long").alias("ia"), null_vec.alias("va"),
+            F.col("embedding").alias("vb"),
+        ))
+        .unionByName(one.select(
+            F.lit(-3).cast("long").alias("ia"), null_vec.alias("va"),
+            null_vec.alias("vb"),
+        ))
     )
-    assert mism == 0
+    got = pairs.select(
+        "ia",
+        ref.cosine_similarity(F.col("va"), F.col("vb")).alias("c_col"),
+        emb.cosine_similarity(F.col("va"), F.col("vb")).alias("c_np"),
+        F.round(ref.dot_product(F.col("va"), F.col("vb")), 6).alias("d_col"),
+        F.round(emb.dot_product_udf(F.col("va"), F.col("vb")), 6).alias("d_np"),
+    ).collect()
+    assert len(got) > 3
+    assert all(r["c_col"] == r["c_np"] for r in got)
+    assert all(r["d_col"] == r["d_np"] for r in got)
+    nulls = [r for r in got if r["ia"] < 0]
+    assert len(nulls) == 3
+    assert all(r["c_np"] is None and r["d_np"] is None for r in nulls)
 
-    # all 16 table bucket ids: matmul+bit-pack UDF vs per-seed Column form
-    bk = emb.hyperplane_buckets_udf(ANN_PLANES, EMB_DIM, ANN_TABLE_SEEDS)
-    col_buckets = F.array(
-        *[
-            emb.hyperplane_bucket(F.col("embedding"), ANN_PLANES, EMB_DIM, seed=s)
-            for s in ANN_TABLE_SEEDS
+    # bucket ids: matmul+bit-pack UDF vs per-seed Column form, for the 16
+    # 4-plane tables of ann05/ann07 and the single 8-plane table of
+    # ann02/03/04/06, plus a NULL vector (NULL buckets)
+    vn = v.select("embedding").unionByName(one.select(null_vec.alias("embedding")))
+    for nplanes, seeds in (
+        (ANN_PLANES, ANN_TABLE_SEEDS), (HP_NPLANES, (HP_SEED,))
+    ):
+        bk = emb.hyperplane_buckets_udf(nplanes, EMB_DIM, seeds)(F.col("embedding"))
+        same = [
+            ref.hyperplane_bucket(F.col("embedding"), nplanes, EMB_DIM, seed=s)
+            .eqNullSafe(bk[t])
+            for t, s in enumerate(seeds)
         ]
-    )
-    bad = (
-        v.select(bk(F.col("embedding")).alias("k"), col_buckets.alias("c"))
-        .where(F.col("k") != F.col("c"))
-        .count()
-    )
-    assert bad == 0
+        bad = vn.where(~functools.reduce(lambda x, y: x & y, same))
+        assert bad.count() == 0
+
+
+def test_vector_kernels_null_and_wrong_length_rows():
+    """The numpy vector kernels on one Arrow batch: a NULL vector row gives
+    a NULL output row (the other rows are unaffected), and a row whose
+    length differs from the batch's raises a ValueError naming the expected
+    length instead of numpy's opaque inhomogeneous-shape error."""
+    from blink_reloaded_spark.functions import embedding as emb
+
+    x = np.array([3.0, 4.0, 0.0, 0.0], dtype=np.float32)
+    y = np.array([4.0, 3.0, 0.0, 0.0], dtype=np.float32)
+    a = pd.Series([x, None, x, None])
+    b = pd.Series([y, y, None, None])
+    cos = emb.cosine_raw_udf.func(a, b)
+    dot = emb.dot_product_udf.func(a, b)
+    assert cos[0] == pytest.approx(24 / 25) and cos[1:].isna().all()
+    assert dot[0] == pytest.approx(24.0) and dot[1:].isna().all()
+    bk = emb.hyperplane_buckets_udf(4, 4, (7, 1007)).func(a)
+    assert len(bk[0]) == 2 and bk[1] is None and bk[3] is None
+    assert list(bk[2]) == list(bk[0])
+    # a batch with no non-NULL row, and an empty batch
+    assert emb.cosine_raw_udf.func(b[2:], b[2:]).isna().all()
+    assert emb.hyperplane_buckets_udf(4, 4, (7,)).func(b[2:]).tolist() == [None] * 2
+    assert len(emb.dot_product_udf.func(a[:0], b[:0])) == 0
+
+    short = pd.Series([x, x[:3]])
+    with pytest.raises(ValueError, match="must have 4 elements"):
+        emb.cosine_raw_udf.func(short, pd.Series([y, y]))
+    with pytest.raises(ValueError, match="must have 4 elements"):
+        emb.dot_product_udf.func(pd.Series([x, x]), short)
+    with pytest.raises(ValueError, match="must have 4 elements"):
+        emb.hyperplane_buckets_udf(4, 4, (7,)).func(pd.Series([x[:3]]))
 
 
 def test_tree_cpu_seconds_counts_descendants():

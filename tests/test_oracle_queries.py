@@ -67,17 +67,61 @@ def test_entry_runs(spark):
     assert set(df.columns) == {"mention_id", "cluster_id"}
 
 
-def test_dedup03_xxhash64_equals_exact_jaccard(spark):
-    """dedup03 on the xxhash64 base (the production fast path, no DuckDB
-    oracle of its own) returns exactly the exact n-gram jaccard pairs of
-    dedup02 — the LSH, agreement and verify tiers lose no near-dup."""
+@pytest.mark.parametrize("base", ["poly_hash", "xxhash64"])
+def test_dedup03_equals_exact_jaccard(spark, base):
+    """dedup03 on either base hash (xxhash64, the production fast path, has
+    no DuckDB oracle of its own) returns exactly the exact n-gram jaccard
+    pairs of dedup02 — the LSH, agreement and verify tiers lose no
+    near-dup."""
     from blink_reloaded_spark.functions.hashing import xxhash64_mod
     from blink_reloaded_spark.queries import (
         dedup02_ngram_jaccard,
         dedup03_minhash_lsh,
     )
 
-    got = dedup03_minhash_lsh(spark, SF_UNIT, hash_fn=xxhash64_mod).toPandas()
+    hash_fn = xxhash64_mod if base == "xxhash64" else None
+    got = dedup03_minhash_lsh(spark, SF_UNIT, hash_fn=hash_fn).toPandas()
     want = dedup02_ngram_jaccard(spark, SF_UNIT).toPandas()
     assert len(got) > 0
     pd.testing.assert_frame_equal(_normalize(got), _normalize(want))
+
+
+def test_vector_queries_with_null_embedding_match_oracle(spark, tmp_path):
+    """An embeddings table holding a NULL vector (a non-query id): the
+    numpy-kernel queries drop it exactly as the Column forms did — its cos
+    is NULL (never top-k, never >= 0.4) and its bucket is NULL (never
+    joined) — so they return the oracle's rows over the other vectors, plus
+    ann02's NULL-bucket row. The oracle itself cannot take the NULL row
+    (DuckDB's list_dot_product rejects it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    null_id = 45  # >= ANN_NQUERY: a candidate, never a query
+    t = pq.read_table(f"{SF_UNIT}/embeddings.parquet").slice(0, 100)
+    emb = t.column("embedding").to_pylist()
+    emb[t.column("vec_id").to_pylist().index(null_id)] = None
+    t = t.set_column(
+        t.schema.get_field_index("embedding"), "embedding",
+        pa.array(emb, type=t.schema.field("embedding").type),
+    )
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'"
+        " WHERE embedding IS NOT NULL"
+    )
+    for name in [
+        "ann01_cosine_topk", "ann02_hyperplane_bucket", "ann03_lsh_topk",
+        "ann04_block_matmul", "ann06_multiprobe_lsh", "dedup06_embedding_cosine",
+    ]:
+        got = entrymod.queries()[name](spark, str(tmp_path)).toPandas()
+        want = con.sql(entrymod.oracle_sql()[name]).df()
+        if name == "ann02_hyperplane_bucket":
+            want = pd.concat(
+                [want, pd.DataFrame({"vec_id": [null_id], "bucket": [float("nan")]})],
+                ignore_index=True,
+            )
+        assert len(got) > 0, name
+        pd.testing.assert_frame_equal(
+            _normalize(got), _normalize(want), check_dtype=False, obj=name
+        )
