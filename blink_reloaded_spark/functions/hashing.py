@@ -345,11 +345,14 @@ def minhash_band_keys_np(
     nh = bands * rows
     _check_minhash_contract(k, nh, base)
     carry = list(carry_cols or [])
-    # at most one task per core (coalesce never adds partitions): each
-    # Python task costs ~0.15 s of fixed worker hand-off, far more than the
-    # kernel's own ~10 ms per 1k rows, so a second wave of tasks only adds
-    # latency (measured at local[2] on a 4-core VM: a no-op mapInArrow
-    # over 4.7k rows took 0.33-0.42 s as 3 tasks, 0.20-0.27 s as 2)
+    # at most one task per core (coalesce never adds partitions): a task
+    # costs ~0.07 s beyond its rows (scheduling, Arrow stream setup, and
+    # ~0.02 s to enter Python on a reused worker), more than the kernel's
+    # own ~10 ms per 1k rows, so a second wave of tasks only adds latency
+    # (measured at local[2] on a 4-core VM, median of 10: a no-op
+    # mapInArrow over 4.7k rows took 0.15 s as 2 tasks, 0.22 s as 3; it
+    # was 0.33 s vs 0.55 s while every task re-read pyspark.zip and the
+    # Spark jar, which session.py now skips)
     par = df.sparkSession.sparkContext.defaultParallelism
     inp = df.select(
         F.col(id_col).alias("id"), *carry, F.col(text_col).alias("__t")

@@ -362,12 +362,15 @@ def extract_mentions(
     #
     # Task granularity (r8, revisits the r3 "3 tasks per core" choice):
     # with hash-balanced equal tasks and the Arrow-native kernel, per-task
-    # overhead (Python worker handoff + Arrow stream setup + extra batch
-    # boundaries) now outweighs the straggler smoothing finer tasks buy —
-    # measured at 2M turns / 32 cores: 32 tasks 1.3s/32 CPU-s, 64 tasks
-    # 1.6s/39, 96 tasks 2.0s/47. ONE wave of equal tasks keeps every
-    # reused Python worker on a single continuous Arrow stream. The CPU
-    # saving (-30%) also carries to the low-core scaling shapes.
+    # overhead (Arrow stream setup + extra batch boundaries + entering
+    # Python) outweighs the straggler smoothing finer tasks buy — measured
+    # at 2M turns / 32 cores: 32 tasks 1.3s/32 CPU-s, 64 tasks 1.6s/39,
+    # 96 tasks 2.0s/47. Those ~0.23 CPU-s per extra task match what each
+    # task then spent re-reading pyspark.zip and the Spark jar on entry
+    # (0.2-0.5 CPU-s), which session.py now skips (launch-to-entry ~0.2 s
+    # -> ~0.02 s, PYTHON_TASK_ENTRY.json). One wave is kept: it still keeps
+    # every reused Python worker on a single continuous Arrow stream, but
+    # the 32-core split has not been re-measured since.
     par = transcripts.sparkSession.sparkContext.defaultParallelism
     if partitioning == "auto" and cols.rdd.getNumPartitions() >= par:
         cols = cols.coalesce(par)

@@ -745,6 +745,19 @@ def _hp_bucket(vec):
     return HP_BUCKETS(vec)[0]
 
 
+def _bucketed_embeddings(spark, sf_dir):
+    """(vec_id, embedding, bucket) for the bucket self-joins of ann03/ann06.
+    Both join sides read it, and the build side is broadcast, so without the
+    lazy local checkpoint each side would run the bucket kernel over the
+    whole table; with it the kernel runs once, inside the query's first
+    job."""
+    return T(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        "embedding",
+        _hp_bucket(F.col("embedding")).alias("bucket"),
+    ).localCheckpoint(eager=False)
+
+
 def ann01_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k: the correctness baseline. Query side is
     broadcast; every (query, vector) pair is scored by the numpy cosine
@@ -807,11 +820,7 @@ def ann03_lsh_topk(spark, sf_dir):
     further down this file). It exists as the single-table contrast baseline
     for ann05 (16x4-plane OR-amplified, recall@5 ~0.9, the headline ANN
     entry in bench.py) — do NOT use ann03 for production neighbor lookup."""
-    v = T(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        _hp_bucket(F.col("embedding")).alias("bucket"),
-    )
+    v = _bucketed_embeddings(spark, sf_dir)
     a = v.select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"), "bucket"
     )
@@ -854,11 +863,7 @@ def ann06_multiprobe_lsh(spark, sf_dir):
     equi-join, never a cross join. The probe explosion is on the QUERY side
     only; each (query, neighbor) pair matches at most one probe code, so no
     dedup pass is needed."""
-    v = T(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        _hp_bucket(F.col("embedding")).alias("bucket"),
-    )
+    v = _bucketed_embeddings(spark, sf_dir)
     masks = [0] + [1 << j for j in range(8)]
     probes = F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks])
     a = v.select(

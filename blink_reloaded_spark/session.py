@@ -9,8 +9,46 @@ scorers, UTC session timezone so results are engine-portable.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def _reread_zips_only_when_changed() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip archives that did not change.
+
+    A reused PySpark worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``pyspark.worker_util.setup_spark_files``). On
+    CPython 3.10-3.12 that makes each zipimporter re-read its archive's
+    central directory at once: 16 reads of pyspark.zip, the py4j zip and the
+    Spark jar, 0.2-0.5 s of worker CPU per task whatever its size. The
+    wrapper re-reads an archive only when its (inode, size, mtime_ns) differs
+    from the stamp the importer took at its own last re-read; an importer
+    without a stamp, or an archive that cannot be stat'ed, is re-read as
+    before. 3.13 made the re-read lazy, so there this does nothing. Installed
+    on import of this module, hence in every worker that unpickles an engine
+    function; a second call is a no-op."""
+    reread = getattr(zipimport.zipimporter, "invalidate_caches", None)
+    if sys.version_info >= (3, 13) or reread is None \
+            or getattr(reread, "_skips_unchanged", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_read_stamp", None):
+            reread(self)
+            self._read_stamp = stamp
+
+    invalidate_caches._skips_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_reread_zips_only_when_changed()
 
 # Arrow batch size: the pairwise scorer does O(batch * max_len^2) numpy work;
 # 10k rows/batch keeps each task's working set in L2/L3 while amortizing

@@ -125,3 +125,26 @@ def test_vector_queries_with_null_embedding_match_oracle(spark, tmp_path):
         pd.testing.assert_frame_equal(
             _normalize(got), _normalize(want), check_dtype=False, obj=name
         )
+
+
+@pytest.mark.parametrize("name", ["ann03_lsh_topk", "ann06_multiprobe_lsh"])
+def test_bucket_self_join_runs_bucket_kernel_once(spark, monkeypatch, name):
+    """Both sides of the bucket self-join read one (vec_id, embedding,
+    bucket) frame: the bucket kernel sees each embeddings row once, not once
+    per join side."""
+    from pyspark.sql import functions as F
+
+    from blink_reloaded_spark import queries
+
+    kernel = queries.HP_BUCKETS.func
+    rows = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf(returnType=queries.HP_BUCKETS.returnType)
+    def counted(vecs):
+        rows.add(len(vecs))
+        return kernel(vecs)
+
+    monkeypatch.setattr(queries, "HP_BUCKETS", counted.asNondeterministic())
+    assert entrymod.queries()[name](spark, SF_UNIT).count() > 0
+    n = spark.read.parquet(f"{SF_UNIT}/embeddings.parquet").count()
+    assert rows.value == n
