@@ -12,16 +12,16 @@ canonicalized to the component-minimum node id so output is invariant under
 partitioning and row order (determinism rule, FIXTURES.md).
 
 Driver-side loop is over *iterations* (log-many), never over rows; each
-iteration checkpoints to truncate lineage. `checkpoint_mode="local"`
-(default) uses localCheckpoint — fast, but pinned to executors; on a real
-cluster pass `checkpoint_mode="reliable"` (RDD checkpoint against
-SparkContext's checkpoint dir, survives executor loss).
+iteration cuts lineage through `sources.checkpoint.materialize` — reliable
+when the session has an RDD checkpoint dir, local otherwise.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from blink_reloaded_spark.sources.checkpoint import materialize
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -162,22 +162,11 @@ def _local_components(e: DataFrame) -> DataFrame:
     return e.coalesce(1).mapInPandas(uf, schema=f"node {t}, component {t}")
 
 
-def _ckpt(df: DataFrame, mode: str) -> DataFrame:
-    """Lazy lineage-cut: local (fast, executor-pinned) or reliable (RDD
-    checkpoint dir — the cluster setting). Lazy in both modes: the caller's
-    next action (the convergence checksum) materializes it, one job per
-    round."""
-    if mode == "reliable":
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
-
-
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 30,
     num_partitions: int | None = None,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Compute connected components of an undirected edge list.
 
@@ -190,23 +179,11 @@ def connected_components(
     Returns DataFrame(node: long, component: long) with
     component = min(node id in the component).
     """
-    # fail fast with a usable message (ADVICE r3): df.checkpoint() without a
-    # SparkContext checkpoint dir dies mid-run at the first action with a
-    # generic SparkException
-    if (
-        checkpoint_mode == "reliable"
-        and edges.sparkSession.sparkContext.getCheckpointDir() is None
-    ):
-        raise ValueError(
-            "checkpoint_mode='reliable' needs a SparkContext checkpoint dir: "
-            "call spark.sparkContext.setCheckpointDir(...) first, or set "
-            "LinkagePipeline(checkpoint_dir=...) which auto-derives it"
-        )
     # lazy checkpoint: the (count, checksum) agg below is the first action —
     # it sizes the iteration parallelism AND seeds the convergence test AND
     # materializes the canonical edge set, all in ONE job (the eager variant
     # spent three)
-    e = _ckpt(_canonical(edges), checkpoint_mode)
+    e = materialize(_canonical(edges))
     prev = _checksum(e)
     n_edges = prev[0]
     if num_partitions is None:
@@ -226,7 +203,7 @@ def connected_components(
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
     try:
-        return _cc_loop(e, prev, nodes, max_iter, checkpoint_mode)
+        return _cc_loop(e, prev, nodes, max_iter)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 
@@ -250,13 +227,12 @@ def _cc_loop(
     prev: tuple[int, int],
     nodes: DataFrame | None,
     max_iter: int,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     for _ in range(max_iter):
         # lazy checkpoint every round: cuts lineage, and the checksum
         # action both tests convergence and materializes the round — the
         # next round never re-executes this one, at one job per round
-        e = _ckpt(_small_star(_large_star(e)), checkpoint_mode)
+        e = materialize(_small_star(_large_star(e)))
         cur = _checksum(e)
         if cur == prev:
             break

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from blink_reloaded_spark.sources.checkpoint import materialize
+
 _PID = "__sri_pid"
 _OFF = "__sri_off"
 
@@ -49,11 +51,12 @@ def stable_row_ids(
     # lazy checkpoint: the counts job below is the FIRST action, so it both
     # computes the per-partition counts and materializes the pinned range
     # partitioning in ONE job (eager=True would spend a separate job on the
-    # materialization — pure per-job constant, VERDICT r2 #3)
-    ranged = (
+    # materialization — pure per-job constant, VERDICT r2 #3). A reliable
+    # cut writes its files from the same range-exchange output the counts
+    # job read, so the pinned partitions are the counted ones.
+    ranged = materialize(
         df.repartitionByRange(n, *[F.col(c) for c in order_cols])
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
     )
     # one row per partition — bounded by n, not by the data
     counts = {

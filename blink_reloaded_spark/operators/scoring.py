@@ -116,8 +116,7 @@ def two_phase_scored_pairs(
     nodes: DataFrame,
     threshold: float = DEFAULT_THRESHOLD,
     argmax_prune: bool = False,
-    vec_join: str | None = None,
-    cos_source: str = "join",
+    cos_source: str = "recompute",
     assume_partitioned: bool = False,
 ) -> DataFrame:
     """Score candidate pairs WITHOUT shipping the embedding vectors through
@@ -144,8 +143,8 @@ def two_phase_scored_pairs(
     A pair can only reach `threshold` if cheap >= threshold - W_COS*COS_MAX,
     and (argmax_prune) can only be its mention's argmax if
     cheap >= max_cheap(a) - W_COS*COS_MAX (the current cheap-max is a lower
-    bound on the group's best full score). Survivors then join `vec` BY ID
-    (tiny row count) and get the exact full score.
+    bound on the group's best full score). Survivors then get the cos term
+    (see `cos_source`) and the exact full score.
 
     Returns (a, b, jw, lev_sim, jacc, overlap, cos, score) with `score`
     bit-identical to score_pairs on every surviving pair. Guarantee by mode:
@@ -164,7 +163,7 @@ def two_phase_scored_pairs(
       survivors dominates (e.g. much wider vectors).
     Both modes pinned by tests/test_pipeline.py::test_two_phase_scoring_parity.
 
-    `nodes`: (id, text, tk, vec), the node table of both pair sides.
+    `nodes`: (id, text, tk[, vec]), the node table of both pair sides.
     There is no rebalance before the feature UDFs: the join chain already
     spreads pair rows by hash(b) then hash(a), per-key row counts are
     bounded upstream (top-k budget / max_block), and an extra exchange was
@@ -173,13 +172,13 @@ def two_phase_scored_pairs(
     `cos_source` (r5, VERDICT r4 #4 — the links chain's residual fixed
     latency was its shuffle-stage boundaries): "join" ships the stored
     `vec` columns to survivors through two id joins (the general path —
-    works for ANY vectors, e.g. real model embeddings); "recompute"
-    re-derives cos from the surviving pair's TEXTS via
-    embedding.pair_cos_from_text_udf — bit-identical scores when `vec` IS
-    the hashed text embedding (the pipeline's case; parity pinned by
-    tests/test_pipeline.py::test_cos_recompute_parity) and removes BOTH
-    vector joins and their four exchanges; nodes then needs no `vec`
-    column at all. At 10^12 turns "recompute" is also the right
+    works for ANY vectors, e.g. real model embeddings); "recompute" (the
+    default, and the pipeline's setting) re-derives cos from the surviving
+    pair's TEXTS via embedding.pair_cos_from_text_udf — bit-identical
+    scores when `vec` IS the hashed text embedding (the pipeline's case;
+    parity pinned by tests/test_pipeline.py::test_cos_recompute_parity)
+    and removes BOTH vector joins and their four exchanges; nodes then
+    needs no `vec` column at all. At 10^12 turns "recompute" is also the right
     cluster shape for hashed embeddings: the join path shuffles two
     |surfaces|-row ~1KB/row vec tables per run, the recompute path does a
     numpy pass over survivor texts with in-batch distinct-string dedup.
@@ -187,7 +186,7 @@ def two_phase_scored_pairs(
     `assume_partitioned` (r5): skip the initial repartition("a") when the
     caller KNOWS `cands` is already physically hash(a)-partitioned with
     adequate parallelism (the pipeline's candidates stage ends in exactly
-    that layout and localCheckpoint preserves physical partitions) — the
+    that layout and an in-run cut preserves physical partitions) — the
     repartition would be a redundant full exchange of the pair frame. The
     planner has forgotten the layout (ExistingRDD), so anything requiring
     hash(a) downstream still inserts its own exchange — but in recompute
@@ -267,19 +266,8 @@ def two_phase_scored_pairs(
         )
     va = nodes.select(F.col("id").alias("a"), F.col("vec").alias("a_vec"))
     vb = nodes.select(F.col("id").alias("b"), F.col("vec").alias("b_vec"))
-    # b-vec first (survivors are already partitioned by b), a-vec last so downstream per-`a` consumers
-    # (link_best) inherit hash(a) partitioning. `vec_join="shuffle_hash"`
-    # (the LARGE-node-table setting, chosen by LinkagePipeline.tuned): the
-    # vec tables are the WIDE dims (~1KB/row); a broadcast join builds a
-    # ~100MB+ HashedRelation serially on the driver (core-count-independent
-    # latency — measured as a flat links wall at a 20k-entity catalogue),
-    # and at 10^12 turns the surface-side vec table is unbounded, so
-    # broadcast is also the wrong cluster shape. Left None for small node
-    # tables, where forcing exchanges costs ~4s of extra stage boundaries
-    # against a free broadcast (measured at the 200-entity shape).
-    if vec_join:
-        va = va.hint(vec_join)
-        vb = vb.hint(vec_join)
+    # b-vec first (survivors are already partitioned by b), a-vec last so
+    # downstream per-`a` consumers (link_best) inherit hash(a) partitioning
     scored = (
         survivors.join(vb, "b")
         .join(va, "a")

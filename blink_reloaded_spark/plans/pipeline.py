@@ -36,6 +36,9 @@ Scale notes:
   ids share one node domain for clustering;
 * every stage checkpoint is an idempotent table -> kill/rerun resumes
   (sources/checkpoint.py), satisfying the north_rule resume requirement.
+* without a checkpoint_dir every stage boundary is an in-run cut
+  (sources.checkpoint.materialize): reliable when the session sets
+  `spark.checkpoint.dir`, executor-local otherwise.
 """
 
 from __future__ import annotations
@@ -67,7 +70,7 @@ from blink_reloaded_spark.operators.scoring import (
     match_edges,
     two_phase_scored_pairs,
 )
-from blink_reloaded_spark.sources.checkpoint import CheckpointManager
+from blink_reloaded_spark.sources.checkpoint import CheckpointManager, materialize
 
 # entity anchor ids: disjoint negative id space below -1 (NIL stays -1)
 ENTITY_ID_OFFSET = -1_000_000
@@ -113,18 +116,6 @@ class LinkagePipeline:
     # 128 = double-seeded 32-char hex string, collision-safe at 10^12
     # mentions (see operators/mentions.extract_mentions ID NOTE)
     id_bits: int = 64
-    # "local" = localCheckpoint (fast; pins executor memory/disk — fine on
-    # local mode and short jobs); "reliable" = RDD checkpoint to
-    # SparkContext's checkpoint dir (survives executor loss — the CLUSTER
-    # setting, clustering.py's documented swap). When "reliable" and
-    # checkpoint_dir is set, the RDD checkpoint dir is auto-derived.
-    checkpoint_mode: str = "local"
-    # scorer vector-join strategy: None lets the planner broadcast (right
-    # for small node tables); "shuffle_hash" for large catalogues, where a
-    # broadcast would serialize a ~100MB+ driver build and the surface-side
-    # table is unbounded at scale. Set by `tuned`. Only used when
-    # cos_source="join".
-    vec_join: str | None = None
     # cos term sourcing (r5, VERDICT r4 #4): "recompute" re-derives the
     # embedding dot product from the surviving pair's TEXTS (bit-identical —
     # this pipeline's vectors ARE hashed_embedding_udf(text)) and removes
@@ -246,17 +237,12 @@ class LinkagePipeline:
         # change the transitive closure)
         scored = two_phase_scored_pairs(
             pairs, surf,
-            threshold=threshold, argmax_prune=False,
-            vec_join=self.vec_join, cos_source=self.cos_source,
+            threshold=threshold, argmax_prune=False, cos_source=self.cos_source,
         )
         edges = match_edges(scored, threshold)
         if star is not None:
             edges = edges.unionByName(star)
-        return connected_components(
-            self._materialize(edges),
-            nodes=surf.select("id"),
-            checkpoint_mode=self.checkpoint_mode,
-        )
+        return connected_components(materialize(edges), nodes=surf.select("id"))
 
     @staticmethod
     def _surface_clusters(comps: DataFrame, surf: DataFrame) -> DataFrame:
@@ -292,31 +278,6 @@ class LinkagePipeline:
             ),
         )
 
-    def _materialize(self, df: DataFrame) -> DataFrame:
-        if self.checkpoint_mode == "reliable":
-            sc = self.spark.sparkContext
-            if sc.getCheckpointDir() is None:
-                if not self.checkpoint_dir:
-                    # fail fast (ADVICE r3): df.checkpoint() without a dir
-                    # crashes mid-run with a generic SparkException
-                    raise ValueError(
-                        "checkpoint_mode='reliable' needs checkpoint_dir= "
-                        "(auto-derives the RDD checkpoint dir) or a prior "
-                        "spark.sparkContext.setCheckpointDir(...)"
-                    )
-                sc.setCheckpointDir(self.checkpoint_dir + "/_rdd_ckpt")
-            return df.checkpoint()
-        # LAZY local checkpoint (r8): the SQL plan is truncated to a
-        # LogicalRDD immediately (so every multi-consumer / AQE-replan
-        # rationale for materializing still holds), but the RDD computes
-        # inside the FIRST consuming action instead of a dedicated job —
-        # an eager checkpoint per stage was a serial job barrier each
-        # (~0.3-0.5s of fixed latency; run_kb_free_append paid ~6 of
-        # them for a 200k-turn delta). Once computed it is cached like the
-        # eager form; measured at the bench shapes: append wall 7.6-8.9 →
-        # 6.4-7.0s, kb-free CPU −10%, outputs identical.
-        return df.localCheckpoint(eager=False)
-
     @classmethod
     def tuned(
         cls, spark: SparkSession, n_catalogue: int, **overrides: Any
@@ -338,7 +299,6 @@ class LinkagePipeline:
             # entirely non-gold (r3 curve: 50k -> blocked recall 0.9971)
             params["max_key_pairs"] = 15_000
             params["max_candidates_per_mention"] = 16
-            params["vec_join"] = "shuffle_hash"
         params.update(overrides)
         return cls(spark, **params)
 
@@ -356,11 +316,11 @@ class LinkagePipeline:
         keys_all = self._blocking_keys(surfaces_t, carry_cols=["is_mention"])
         ok = None
         if self.max_entity_block is not None or self.max_key_pairs is not None:
-            keys_all = self._materialize(keys_all)
+            keys_all = materialize(keys_all)
             # one-pass purge sizing over the flagged union (r5): both sides'
             # per-key counts from a single conditional aggregation,
             # materialized once for its two semi-join consumers
-            ok = self._materialize(
+            ok = materialize(
                 purged_block_keys(
                     keys_all, self.max_entity_block, self.max_key_pairs
                 )
@@ -402,7 +362,6 @@ class LinkagePipeline:
             surfaces_t,
             threshold=self.threshold,
             argmax_prune=False,
-            vec_join=self.vec_join,
             cos_source=self.cos_source,
             assume_partitioned=assume_partitioned,
         )
@@ -466,7 +425,7 @@ class LinkagePipeline:
 
         import time as _time
 
-        def stage(name: str, build, materialize: bool = True, **kw) -> DataFrame:
+        def stage(name: str, build, cut: bool = True, **kw) -> DataFrame:
             t0 = _time.time()
             if ckpt:
                 out = ckpt.stage(name, build, fingerprint=fingerprint, **kw)
@@ -474,12 +433,12 @@ class LinkagePipeline:
                 # no checkpoint store: still materialize each stage once —
                 # downstream actions (stage metrics, CC iterations) must not
                 # re-execute the upstream DAG (the scorer in particular).
-                # materialize=False for a stage nothing re-consumes (the
+                # cut=False for a stage nothing re-consumes (the
                 # final output when metrics are off): the caller's single
                 # action would otherwise pay a full extra write+read.
                 out = build()
-                if materialize:
-                    out = self._materialize(out)
+                if cut:
+                    out = materialize(out)
             self.metrics[f"{name}_sec"] = round(_time.time() - t0, 2)
             return out
 
@@ -572,7 +531,7 @@ class LinkagePipeline:
             # cos term computed only for survivors (recomputed from texts
             # by default, or joined by id in cos_source="join" mode — never
             # ~2KB of vectors per pair through the candidate shuffle).
-            # assume_partitioned: the localCheckpoint candidates stage ends
+            # assume_partitioned: the in-memory candidates cut ends
             # hash(a)-partitioned and keeps its physical layout; a parquet/
             # Iceberg checkpoint re-read does not (and may read back as one
             # split), so only the in-memory path skips the repartition.
@@ -605,7 +564,7 @@ class LinkagePipeline:
         clusters = stage(
             "clusters",
             build_clusters,
-            materialize=self.collect_metrics,
+            cut=self.collect_metrics,
             inputs=["links", "mentions"],
         )
         if self.collect_metrics:
@@ -636,8 +595,8 @@ class LinkagePipeline:
         m = self._extract(transcripts, surfaces, mentions).select(
             "mention_id", "conv_id", "turn_idx", "mention"
         )
-        surf = self._materialize(self._surfaces(m, "mention_id", entities))
-        cands = self._materialize(self.build_candidates_from(surf))
+        surf = materialize(self._surfaces(m, "mention_id", entities))
+        cands = materialize(self.build_candidates_from(surf))
         surf_link = self.build_links_from(cands, surf, assume_partitioned=True).select(
             F.col("surf_text").alias("mention"),
             (F.lit(ENTITY_ID_OFFSET) - F.col("b")).alias("entity_id"),
@@ -671,12 +630,12 @@ class LinkagePipeline:
         # materialize only the consumed projection (same rationale as
         # run()'s mentions stage: the conv/turn/position columns are resume
         # artifacts) — read by the surfaces pass and the final expansion
-        m_slim = self._materialize(
+        m_slim = materialize(
             self._extract(transcripts, surfaces, mentions).select(
                 "mention_id", "mention"
             )
         )
-        surf = self._materialize(self._surfaces(m_slim, "mention_id"))
+        surf = materialize(self._surfaces(m_slim, "mention_id"))
         comps = self._kb_free_components(surf, self._blocking_keys(surf), thr)
         return self._expand(m_slim, self._surface_clusters(comps, surf)).select(
             "node", F.col("cluster_id").alias("component")
@@ -775,7 +734,7 @@ class LinkagePipeline:
         # Arrow tasks billed 27 CPU-s where the same extraction over
         # coalesced input splits billed 10. Materialized: read by the
         # surfaces pass and the expansion.
-        m_new = self._materialize(
+        m_new = materialize(
             self._extract(
                 new_transcripts, surfaces, mentions, partitioning="auto"
             ).select("mention_id", "mention")
@@ -784,13 +743,13 @@ class LinkagePipeline:
         # when given, else derived by deduplicating the corpus-sized state
         # (one scan). Materialized for its many consumers (surfaces, guards,
         # new-surface anti-join, star edges, the changed-surface diff).
-        old = self._materialize(
+        old = materialize(
             (surface_state if surface_state is not None else state)
             .select("mention", "cluster_id")
             .distinct()
             .withColumn("sid", F.xxhash64(F.lit("surf"), "mention"))
         )
-        surf = self._materialize(
+        surf = materialize(
             self._surfaces(
                 old.select("mention", F.col("cluster_id").alias("cand"))
                 .unionByName(
@@ -801,7 +760,7 @@ class LinkagePipeline:
         )
         # materialized once: the cap guard and candidate_pairs would
         # otherwise each re-run the MinHash keying subtree
-        keys = self._materialize(self._blocking_keys(surf))
+        keys = materialize(self._blocking_keys(surf))
 
         old_ids = old.select(F.col("sid").alias("id")).distinct()
         capped = (
@@ -853,7 +812,7 @@ class LinkagePipeline:
         )
         # surface -> new cluster id, materialized for its consumers (the
         # changed-surface diff and the expansion)
-        surf_cluster = self._materialize(self._surface_clusters(comps, surf))
+        surf_cluster = materialize(self._surface_clusters(comps, surf))
         old_rows = state.select("mention_id", "mention")
         if output == "delta":
             changed = (

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from blink_reloaded_spark.plans.pipeline import LinkagePipeline
+from blink_reloaded_spark.sources.checkpoint import materialize
 
 
 def write_links_idempotent(
@@ -64,7 +65,7 @@ def incremental_link(
     `output_path`. `available_now=True` drains what is currently available
     and stops (the backfill/test mode); False runs continuously.
     """
-    ent = entities.localCheckpoint()
+    ent = materialize(entities)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         links = pipeline.run_links(batch_df, ent, surfaces=surfaces)
@@ -119,10 +120,10 @@ def cluster_kb_free_sink(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        m = extract_mentions(
+        m = materialize(extract_mentions(
             batch_df, surfaces, with_context=False, partitioning="auto",
             id_bits=pipeline.id_bits,
-        ).localCheckpoint()
+        ))
         prev = None
         try:
             snaps = spark.read.parquet(state_path).where(
@@ -130,9 +131,9 @@ def cluster_kb_free_sink(
             )
             latest = snaps.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
             if latest is not None:
-                prev = snaps.where(F.col("batch_id") == latest).drop(
-                    "batch_id"
-                ).localCheckpoint()
+                prev = materialize(
+                    snaps.where(F.col("batch_id") == latest).drop("batch_id")
+                )
         except AnalysisException:
             prev = None  # first batch: no state yet
         if prev is None:

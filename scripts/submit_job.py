@@ -4,9 +4,13 @@ for spark-submit --py-files ... on a multi-executor cluster").
 
 Usage (cluster):
     python scripts/make_pyfiles_zip.py   # -> dist/blink_reloaded_spark.zip
-    spark-submit --py-files dist/blink_reloaded_spark.zip \
+    spark-submit --conf spark.checkpoint.dir=<shared-fs-path> \
+        --py-files dist/blink_reloaded_spark.zip \
         scripts/submit_job.py --transcripts <iceberg-or-parquet-path> \
         --entities <path> --output <path> --checkpoint-dir <path>
+
+`spark.checkpoint.dir` makes every in-run lineage cut reliable (it
+survives executor loss); `--checkpoint-dir` is the resumable stage store.
 
 Local smoke (tests/test_submit.py runs this, with the zip built into its
 temp dir via `make_pyfiles_zip.py <dir>`):

@@ -163,22 +163,3 @@ def test_iceberg_path_records_snapshot_lineage():
     assert man["rows"] == 7 and man["n_files"] == 2
     assert man["fingerprint"] == "fpX" and man["inputs"] == ["in1"]
     assert "lineage_error" not in man
-
-
-def test_reliable_mode_without_dir_fails_fast(spark):
-    """ADVICE r3: checkpoint_mode='reliable' with no checkpoint dir must
-    raise a clear ValueError up front, not a generic SparkException at the
-    first mid-run action."""
-    import pytest
-
-    from blink_reloaded_spark.operators.clustering import connected_components
-    from blink_reloaded_spark.plans.pipeline import LinkagePipeline
-
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("another test already set the global RDD checkpoint dir")
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="checkpoint dir"):
-        connected_components(edges, checkpoint_mode="reliable")
-    pipe = LinkagePipeline(spark, checkpoint_mode="reliable")
-    with pytest.raises(ValueError, match="reliable"):
-        pipe._materialize(edges)

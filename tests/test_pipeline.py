@@ -111,31 +111,72 @@ def test_run_links_agrees_with_run(spark, fixture, tuned):
     assert diff == 0, f"run_links-derived clusters diverged from run(): {diff}"
 
 
-def test_run_links_reliable_never_local_checkpoints(spark, fixture, tmp_path,
-                                                    monkeypatch):
-    """Durability contract: with checkpoint_mode='reliable' and the
-    large-catalogue purge caps on, nothing under run_links may fall back to
-    executor-pinned localCheckpoint (blocks lost with an executor would
-    fail the job on a cluster)."""
-    from pyspark.sql import DataFrame
+@pytest.fixture
+def reliable_cuts(spark, tmp_path):
+    """Call it to give the session an RDD checkpoint dir — what
+    `spark.checkpoint.dir` sets at session start — so every in-run cut
+    turns reliable; returns the dir. Cleared at teardown, so no later test
+    inherits a global dir."""
+    sc = spark.sparkContext
+
+    def enable() -> str:
+        sc.setCheckpointDir(str(tmp_path / "rdd_ckpt"))
+        return sc.getCheckpointDir().removeprefix("file:")
+
+    yield enable
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+
+
+def _entry_outputs(spark, fixture, state_path):
+    """Sorted output rows of every entry point over the fixture: run and
+    run_links with the large-catalogue purge caps on (their key-table cuts
+    run too), and two micro-batches through the streaming KB-free sink,
+    whose first batch runs run_kb_free and whose second runs
+    run_kb_free_append onto the first batch's state."""
+    from blink_reloaded_spark.streaming.incremental import cluster_kb_free_sink
 
     cat, tr, me = fixture
     ents = cat.entities_df(spark)
-    want = sorted(map(tuple, LinkagePipeline.tuned(spark, 20_000).run_links(
-        tr, ents, mentions=me
-    ).collect()))
+    surfaces = [a["surface"] for a in cat.aliases]
+    tuned = LinkagePipeline.tuned(spark, 20_000)
+    assert tuned.max_key_pairs is not None
+    sink = cluster_kb_free_sink(LinkagePipeline(spark), surfaces, state_path)
+    sink(tr.where(F.crc32(F.col("conv_id")) % 2 == 0), 0)
+    sink(tr.where(F.crc32(F.col("conv_id")) % 2 == 1), 1)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    state = spark.read.parquet(state_path)
+    return {
+        "run": rows(tuned.run(tr, ents, surfaces=surfaces)),
+        "run_links": rows(tuned.run_links(tr, ents, mentions=me)),
+        "sink/run_kb_free": rows(state.where("batch_id = 0")),
+        "sink/run_kb_free_append": rows(state.where("batch_id = 1")),
+    }
+
+
+def test_run_links_reliable_never_local_checkpoints(spark, fixture, tmp_path,
+                                                    monkeypatch, reliable_cuts):
+    """Durability contract: once the session has an RDD checkpoint dir, no
+    entry point may fall back to an executor-pinned localCheckpoint (blocks
+    lost with an executor would fail the job on a cluster), the cuts land
+    in that dir, and every output equals the plain session's."""
+    import glob
+
+    want = _entry_outputs(spark, fixture, str(tmp_path / "plain"))
+    assert all(want.values()), {k: len(v) for k, v in want.items()}
 
     def forbidden(self, *a, **k):
-        raise AssertionError("localCheckpoint called in reliable mode")
+        raise AssertionError("localCheckpoint called with a checkpoint dir set")
 
-    monkeypatch.setattr(DataFrame, "localCheckpoint", forbidden)
-    pipe = LinkagePipeline.tuned(
-        spark, 20_000, checkpoint_mode="reliable",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert pipe.max_key_pairs is not None
-    got = sorted(map(tuple, pipe.run_links(tr, ents, mentions=me).collect()))
+    rdd_dir = reliable_cuts()
+    # the session's concrete class: classic DataFrame overrides the
+    # pyspark.sql.DataFrame method, so patching the base is a no-op
+    monkeypatch.setattr(type(spark.range(0)), "localCheckpoint", forbidden)
+    got = _entry_outputs(spark, fixture, str(tmp_path / "reliable"))
     assert got == want
+    assert glob.glob(f"{rdd_dir}/rdd-*")
 
 
 def test_turn_text_preserved(spark, fixture):
@@ -193,14 +234,16 @@ def test_two_phase_scoring_parity(spark, fixture):
     thr = 0.6
     want_links = sorted(map(tuple, link_best(full, thr).collect()))
     got_links = sorted(map(tuple, link_best(
-        two_phase_scored_pairs(cands, nodes, threshold=thr, argmax_prune=True),
+        two_phase_scored_pairs(cands, nodes, threshold=thr, argmax_prune=True,
+                               cos_source="join"),
         thr,
     ).collect()))
     assert got_links == want_links
 
     want_edges = sorted(map(tuple, match_edges(full, thr).collect()))
     got_edges = sorted(map(tuple, match_edges(
-        two_phase_scored_pairs(cands, nodes, threshold=thr, argmax_prune=False),
+        two_phase_scored_pairs(cands, nodes, threshold=thr, argmax_prune=False,
+                               cos_source="join"),
         thr,
     ).collect()))
     assert got_edges == want_edges
@@ -208,7 +251,7 @@ def test_two_phase_scoring_parity(spark, fixture):
     # strict subset of pairs), else the two-phase plan is pure overhead
     n_all = cands.count()
     n_surv = two_phase_scored_pairs(
-        cands, nodes, threshold=thr, argmax_prune=False
+        cands, nodes, threshold=thr, argmax_prune=False, cos_source="join"
     ).count()
     assert n_surv < n_all
 
@@ -252,27 +295,30 @@ def test_cos_recompute_parity(spark, fixture):
         two_phase_scored_pairs(cands, nodes, cos_source="typo")
 
 
-def test_reliable_checkpoint_mode(spark, fixture, tmp_path):
-    """checkpoint_mode='reliable' (RDD checkpoint dir — the cluster setting;
-    localCheckpoint pins executor memory and dies with the executor) must
-    produce the identical clustering."""
-    cat, tr, me = fixture
-    ents = cat.entities_df(spark)
-    surfaces = [a["surface"] for a in cat.aliases]
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "rdd_ckpt"))
-    base = LinkagePipeline(spark).run(tr, ents, surfaces=surfaces)
-    rel = LinkagePipeline(spark, checkpoint_mode="reliable").run(
-        tr, ents, surfaces=surfaces
+def test_reliable_checkpoint_mode(spark, reliable_cuts):
+    """The in-run cut follows the session: executor-local without an RDD
+    checkpoint dir, reliable (files under the dir) with one. The
+    distributed CC loop, which cuts every round, gives the same components
+    either way."""
+    import glob
+
+    from blink_reloaded_spark.operators.clustering import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (10, 31)],
+        "src long, dst long",
     )
-    assert sorted(map(tuple, base.collect())) == sorted(map(tuple, rel.collect()))
-    # kb-free path exercises the reliable CC loop too
-    kb_base = LinkagePipeline(spark).run_kb_free(tr, surfaces=surfaces)
-    kb_rel = LinkagePipeline(spark, checkpoint_mode="reliable").run_kb_free(
-        tr, surfaces=surfaces
-    )
-    assert sorted(map(tuple, kb_base.collect())) == sorted(
-        map(tuple, kb_rel.collect())
-    )
+
+    def components():
+        # num_partitions=2 skips the single-task union-find: the round loop
+        return sorted(map(tuple, connected_components(
+            edges, num_partitions=2
+        ).collect()))
+
+    want = components()
+    rdd_dir = reliable_cuts()
+    assert components() == want
+    assert glob.glob(f"{rdd_dir}/rdd-*")
 
 
 def test_128bit_mention_ids(spark, fixture):

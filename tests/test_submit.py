@@ -4,6 +4,7 @@ repo."""
 
 from __future__ import annotations
 
+import glob
 import os
 import subprocess
 import sys
@@ -11,7 +12,9 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_spark_submit_pyfiles(tmp_path):
+def _submit(tmp_path, *conf: str) -> None:
+    """Run scripts/submit_job.py --demo under spark-submit with `conf`
+    before the application arguments; asserts it succeeded."""
     zip_out = subprocess.run(
         [
             sys.executable,
@@ -29,6 +32,7 @@ def test_spark_submit_pyfiles(tmp_path):
             "spark-submit",
             "--master",
             "local[4]",
+            *conf,
             "--py-files",
             zip_out,
             os.path.join(ROOT, "scripts", "submit_job.py"),
@@ -44,3 +48,16 @@ def test_spark_submit_pyfiles(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "OK rows=" in r.stdout
+
+
+def test_spark_submit_pyfiles(tmp_path):
+    _submit(tmp_path)
+
+
+def test_spark_submit_checkpoint_dir_conf_makes_cuts_reliable(tmp_path):
+    """A cluster deployment sets Spark's own `spark.checkpoint.dir` and no
+    --checkpoint-dir: run()'s in-memory stage cuts must then be reliable
+    RDD checkpoints written under that dir."""
+    rdd = tmp_path / "rdd"
+    _submit(tmp_path, "--conf", f"spark.checkpoint.dir={rdd}")
+    assert glob.glob(str(rdd / "*" / "rdd-*"))
