@@ -70,7 +70,7 @@ def _embed_block(texts: pd.Series) -> np.ndarray:
     Each output row is a pure per-row function of its input string (batch
     padding is masked out), so the SAME kernel backs both the stored-vector
     path (hashed_embedding_udf) and the recompute-from-text cos path
-    (pair_cos_from_text_udf) with bit-identical values.
+    (pair_cos_np) with bit-identical values.
 
     Char-level features keep typo'd variants ("fgu coerp" ~ "fagu corp")
     cosine-close where token-level features go to zero — the same property
@@ -123,35 +123,57 @@ def hashed_embedding_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(list(_embed_matrix(texts)))
 
 
-@pandas_udf(DoubleType())
-def pair_cos_from_text_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """dot(embed(a), embed(b)) recomputed from the pair TEXTS — bit-identical
-    to joining stored hashed_embedding_udf vectors and running
-    dot_product_udf (same _embed_matrix float32 rows, same float64 einsum),
-    but with ZERO vector joins: at a 20k-entity catalogue the stored-vector
-    path shuffled two ~100MB (id, vec) tables through two extra exchanges
-    per links run (plan audit r5). In-batch unique-string dedup makes the
-    recompute cheap: pair batches repeat surfaces heavily (<=16 candidates
-    per mention surface; hot entities across mentions), so the kernel runs
-    once per DISTINCT string per batch.
-
-    Only valid when the score's vectors ARE the hashed text embedding
-    (LinkagePipeline's case); external model vectors must keep the join
-    path (two_phase_scored_pairs cos_source="join")."""
+def pair_cos_np(a: pd.Series, b: pd.Series) -> np.ndarray:
+    """float64 dot(embed(a[i]), embed(b[i])) per pair of TEXTS — equal to
+    the dot product of the two stored hashed_embedding_udf vectors (same
+    _embed_matrix float32 rows, same float64 einsum; pinned by
+    tests/test_kernels.py). The kernel runs once per DISTINCT string of
+    the batch: pair batches repeat surfaces heavily (<=16 candidates per
+    mention surface; hot entities across mentions). NULL texts embed as
+    ''."""
     if len(a) == 0:
-        return pd.Series([], dtype=float)
+        return np.zeros(0, dtype=np.float64)
     av = a.fillna("").astype(str).to_numpy()
     bv = b.fillna("").astype(str).to_numpy()
     # hash-based dedup (pd.factorize), not np.unique: the sort-based unique
     # chases PyUnicode pointers O(n log n) across the heap — measured 10x
-    # the CPU of factorize on a 40k-string pair batch, and it was the
-    # largest UNtiled working set left in the links stage's Python workers.
-    # Row values don't depend on uniq order (each embedding row is a pure
-    # per-string function), so the swap is bit-identical.
+    # the CPU of factorize on a 40k-string pair batch. Row values don't
+    # depend on uniq order (each embedding row is a pure per-string
+    # function), so the swap is bit-identical.
     inverse, uniq = pd.factorize(np.concatenate([av, bv]), sort=False)
     emb = _embed_matrix(pd.Series(uniq)).astype(np.float64)
-    ai, bi = inverse[: len(av)], inverse[len(av):]
-    return pd.Series(np.einsum("ij,ij->i", emb[ai], emb[bi]))
+    return _rows_dot(emb, inverse[: len(av)], emb, inverse[len(av):])
+
+
+def pair_cos_take_np(
+    a_texts: pd.Series, ai: np.ndarray, b_texts: pd.Series, bi: np.ndarray
+) -> np.ndarray:
+    """pair_cos_np(a_texts[ai], b_texts[bi]), embedding each listed text
+    once: for callers that already hold the pairs as positions into two
+    distinct-text lists (the probe kernel: a batch's mention surfaces and
+    their candidate entities). Bit-identical to pair_cos_np."""
+    ea = _embed_matrix(a_texts).astype(np.float64)
+    eb = _embed_matrix(b_texts).astype(np.float64)
+    return _rows_dot(ea, ai, eb, bi)
+
+
+def _rows_dot(ea: np.ndarray, ai: np.ndarray, eb: np.ndarray, bi: np.ndarray) -> np.ndarray:
+    return np.einsum("ij,ij->i", ea[ai], eb[bi])
+
+
+@pandas_udf(DoubleType())
+def pair_cos_from_text_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+    """pair_cos_np as a column: cos recomputed from the pair TEXTS with
+    ZERO vector joins (at a 20k-entity catalogue the stored-vector path
+    shuffled two ~100MB (id, vec) tables through two extra exchanges per
+    links run, plan audit r5). The KB-free chain's scorer
+    (two_phase_scored_pairs) calls it; the KB join computes the same
+    values inside its probe kernel (pair_cos_take_np, operators/blocking.py).
+
+    Only valid when the score's vectors ARE the hashed text embedding
+    (LinkagePipeline's case); external model vectors must keep the join
+    path (two_phase_scored_pairs cos_source="join")."""
+    return pd.Series(pair_cos_np(a, b))
 
 
 # deterministic, but marked nondeterministic for the same reason as

@@ -5,17 +5,19 @@ The Column-expression kernels (poly_hash, perm_hash, simhash_exploded) are
 pure int64 arithmetic (whole-stage codegen) AND engine-portable: the DuckDB
 oracle reproduces the exact values, so LSH itself is correctness-checked,
 not just smoke-tested. MinHash has one implementation, the numpy kernel:
-shingle_hashes_np -> minhash_np per Arrow batch, behind two Spark entry
-points, minhash_sigs_np_udf (signature arrays, dedup03) and
-minhash_band_keys_np (band keys, pipeline blocking). Its Column-expression
-references (explode -> groupBy(id) signature table, band keys, per-bit
+shingle_hashes_np -> minhash_np per Arrow batch (band_keys_np formats the
+band keys), behind minhash_sigs_np_udf (signature arrays, dedup03),
+minhash_band_keys_np (band keys, the KB-free self-join) and the pipeline's
+entity key index and probe kernel (operators/blocking.py). Its
+Column-expression references (explode -> groupBy(id) signature table, band keys, per-bit
 SimHash, zip_with agreement) live in tests/hashing_reference.py, and
 tests/test_kernels.py and tests/test_functions.py pin the kernels
 bit-identical to them.
 
 Reference analogue: the FAISS ANN index (`blink/indexer/faiss_indexer.py:
-47-141`) — here the index *is* a table of band keys; retrieval is an
-equi-join on the band key (SURVEY.md J7/J8).
+47-141`) — here the index is band keys: a table equi-joined on the key
+(the KB-free self-join), or a key -> entity index the mentions probe (the
+KB join; SURVEY.md J7/J8).
 
 Production note: at 100 TB you swap `poly_hash` for `xxhash64_mod` (one
 native hash per shingle instead of a per-char Horner; not DuckDB-portable,
@@ -310,6 +312,34 @@ def minhash_sigs_np_udf(k: int, num_hashes: int, hash_fn=None):
     return _sigs
 
 
+def band_keys_np(texts, bands: int, rows: int, k: int, base: str):
+    """The MinHash-LSH band keys of a pyarrow string array of NORMALIZED
+    text as one pyarrow string array, row-major: row i owns keys
+    ``[i * bands, (i + 1) * bands)``, band b's key '<b>|<v>_<v>...' (its
+    `rows` signature values). shingle_hashes_np -> minhash_np -> strings
+    built by pyarrow compute; the contract checks are the callers'
+    (_check_minhash_contract)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n, nh = len(texts), bands * rows
+    h, ptr = shingle_hashes_np(texts, k, base)
+    sig = minhash_np(h, ptr, nh)
+    # list (row, band) holds the band's `rows` values -> 'v_v', then the
+    # band label in front
+    vals = pc.cast(pa.array(sig.ravel()), pa.string())
+    joined = pc.binary_join(
+        pa.ListArray.from_arrays(
+            pa.array(np.arange(0, n * nh + 1, rows, dtype=np.int32)), vals
+        ),
+        "_",
+    )
+    labels = pa.array([f"{b}|" for b in range(bands)], type=pa.string())
+    return pc.binary_join_element_wise(
+        labels.take(pa.array(np.tile(np.arange(bands), n))), joined, ""
+    )
+
+
 def minhash_band_keys_np(
     df,
     id_col: str,
@@ -328,6 +358,8 @@ def minhash_band_keys_np(
     normalize=False)`` (multiset pinned by tests/test_kernels.py) without
     their exchange and bands*rows-aggregate expression tree — given one
     row per (id, carry...), which the reference's groupBy would merge.
+    The keys are band_keys_np's, which operators.blocking's probe kernel
+    computes for the mention side of the KB join.
 
     `hash_fn`: poly_hash (default) or xxhash64_mod. NULL text keys like
     the reference: dropped under poly_hash (poly_hash of its one NULL
@@ -336,7 +368,6 @@ def minhash_band_keys_np(
     bands*rows > len(PERMS), and for a k outside the numpy kernel's exact
     domain (k <= 9 for poly_hash, 4*k <= 31 UTF-8 bytes for xxhash64)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark.sql.types import StringType, StructField, StructType
 
     base = _base_name(hash_fn)
@@ -364,27 +395,13 @@ def minhash_band_keys_np(
         + [StructField("block_key", StringType(), False)]
     )
     names = schema.fieldNames()
-    labels = pa.array([f"{b}|" for b in range(bands)], type=pa.string())
 
     def keys(batches):
         for batch in batches:
             n = batch.num_rows
             if not n:
                 continue
-            h, ptr = shingle_hashes_np(batch.column(len(carry) + 1), k, base)
-            sig = minhash_np(h, ptr, nh)
-            # row-major (row, band, r): list (row, band) holds the band's
-            # `rows` values -> 'v_v', then the band label in front
-            vals = pc.cast(pa.array(sig.ravel()), pa.string())
-            joined = pc.binary_join(
-                pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, n * nh + 1, rows, dtype=np.int32)), vals
-                ),
-                "_",
-            )
-            key = pc.binary_join_element_wise(
-                labels.take(pa.array(np.tile(np.arange(bands), n))), joined, ""
-            )
+            key = band_keys_np(batch.column(len(carry) + 1), bands, rows, k, base)
             take = pa.array(np.repeat(np.arange(n), bands))
             cols = [batch.column(i).take(take) for i in range(len(carry) + 1)]
             yield pa.RecordBatch.from_arrays(cols + [key], names=names)

@@ -112,9 +112,31 @@ def jaro_winkler_np(sa: pd.Series, sb: pd.Series,
     return _jaro_winkler_block(sa, sb)
 
 
+def jaro_winkler_take_np(
+    a_texts: pd.Series, ai: np.ndarray, b_texts: pd.Series, bi: np.ndarray,
+    tile: int = TILE,
+) -> np.ndarray:
+    """jaro_winkler_np(a_texts[ai], b_texts[bi]) with each listed text
+    converted to codes once, for pair batches that repeat their strings
+    (a mention surface against its candidate entities): the pair rows
+    gather the code rows. Bit-identical — the score is a per-row function
+    of the two code rows, whatever the width they are padded to."""
+    a, la = _to_codes(a_texts)
+    b, lb = _to_codes(b_texts)
+    return np.concatenate([
+        _jaro_winkler_codes(a[ai[i:i + tile]], la[ai[i:i + tile]],
+                            b[bi[i:i + tile]], lb[bi[i:i + tile]])
+        for i in range(0, len(ai), tile)
+    ] or [np.zeros(0, dtype=np.float64)])
+
+
 def _jaro_winkler_block(sa: pd.Series, sb: pd.Series) -> np.ndarray:
-    a, la = _to_codes(sa)
-    b, lb = _to_codes(sb)
+    return _jaro_winkler_codes(*_to_codes(sa), *_to_codes(sb))
+
+
+def _jaro_winkler_codes(
+    a: np.ndarray, la: np.ndarray, b: np.ndarray, lb: np.ndarray
+) -> np.ndarray:
     B = a.shape[0]
     if B == 0:
         return np.zeros(0, dtype=np.float64)

@@ -2,13 +2,29 @@
 `blink/main_dense.py:238-262` full-matmul/FAISS top-k, `blink/
 candidate_generation.py:68-115` BM25 token-overlap).
 
-The "index" is a table: every record emits blocking keys (MinHash-LSH bands
-over char shingles, random-hyperplane embedding buckets, or a cheap prefix
-key); candidate pairs are an equi-self-join on the key. The MinHash band keys
-come from one Arrow-batched numpy kernel (hashing.minhash_band_keys_np, run
-through mapInArrow, bit-identical to the Column-expression reference in
-tests/hashing_reference.py); text normalization and the extra keys stay JVM
-Column expressions.
+Two shapes of the same keys. The KB-free self-join keeps the index as a
+table: every record emits blocking keys (MinHash-LSH bands over char
+shingles, random-hyperplane embedding buckets, or a cheap prefix key) and
+candidate pairs are an equi-self-join on the key (`candidate_pairs`). The
+mention -> entity join instead probes an index, as the reference probes its
+FAISS index once per mention: the entity side is keyed on the driver into
+a key -> entity CSR index (`EntityKeyIndex`), and ONE mapInArrow pass over
+the mention surfaces (`probe_candidates`) keys each batch, probes the index,
+keeps the top-k entities by shared-key count and computes the two Python
+features of the pair score (Jaro-Winkler, hashed-embedding cos), so no key
+rows are shuffled and the Python boundary is crossed once. Both sides' band
+keys come from one numpy kernel (hashing.band_keys_np, bit-identical to the
+Column-expression reference in tests/hashing_reference.py); text
+normalization and the extra keys stay JVM Column expressions. The key
+equi-join the probe replaced is the parity reference in
+tests/blocking_reference.py.
+
+KNOWN LIMIT: the driver fetches, keys and holds the whole entity index once
+(it reaches the tasks inside the kernel's closure, split into shards above
+the session's autoBroadcastJoinThreshold). At the reference's 5.9M titles
+and ~25 keys per title that is several GB of driver memory and a
+single-core keying pass; a catalogue of that size needs the index built
+per key-hash partition instead.
 
 Skew handling (north_rule): hot keys (a mention surface occurring millions of
 times at 10^12 scale would make one block quadratic) are bounded by
@@ -19,17 +35,34 @@ from top-k retrieval (O2): candidate count is O(n·w), never O(n²), and the
 oversized block is SALTED into ~max_block-sized sub-blocks (salt = hash(id)
 mod ceil(size/max_block)) so no single task owns a hot key — the north
 rule's salted repartitioning. AQE skew-join splitting handles residual
-imbalance on the equi-join paths; the scorer input is additionally
-rebalanced round-robin in the pipeline.
+imbalance on the equi-join paths.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Any
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
-from blink_reloaded_spark.functions.hashing import minhash_band_keys_np
+from blink_reloaded_spark.functions.embedding import pair_cos_take_np
+from blink_reloaded_spark.functions.hashing import (
+    _base_name,
+    _check_minhash_contract,
+    band_keys_np,
+    minhash_band_keys_np,
+)
+from blink_reloaded_spark.functions.similarity import jaro_winkler_take_np
 from blink_reloaded_spark.functions.text import normalize_text
 
 
@@ -161,14 +194,17 @@ def purged_block_keys(
     max_key_pairs: int | None = None,
 ) -> DataFrame:
     """Surviving block keys from a FLAGGED key table (id, is_mention,
-    block_key), for mention_entity_candidates' `ok_keys`: per-key mention
-    and entity counts in ONE conditional aggregation — one exchange and one
-    scan of the (large) key table, where per-side groupBys cost two of each
-    (r5 plan audit).
+    block_key): per-key mention and entity counts in ONE conditional
+    aggregation — one exchange and one scan of the (large) key table, where
+    per-side groupBys cost two of each (r5 plan audit) — filtered by
+    `purge_keep`. The pipeline applies the same rule to its entity index
+    (EntityKeyIndex.purged, counts from mention_key_counts); this table
+    form sizes key tables (the benchmark's side counts, the parity
+    reference of tests/blocking_reference.py).
 
     `max_entity_block` is BLOCK PURGING (the standard record-linkage
     bound, cf. JedAI/Dedoop block purging): block keys shared by more than
-    this many ENTITIES are dropped before the join. Such blocks come from
+    this many ENTITIES are dropped from the index. Such blocks come from
     non-discriminative keys (min-hash concentration on common suffix
     shingles) and would dominate join cost while adding ~no precision; every
     record still carries its other band keys + the prefix key, which is
@@ -189,81 +225,303 @@ def purged_block_keys(
         F.count(F.when(F.col("is_mention"), 1)).alias("msz"),
         F.count(F.when(~F.col("is_mention"), 1)).alias("esz"),
     )
-    cond = F.lit(True)
+    keep = purge_keep(F.col("esz"), F.col("msz"), max_entity_block, max_key_pairs)
+    return sz.where(keep).select("block_key")
+
+
+def purge_keep(esz, msz, max_entity_block: int | None, max_key_pairs: int | None):
+    """The block purge rule over per-key entity and mention counts, as
+    Columns (purged_block_keys) or numpy arrays (EntityKeyIndex.purged)
+    alike: keep a key unless it is shared by more than `max_entity_block`
+    entities or its join product exceeds `max_key_pairs`."""
+    keep = esz >= 0
     if max_entity_block is not None:
-        cond = cond & (F.col("esz") <= max_entity_block)
+        keep = keep & (esz <= max_entity_block)
     if max_key_pairs is not None:
-        cond = cond & (F.col("esz") * F.col("msz") <= max_key_pairs)
-    return sz.where(cond).select("block_key")
+        keep = keep & (esz * msz <= max_key_pairs)
+    return keep
 
 
-def mention_entity_candidates(
-    mention_keys: DataFrame,
-    entity_keys: DataFrame,
-    ok_keys: DataFrame | None = None,
-    max_candidates_per_mention: int | None = None,
-) -> DataFrame:
-    """Candidate (mention, entity) pairs: equi-join of the two (id,
-    block_key) tables on block_key -> distinct pairs.
+# The probe kernel's output: one row per kept (mention, entity) pair with
+# its shared-key count and the raw Python features of the pair score.
+# LinkagePipeline fingerprints this schema, so a candidates checkpoint
+# written under another kernel output is rebuilt, never resumed.
+PROBE_SCHEMA = StructType([
+    StructField("a", LongType(), False),
+    StructField("b", LongType(), False),
+    StructField("n_shared", IntegerType(), False),
+    StructField("jw", DoubleType(), False),
+    StructField("cos", DoubleType(), False),
+])
+# mention rows per kernel step: every output row is a function of its
+# mention row and the index, so the step only bounds the pair working set
+# (the JW and embedding kernels tile it further, functions/similarity.TILE)
+PROBE_ROWS = 2048
 
-    This is the reference's retrieval stage as a *join* (`blink/main_dense.py:
-    238-262` scores each mention against the whole catalogue; we only score
-    within shared blocks). Cost is linear in Σ_key |mentions_key|·|entities_key|
-    — a 1-to-few join since entities per key is small — never quadratic in
-    mentions. Skew on hot keys is split by AQE skew-join handling.
 
-    `ok_keys` (block_key) restricts both sides to the keys that survive
-    block purging — computed by the caller with `purged_block_keys` over
-    its flagged key table, and materialized by the caller (its two
-    semi-join consumers would otherwise each recompute the sizing subtree)
-    under the caller's own durability contract. None = no purge.
+@dataclass(frozen=True)
+class KeySpec:
+    """How a record is keyed: MinHash-LSH bands over the normalized text
+    (band_keys_np with `base`) plus the non-NULL `extra` key columns — the
+    keys `blocking_keys` emits with the same parameters."""
 
-    `max_candidates_per_mention` is the reference's top-k retrieval bound
-    (O2, `blink/main_dense.py:238-262` keeps top_k=100 per mention): keep
-    the k candidates sharing the MOST block keys with the mention (ties by
-    entity id). Without it, the scorer input is Σ_key |m_k|·|e_k| — hot
-    keys at the purge cap times popular mention keys multiply into
-    hundreds of millions of Python-scored pairs at 10^4+ entities; with
-    it, scorer input is exactly |mentions| * k, and shared-key count is a
-    better-than-random cheap rank (band agreement ~ jaccard).
-    """
-    m = mention_keys.select(F.col("id").alias("a"), "block_key")
-    e = entity_keys.select(F.col("id").alias("b"), "block_key")
-    if ok_keys is not None:
-        m = m.join(ok_keys, "block_key", "left_semi")
-        e = e.join(ok_keys, "block_key", "left_semi")
-    if max_candidates_per_mention is None:
-        # repartition("a") + dropDuplicates instead of a bare distinct (r8):
-        # the same ONE exchange (hash(a) satisfies the (a, b) dedup's
-        # clustering requirement), and downstream consumers inherit
-        # hash(a), the distribution link_best's groupBy("a") wants. NB: a
-        # repartition by column WITHOUT a partition count IS AQE-coalesced
-        # on Spark 4.1.2 (only an explicit count pins it), so at
-        # small-catalogue sizes the pairs can still land in ONE partition
-        # and the links stage's scorer UDFs run single-task.
-        return (
-            m.join(e, "block_key")
-            .select("a", "b")
-            .repartition("a")
-            .dropDuplicates()
+    bands: int
+    rows: int
+    shingle_k: int
+    base: str
+    extra: tuple[str, ...] = ()
+
+    @classmethod
+    def of(
+        cls, bands: int, rows: int, shingle_k: int, hash_fn=None,
+        extra_key_cols: list[str] | None = None,
+    ) -> "KeySpec":
+        base = _base_name(hash_fn)
+        _check_minhash_contract(shingle_k, bands * rows, base)
+        return cls(bands, rows, shingle_k, base, tuple(extra_key_cols or ()))
+
+    def input(self, df: DataFrame) -> DataFrame:
+        """(id, text, __nt, extra keys...) of a (id, text, extra...) frame,
+        the text normalized in the JVM: the columns `keys` reads from
+        index 2 on."""
+        return df.select(
+            F.col("id").cast("long").alias("id"),
+            "text",
+            normalize_text(F.col("text")).alias("__nt"),
+            *[F.col(c).cast("string") for c in self.extra],
         )
-    # ONE exchange for the whole count+rank tail (VERDICT r3 #1b): the key
-    # join emits one row per shared (a, b, key); repartitioning that frame
-    # by `a` satisfies BOTH the (a, b) aggregation's and the per-`a`
-    # window's required distribution, so groupBy and row_number run
-    # exchange-free on top — the old shape shuffled the full frame twice
-    # (hash(a, b) for the count, then hash(a) for the rank). Balance: the
-    # join product per `a` is bounded by the purge caps (a mention's keys x
-    # max_entity_block / max_key_pairs), so hash(a) partitions evenly.
-    shared = (
-        m.join(e, "block_key")
-        .repartition("a")
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_shared"))
+
+    def keys(self, cols: list) -> tuple[Any, np.ndarray]:
+        """(keys, owner): the block keys of a batch whose columns are
+        [normalized text, extra keys...], and the row owning each key."""
+        import pyarrow as pa
+
+        nt = cols[0]
+        keys = [band_keys_np(nt, self.bands, self.rows, self.shingle_k, self.base)]
+        owner = [np.repeat(np.arange(len(nt)), self.bands)]
+        if self.base == "poly_hash" and nt.null_count:
+            # poly_hash of a NULL text's one NULL shingle is NULL: no band keys
+            ok = np.repeat(np.asarray(nt.is_valid()), self.bands)
+            keys, owner = [keys[0].filter(pa.array(ok))], [owner[0][ok]]
+        for col in cols[1:]:
+            has = col.is_valid()
+            keys.append(col.filter(has).cast(pa.string()))
+            owner.append(np.flatnonzero(np.asarray(has)))
+        return pa.concat_arrays(keys), np.concatenate(owner)
+
+
+@dataclass(frozen=True)
+class EntityKeyIndex:
+    """Block key -> entity CSR index of an entity catalogue: key i's
+    entities are ``ent[offs[i]:offs[i + 1]]``, positions into the
+    ascending entity ids `ids` and their texts `texts`. A record that the
+    catalogue repeats keeps its repeated keys, so shared-key counts equal
+    the key equi-join's."""
+
+    keys: Any  # pyarrow string array, distinct block keys
+    offs: np.ndarray  # int64, len(keys) + 1
+    ent: np.ndarray  # int32 entity positions, grouped by key
+    ids: np.ndarray  # int64 entity ids, ascending
+    texts: Any  # pyarrow string array aligned with ids
+
+    @classmethod
+    def collect(cls, entities: DataFrame, spec: KeySpec) -> "EntityKeyIndex":
+        """Build on the driver from `entities` (id, text, spec.extra...):
+        ONE JVM-only job fetches the rows with their normalized text, and
+        the driver keys them with the numpy kernel the probe runs
+        (KeySpec.keys) — no Python tasks, and no key rows through Spark."""
+        t = spec.input(entities).toArrow()
+        cols = [c.combine_chunks() for c in t.columns]
+        keys, owner = spec.keys(cols[2:])
+        row_ids = cols[0].to_numpy(zero_copy_only=False).astype(np.int64)
+        ids, first = np.unique(row_ids, return_index=True)
+        return cls._build(keys, np.searchsorted(ids, row_ids[owner]), ids,
+                          cols[1].take(first))
+
+    @classmethod
+    def _build(cls, key_strs, epos: np.ndarray, ids: np.ndarray, texts) -> "EntityKeyIndex":
+        import pyarrow.compute as pc
+
+        uniq = pc.unique(key_strs)
+        kpos = pc.index_in(key_strs, value_set=uniq).to_numpy(zero_copy_only=False)
+        offs = np.zeros(len(uniq) + 1, dtype=np.int64)
+        np.cumsum(np.bincount(kpos, minlength=len(uniq)), out=offs[1:])
+        order = np.argsort(kpos, kind="stable")
+        return cls(uniq, offs, epos[order].astype(np.int32), ids, texts)
+
+    def _subset(self, keep_row: np.ndarray, n: int = 1, s: int = 0) -> "EntityKeyIndex":
+        """The index over the (key, entity) rows where `keep_row` holds and
+        over the entity positions s, s + n, s + 2n, ... (renumbered p // n;
+        every kept row's entity must be among them)."""
+        krow = np.repeat(np.arange(len(self.keys)), np.diff(self.offs))
+        return self._build(
+            self.keys.take(krow[keep_row]),
+            self.ent[keep_row] // n,
+            self.ids[s::n],
+            self.texts.take(np.arange(s, len(self.ids), n)),
+        )
+
+    @property
+    def nbytes(self) -> int:
+        return int(
+            self.keys.nbytes + self.offs.nbytes + self.ent.nbytes
+            + self.ids.nbytes + self.texts.nbytes
+        )
+
+    def purged(
+        self, msz: np.ndarray, max_entity_block: int | None, max_key_pairs: int | None
+    ) -> "EntityKeyIndex":
+        """Drop the keys the purge rule (purge_keep) rejects, given each
+        key's mention count `msz` (mention_key_counts); a mention key the
+        index lacks is then lost to the mentions too, as purged_block_keys'
+        two-sided semi-join drops it."""
+        keep = purge_keep(np.diff(self.offs), msz, max_entity_block, max_key_pairs)
+        if keep.all():
+            return self
+        return self._subset(np.repeat(keep, np.diff(self.offs)))
+
+    def shards(self, budget: int) -> list["EntityKeyIndex"]:
+        """The index as S = ceil(nbytes / budget) shards, entity position
+        mod S — disjoint in the entity, so a mention's candidates over the
+        shards never repeat a pair. One shard when the index fits `budget`
+        or `budget` <= 0 (the session conf's "no limit")."""
+        n_ent = len(self.ids)
+        if budget <= 0 or self.nbytes <= budget or n_ent < 2:
+            return [self]
+        n = min(-(-self.nbytes // budget), n_ent)
+        return [self._subset(self.ent % n == s, n, s) for s in range(n)]
+
+
+def mention_key_counts(
+    mentions: DataFrame, index: EntityKeyIndex, spec: KeySpec
+) -> np.ndarray:
+    """Per index key, how many of `mentions` (id, text, spec.extra...)
+    carry it — the `msz` of purged_block_keys for every key the index
+    holds, from one mapInArrow pass that keys the mentions as the probe
+    does and returns one count vector per task (a key the index lacks
+    matches nothing whether purged or not, so it is not counted)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n_keys = len(index.keys)
+
+    def count(batches):
+        tot = np.zeros(n_keys, dtype=np.int64)
+        for batch in batches:
+            keys, _ = spec.keys(batch.columns[2:])
+            kpos = pc.index_in(keys, value_set=index.keys)
+            tot += np.bincount(kpos.filter(kpos.is_valid()).to_numpy(), minlength=n_keys)
+        yield pa.RecordBatch.from_arrays([pa.array([tot.tobytes()])], names=["n"])
+
+    parts = spec.input(mentions).mapInArrow(count, "n binary").collect()
+    return sum(
+        (np.frombuffer(r["n"], dtype=np.int64) for r in parts),
+        np.zeros(n_keys, dtype=np.int64),
     )
-    w = Window.partitionBy("a").orderBy(F.desc("n_shared"), "b")
-    return (
-        shared.withColumn("__r", F.row_number().over(w))
-        .where(F.col("__r") <= max_candidates_per_mention)
-        .select("a", "b")
+
+
+def _probe_batch(batch, index: EntityKeyIndex, spec: KeySpec, top_k: int | None):
+    """One kernel step over a batch of (id, text, nt, extra keys...) mention
+    rows -> the PROBE_SCHEMA batch, or None when no row has a candidate."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys, owner = spec.keys(batch.columns[2:])
+    kpos = pc.index_in(keys, value_set=index.keys)
+    hit = np.asarray(kpos.is_valid())
+    if not hit.any():
+        return None
+    kpos = kpos.filter(pa.array(hit)).to_numpy().astype(np.int64)
+    starts = index.offs[kpos]
+    cnt = index.offs[kpos + 1] - starts
+    ends = np.cumsum(cnt)
+    epos = index.ent[np.repeat(starts - (ends - cnt), cnt) + np.arange(int(ends[-1]))]
+    # (mention row, entity position) -> shared-key count; np.unique sorts
+    # by row, then entity position, which orders like entity id
+    n_ent = len(index.ids)
+    code, n_shared = np.unique(np.repeat(owner[hit], cnt) * n_ent + epos, return_counts=True)
+    row, ep = code // n_ent, code % n_ent
+    if top_k is not None:
+        order = np.lexsort((ep, -n_shared, row))
+        row, ep, n_shared = row[order], ep[order], n_shared[order]
+        keep = np.arange(len(row)) - np.searchsorted(row, row) < top_k
+        row, ep, n_shared = row[keep], ep[keep], n_shared[keep]
+    # the pair features read each string once: a mention surface repeats
+    # once per candidate, an entity once per mention that hits it, so the
+    # pairs gather rows of the batch's texts and of its distinct entities
+    a_text = batch.column(1).to_pandas()
+    ue, bi = np.unique(ep, return_inverse=True)
+    b_text = index.texts.take(pa.array(ue)).to_pandas()
+    ids = batch.column(0).to_numpy().astype(np.int64)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids[row]),
+            pa.array(index.ids[ep]),
+            pa.array(n_shared, pa.int32()),
+            # jaro_winkler_udf's value and pair_cos_from_text_udf's raw
+            # dot product: the scorer rounds and clamps cos in the JVM
+            pa.array(np.round(jaro_winkler_take_np(a_text, row, b_text, bi), 6)),
+            pa.array(pair_cos_take_np(a_text, row, b_text, bi)),
+        ],
+        names=PROBE_SCHEMA.fieldNames(),
     )
+
+
+def probe_candidates(
+    mentions: DataFrame,
+    shards: list[EntityKeyIndex],
+    spec: KeySpec,
+    top_k: int | None = None,
+) -> DataFrame:
+    """Candidate (mention, entity) pairs with their shared-key count and
+    raw JW and cos features (PROBE_SCHEMA), from ONE mapInArrow pass per
+    index shard over `mentions` (id, text, spec.extra...).
+
+    Per Arrow batch the kernel keys every mention exactly as
+    `blocking_keys` would with the same parameters (KeySpec.keys over the
+    JVM-normalized text and the extra keys), probes the index
+    (pc.index_in, then the CSR ranges), counts shared keys per (mention,
+    entity) and keeps the `top_k` entities by (n_shared desc, b asc), the
+    reference's top-k retrieval bound (O2, `blink/main_dense.py:238-262`).
+    Then it scores only those pairs: `jw` is jaro_winkler_udf's value,
+    `cos` the unrounded dot product pair_cos_from_text_udf returns. The
+    candidate set equals the key equi-join over the same keys (parity
+    reference and differential test in tests/).
+
+    A key absent from the index (purged, or entity-less) matches nothing,
+    so a purged index purges both sides. The mention rows are spread
+    round-robin over defaultParallelism partitions: the kernel is the
+    whole candidate-and-verify cost, and a coalesced surface table would
+    run it on one core. The index rides in the kernel's closure (PySpark
+    ships a command over 1 MB as a broadcast that is freed with the plan),
+    so it lives no longer than the frame.
+
+    `shards` is `EntityKeyIndex.shards(budget)`: one kernel pass per shard,
+    unioned. The shards are disjoint in the entity, so no (a, b) repeats;
+    with several shards and `top_k` set, one per-`a` window keeps the
+    global top-k of the per-shard top-k."""
+    par = mentions.sparkSession.sparkContext.defaultParallelism
+    inp = spec.input(mentions.select("id", "text", *spec.extra).repartition(par))
+
+    def kernel(index: EntityKeyIndex):
+        def probe(batches):
+            for batch in batches:
+                for lo in range(0, batch.num_rows, PROBE_ROWS):
+                    out = _probe_batch(batch.slice(lo, PROBE_ROWS), index, spec, top_k)
+                    if out is not None:
+                        yield out
+
+        return probe
+
+    out = None
+    for index in shards:
+        part = inp.mapInArrow(kernel(index), PROBE_SCHEMA)
+        out = part if out is None else out.unionByName(part)
+    if len(shards) > 1 and top_k is not None:
+        w = Window.partitionBy("a").orderBy(F.desc("n_shared"), "b")
+        out = (
+            out.withColumn("__r", F.row_number().over(w))
+            .where(F.col("__r") <= top_k)
+            .drop("__r")
+        )
+    return out

@@ -3,10 +3,15 @@
 `blink/candidate_ranking/bert_reranking.py:106-160` the reranker variant).
 
 Features per pair, all Arrow-batched / JVM-side (north_rule F11):
-* Jaro-Winkler (numpy-vectorized pandas UDF, functions/similarity.py)
+* Jaro-Winkler (numpy-vectorized, functions/similarity.py)
 * normalized Levenshtein (Spark built-in, JVM)
-* token-set Jaccard (array intersection, JVM)
-* embedding dot product (numpy-vectorized pandas UDF, functions/embedding.py)
+* token-set Jaccard and token containment (array intersection, JVM)
+* embedding dot product (numpy-vectorized, functions/embedding.py)
+
+The two numpy features run where the pairs are made: inside the KB join's
+probe kernel (operators/blocking.probe_candidates, then the JVM tail
+`score_probed_pairs`), and as pandas UDFs over the KB-free self-join's pairs
+(`two_phase_scored_pairs`).
 
 Combined score = fixed convex combination (deterministic — the parity
 requirement F1>=0.99 demands the scorer be a pure function of the pair text,
@@ -64,6 +69,28 @@ def _full_score_col() -> F.Column:
     )
 
 
+def text_features(
+    pairs: DataFrame,
+    a_text: str = "a_text",
+    b_text: str = "b_text",
+    a_toks: str | None = None,
+    b_toks: str | None = None,
+) -> DataFrame:
+    """Append the JVM text feature columns: lev_sim, jacc, overlap."""
+    ta = F.col(a_toks) if a_toks else tokens(F.col(a_text))
+    tb = F.col(b_toks) if b_toks else tokens(F.col(b_text))
+    n_inter = F.size(F.array_intersect(ta, tb))
+    overlap = F.round(
+        n_inter / F.greatest(F.least(F.size(ta), F.size(tb)), F.lit(1)).cast("double"),
+        6,
+    )
+    return (
+        pairs.withColumn("lev_sim", levenshtein_sim(F.col(a_text), F.col(b_text)))
+        .withColumn("jacc", jaccard_from_counts(n_inter, F.size(ta), F.size(tb)))
+        .withColumn("overlap", overlap)
+    )
+
+
 def pair_features(
     pairs: DataFrame,
     a_text: str = "a_text",
@@ -73,18 +100,9 @@ def pair_features(
 ) -> DataFrame:
     """Append the CHEAP (text-only) feature columns: jw, lev_sim, jacc,
     overlap. No vectors touched — this is phase 1 of the two-phase scorer."""
-    ta = F.col(a_toks) if a_toks else tokens(F.col(a_text))
-    tb = F.col(b_toks) if b_toks else tokens(F.col(b_text))
-    n_inter = F.size(F.array_intersect(ta, tb))
-    overlap = F.round(
-        n_inter / F.greatest(F.least(F.size(ta), F.size(tb)), F.lit(1)).cast("double"),
-        6,
-    )
-    return (
-        pairs.withColumn("jw", jaro_winkler_udf(F.col(a_text), F.col(b_text)))
-        .withColumn("lev_sim", levenshtein_sim(F.col(a_text), F.col(b_text)))
-        .withColumn("jacc", jaccard_from_counts(n_inter, F.size(ta), F.size(tb)))
-        .withColumn("overlap", overlap)
+    return text_features(
+        pairs.withColumn("jw", jaro_winkler_udf(F.col(a_text), F.col(b_text))),
+        a_text, b_text, a_toks, b_toks,
     )
 
 
@@ -272,6 +290,47 @@ def two_phase_scored_pairs(
         survivors.join(vb, "b")
         .join(va, "a")
         .withColumn("cos", _cos_col("a_vec", "b_vec"))
+        .withColumn("score", _full_score_col())
+    )
+    return scored.select(
+        "a", "b", "a_text", "b_text", "jw", "lev_sim", "jacc", "overlap", "cos", "score"
+    )
+
+
+def score_probed_pairs(
+    cands: DataFrame, a_nodes: DataFrame, b_nodes: DataFrame
+) -> DataFrame:
+    """Full scores of the KB join's candidates, JVM only: `cands` carries
+    the probe kernel's jw and raw cos (blocking.probe_candidates), so the
+    tail joins (text, tk) of both sides — (id, text, tk) node tables —
+    adds the JVM text features, rounds and clamps cos exactly as the
+    column forms do (_cos_col) and combines the score. Returns (a, b,
+    a_text, b_text, jw, lev_sim, jacc, overlap, cos, score), the score
+    bit-identical to score_pairs on the same pair.
+
+    No prune: the two-phase bound only saved cos work, which the kernel
+    has already done. Both node tables are broadcast, so the only exchange
+    left is link_best's partial-aggregate one: the b side holds the rows
+    the driver built the entity index from, and the a side one row per
+    distinct mention surface. Left to the planner, a checkpointed pair
+    frame has no size estimate: it planned a sort-merge join that
+    shuffled both sides before AQE turned it into a broadcast (two more
+    stages per run). KNOWN LIMIT: like the index, both broadcasts are
+    sized by the distinct surfaces, not by the corpus."""
+    na = a_nodes.select(
+        F.col("id").alias("a"), F.col("text").alias("a_text"), F.col("tk").alias("a_tk")
+    )
+    nb = b_nodes.select(
+        F.col("id").alias("b"), F.col("text").alias("b_text"), F.col("tk").alias("b_tk")
+    )
+    pairs = (
+        cands.select("a", "b", "jw", "cos")
+        .join(F.broadcast(na), "a")
+        .join(F.broadcast(nb), "b")
+    )
+    scored = (
+        text_features(pairs, a_toks="a_tk", b_toks="b_tk")
+        .withColumn("cos", F.greatest(F.round(F.col("cos"), 6), F.lit(0.0)))
         .withColumn("score", _full_score_col())
     )
     return scored.select(

@@ -3,8 +3,11 @@ idempotent checkpointed job:
 
   1. mentions    — token-hash dictionary extraction from transcripts (U1)
   2. surfaces    — dedup to DISTINCT surfaces + hashed trigram encoding (U2/U3)
-  3. candidates  — LSH blocking keys; surface⋈entity equi-join (J7/J8)
-  4. links       — Arrow-batched pair scorer -> per-surface argmax link (U4/W4)
+  3. candidates  — ONE Arrow pass over the mention surfaces probes a
+                   driver-built entity key index: LSH + prefix keys ->
+                   top-k entities by shared keys -> JW and cos (J7/J8, U4)
+  4. links       — JVM tail: Levenshtein, token features, the combined
+                   score -> per-surface argmax link (U4/W4)
   5. clusters    — large-star/small-star connected components on the surface
                    graph; linear expansion back to mentions
 
@@ -30,8 +33,11 @@ connected components):
                       (new-touching pairs + state star edges) -> canonicalize
 
 Scale notes:
-* candidate generation is a key equi-join (linear in Σ_key |m_k|·|e_k|),
-  never a mention×mention cross product;
+* KB candidate generation is an index probe per mention surface (linear in
+  Σ_key |m_k|·|e_k| probe hits, bounded by purge and the top-k), never a
+  mention×mention cross product; the driver holds the entity index once
+  (operators/blocking.py KNOWN LIMIT), sharded above the session's
+  autoBroadcastJoinThreshold;
 * entity anchors live in a disjoint negative id space so mention and entity
   ids share one node domain for clustering;
 * every stage checkpoint is an idempotent table -> kill/rerun resumes
@@ -53,11 +59,14 @@ from blink_reloaded_spark.functions.embedding import hashed_embedding_udf
 from blink_reloaded_spark.functions.hashing import xxhash64_mod
 from blink_reloaded_spark.functions.text import tokens
 from blink_reloaded_spark.operators.blocking import (
+    PROBE_SCHEMA,
+    EntityKeyIndex,
+    KeySpec,
     auto_blocking_params,
     blocking_keys,
     candidate_pairs,
-    mention_entity_candidates,
-    purged_block_keys,
+    mention_key_counts,
+    probe_candidates,
 )
 from blink_reloaded_spark.operators.clustering import (
     connected_components,
@@ -68,12 +77,16 @@ from blink_reloaded_spark.operators.scoring import (
     DEFAULT_THRESHOLD,
     link_best,
     match_edges,
+    score_probed_pairs,
     two_phase_scored_pairs,
 )
 from blink_reloaded_spark.sources.checkpoint import CheckpointManager, materialize
 
 # entity anchor ids: disjoint negative id space below -1 (NIL stays -1)
 ENTITY_ID_OFFSET = -1_000_000
+# what build_candidates_from records about the entity index, in `metrics`
+# and in the candidates checkpoint's manifest
+INDEX_METRICS = ("index_keys", "index_bytes", "index_shards")
 
 
 def _prefix_key(text_col: str) -> F.Column:
@@ -116,14 +129,14 @@ class LinkagePipeline:
     # 128 = double-seeded 32-char hex string, collision-safe at 10^12
     # mentions (see operators/mentions.extract_mentions ID NOTE)
     id_bits: int = 64
-    # cos term sourcing (r5, VERDICT r4 #4): "recompute" re-derives the
-    # embedding dot product from the surviving pair's TEXTS (bit-identical —
-    # this pipeline's vectors ARE hashed_embedding_udf(text)) and removes
-    # the two vector joins + four exchanges from the links chain AND the
-    # whole vec column from the surfaces stage (~1KB/row off the stage
-    # checkpoint). "join" restores the stored-vector path — required if
-    # hashed_embedding_udf is swapped for a real model encoder whose output
-    # can't be cheaply recomputed per pair.
+    # cos term sourcing of the KB-FREE chain (r5, VERDICT r4 #4):
+    # "recompute" re-derives the embedding dot product from the surviving
+    # pair's TEXTS (bit-identical — this pipeline's vectors ARE
+    # hashed_embedding_udf(text)) and removes the two vector joins + four
+    # exchanges from that chain AND the whole vec column from the surfaces
+    # stage (~1KB/row off the stage checkpoint). "join" restores the
+    # stored-vector path there. The KB join (run, run_links) always
+    # computes cos from the texts inside its probe kernel.
     cos_source: str = "recompute"
     metrics: dict[str, Any] = field(default_factory=dict)
 
@@ -303,36 +316,42 @@ class LinkagePipeline:
         return cls(spark, **params)
 
     def build_candidates_from(self, surfaces_t: DataFrame) -> DataFrame:
-        """Candidate (mention-surface, entity) pairs from a MATERIALIZED
-        surfaces node table (id, text, is_mention, ...): blocking keys ->
-        purge -> key equi-join -> top-k budget. Public so the stage can be
-        timed/driven in isolation (scripts/bench_stages.py).
+        """Scored candidate (mention-surface, entity) pairs (a, b, jw, cos)
+        from a MATERIALIZED surfaces node table (id, text, is_mention, ...):
+        a driver-built block key -> entity index of the entity surfaces
+        (blocking.EntityKeyIndex) -> purge -> ONE probe kernel over the
+        mention surfaces that keys them, keeps the top-k entities by shared
+        keys and computes jw and the raw cos (blocking.probe_candidates).
+        Public so the stage can be timed/driven in isolation
+        (scripts/bench_stages.py).
 
-        Both sides are keyed in ONE pass (carry_cols=["is_mention"] rides
-        the flag through the MinHash groupBy) and the combined skinny key
-        table is materialized ONCE — one keying job + one barrier instead
-        of two serial per-side ones, and the purge's two consumers of each
-        key table never recompute the keying subtree."""
-        keys_all = self._blocking_keys(surfaces_t, carry_cols=["is_mention"])
-        ok = None
-        if self.max_entity_block is not None or self.max_key_pairs is not None:
-            keys_all = materialize(keys_all)
-            # one-pass purge sizing over the flagged union (r5): both sides'
-            # per-key counts from a single conditional aggregation,
-            # materialized once for its two semi-join consumers
-            ok = materialize(
-                purged_block_keys(
-                    keys_all, self.max_entity_block, self.max_key_pairs
-                )
-            )
-        mk = keys_all.where("is_mention").select("id", "block_key")
-        ek = keys_all.where("NOT is_mention").select("id", "block_key")
-        return mention_entity_candidates(
-            mk,
-            ek,
-            ok_keys=ok,
-            max_candidates_per_mention=self.max_candidates_per_mention,
+        The index is fetched in one JVM-only job and keyed on the driver
+        with the numpy kernel the probe runs. With purge (max_entity_block
+        / max_key_pairs), one more pass counts each index key's mentions
+        (blocking.mention_key_counts) and the purge rule drops keys from
+        the index, which purges the mention side too. `metrics` records
+        index_keys, index_bytes and index_shards; the index is split into
+        shards above the session's autoBroadcastJoinThreshold."""
+        keyed = surfaces_t.withColumn("prefix_key", _prefix_key("text"))
+        mentions, entities = keyed.where("is_mention"), keyed.where("NOT is_mention")
+        spec = KeySpec.of(
+            self.bands, self.rows, self.shingle_k, xxhash64_mod, ["prefix_key"]
         )
+        index = EntityKeyIndex.collect(entities, spec)
+        if self.max_entity_block is not None or self.max_key_pairs is not None:
+            msz = mention_key_counts(mentions, index, spec)
+            index = index.purged(msz, self.max_entity_block, self.max_key_pairs)
+        # Spark's own parse of the conf: its default reads "10485760b"
+        conf = self.spark._jsparkSession.sessionState().conf()
+        shards = index.shards(conf.autoBroadcastJoinThreshold())
+        self.metrics.update(
+            index_keys=len(index.keys), index_bytes=index.nbytes,
+            index_shards=len(shards),
+        )
+        cands = probe_candidates(
+            mentions, shards, spec, top_k=self.max_candidates_per_mention
+        )
+        return cands.select("a", "b", "jw", "cos")
 
     def build_links_from(
         self,
@@ -340,30 +359,20 @@ class LinkagePipeline:
         surfaces_t: DataFrame,
         assume_partitioned: bool = False,
     ) -> DataFrame:
-        """Surface->entity argmax links from materialized candidate pairs +
-        the surfaces node table: two-phase scoring -> threshold argmax.
-        Public for isolated stage timing.
+        """Surface->entity argmax links (a, b, score, surf_text) from the
+        candidates stage's (a, b, jw, cos) + the surfaces node table: a
+        JVM-only tail (scoring.score_probed_pairs joins both sides' text
+        and tokens, adds Levenshtein, Jaccard and containment, and rounds
+        cos) -> threshold argmax (link_best). The surface text rides
+        link_best's max struct, so no re-attachment join. Public for
+        isolated stage timing.
 
-        r5 chain shape (VERDICT r4 #4 — the links chain NEGATIVE-scaled
-        because its work had shrunk to seconds while ~6 shuffle-stage
-        boundaries of serial driver/AQE latency remained): the surface text
-        rides the scorer output (a_text) through link_best's max struct, so
-        the old re-attachment join is gone; cos_source="recompute" (default)
-        removes both vector joins; assume_partitioned=True (set by run()
-        when the candidates checkpoint preserved its hash(a) layout) skips
-        the redundant repartition. Net: ONE skinny post-aggregation
-        exchange where there were six.
-
-        No round-robin rebalance of the pair frame: per-`a` candidate
-        counts are bounded by the top-k budget, so hash(a) spreads the work
-        evenly (VERDICT r3 #1a)."""
-        scored = two_phase_scored_pairs(
+        `assume_partitioned` is accepted for existing callers and no
+        longer changes the plan: the tail has no pair exchange to skip."""
+        scored = score_probed_pairs(
             cands,
-            surfaces_t,
-            threshold=self.threshold,
-            argmax_prune=False,
-            cos_source=self.cos_source,
-            assume_partitioned=assume_partitioned,
+            surfaces_t.where("is_mention"),
+            surfaces_t.where("NOT is_mention"),
         )
         best = link_best(scored, self.threshold, carry=["a_text"])
         return best.select(
@@ -393,6 +402,9 @@ class LinkagePipeline:
                 # r8: surfaces checkpoint carries surf_min — a pre-r8
                 # checkpoint dir must not resume into this code
                 "surfaces_schema": 2,
+                # the candidates checkpoint is the probe kernel's output:
+                # a dir written under another kernel schema rebuilds
+                "candidates_schema": PROBE_SCHEMA.simpleString(),
                 "surfaces": sorted(surfaces) if surfaces else None,
             },
             sort_keys=True,
@@ -506,38 +518,27 @@ class LinkagePipeline:
         surfaces_t = stage("surfaces", build_surfaces, inputs=["mentions", "entities"])
         count_metric("distinct_surfaces", surfaces_t)
 
-        # -- 3. candidates (surface ⋈ entity on blocking keys) ------------------
+        # -- 3. candidates (mention surfaces probe the entity key index) ---------
         def build_candidates() -> DataFrame:
             return self.build_candidates_from(surfaces_t)
 
-        # candidates is ALWAYS materialized (r3): it has one data consumer,
-        # but the materialization boundary cuts the 24-band blocking subtree
-        # out of the links-stage plan — AQE re-optimizes the live plan at
-        # every shuffle-stage boundary, and re-traversing the blocking tree
-        # ~10x over was pure serial driver time
+        # candidates is ALWAYS materialized (r3): the links stage and the
+        # candidate_pairs count both read it, and the cut keeps the probe
+        # kernel (the stage's whole Python cost) from running for each
         cands = stage(
             "candidates",
             build_candidates,
             inputs=["surfaces"],
+            metrics_fn=lambda: {k: self.metrics[k] for k in INDEX_METRICS},
         )
         count_metric("candidate_pairs", cands)
 
         # -- 4. scoring + argmax link (surface level) ---------------------------
         def build_links() -> DataFrame:
-            # two-phase scorer (VERDICT r2 #1): cheap text features on every
-            # candidate pair (texts ~100B/row through the shuffle), a
-            # provably-lossless threshold prune from the cos-weight bound
-            # (exact for link_best — see two_phase_scored_pairs), and the
-            # cos term computed only for survivors (recomputed from texts
-            # by default, or joined by id in cos_source="join" mode — never
-            # ~2KB of vectors per pair through the candidate shuffle).
-            # assume_partitioned: the in-memory candidates cut ends
-            # hash(a)-partitioned and keeps its physical layout; a parquet/
-            # Iceberg checkpoint re-read does not (and may read back as one
-            # split), so only the in-memory path skips the repartition.
-            return self.build_links_from(
-                cands, surfaces_t, assume_partitioned=ckpt is None
-            )
+            # the candidates carry jw and cos from the probe kernel, so the
+            # links stage is JVM-only: the text features, the score and the
+            # argmax (build_links_from)
+            return self.build_links_from(cands, surfaces_t)
 
         links = stage("links", build_links, inputs=["candidates", "surfaces"])
         count_metric("links", links)
@@ -597,7 +598,7 @@ class LinkagePipeline:
         )
         surf = materialize(self._surfaces(m, "mention_id", entities))
         cands = materialize(self.build_candidates_from(surf))
-        surf_link = self.build_links_from(cands, surf, assume_partitioned=True).select(
+        surf_link = self.build_links_from(cands, surf).select(
             F.col("surf_text").alias("mention"),
             (F.lit(ENTITY_ID_OFFSET) - F.col("b")).alias("entity_id"),
             "score",

@@ -94,6 +94,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame query context: with it on, every Column and
+        # DataFrame call walks the Python stack and makes ~4 extra JVM round
+        # trips to record its call site for error messages. A pipeline run
+        # builds its plans from ~1k such calls, so it was a fixed ~0.2-0.3 s
+        # of driver time per run (hot_skew_link, local[2], 4-core VM).
+        # Errors still carry the Spark-side context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
     for k, v in (extra_conf or {}).items():

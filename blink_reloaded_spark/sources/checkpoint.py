@@ -64,7 +64,7 @@ class CheckpointManager:
 
         ckpt = CheckpointManager(spark, root)
         df = ckpt.stage("blocking", lambda: build_blocking(...),
-                        inputs=["mentions"], metrics_fn=...)
+                        inputs=["mentions"], metrics_fn=lambda: {...})
     """
 
     spark: SparkSession
@@ -202,6 +202,7 @@ class CheckpointManager:
         build: Any,
         inputs: list[str] | None = None,
         fingerprint: str | None = None,
+        metrics_fn: Any = None,
     ) -> DataFrame:
         """Resume-aware stage: skip `build` entirely when the checkpoint is
         complete (kill-and-rerun gives byte-identical output without
@@ -213,6 +214,10 @@ class CheckpointManager:
         fingerprint is rebuilt, not silently returned — rerunning with new
         params against the same checkpoint_dir must not yield old output.
         None opts out (existence-only resume, the round-1 behavior).
+
+        `metrics_fn`, called after `build`, returns what the build decided
+        (e.g. the candidates stage's index size) for the manifest's
+        `metrics`.
         """
         if self.exists(name):
             stale = False
@@ -224,7 +229,10 @@ class CheckpointManager:
                 return self.read(name)
             self._log.append({"stage": name, "rebuilt": "fingerprint_mismatch"})
         df = build()
-        return self.write(name, df, inputs=inputs, fingerprint=fingerprint)
+        return self.write(
+            name, df, inputs=inputs, fingerprint=fingerprint,
+            metrics=metrics_fn() if metrics_fn else None,
+        )
 
     @property
     def log(self) -> list[dict[str, Any]]:

@@ -5,32 +5,36 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from blink_reloaded_spark import datagen
+from blink_reloaded_spark.functions.text import tokens
 from blink_reloaded_spark.operators.blocking import (
     blocking_keys,
     candidate_pairs,
-    mention_entity_candidates,
 )
-from blink_reloaded_spark.plans.pipeline import ENTITY_ID_OFFSET, _prefix_key
+from blink_reloaded_spark.plans.pipeline import ENTITY_ID_OFFSET, LinkagePipeline
+from blocking_reference import mention_entity_candidates
 
 
 def test_blocking_recall_on_fixture(spark):
     """Every gold (mention, entity) pair must co-occur in some block —
-    the blocking-recall metric (A2 analogue, SURVEY.md §7.1.3)."""
+    the blocking-recall metric (A2 analogue, SURVEY.md §7.1.3) — through
+    the production candidate builder (the probe kernel)."""
     cat = datagen.EntityCatalog.build(n_entities=30)
     tr, me = datagen.generate_transcripts(
         spark, cat, n_convs=30, turns_per_conv=8, hot_conv_factor=5
     )
     ments = me.select(
-        F.col("mention_id").alias("id"), F.col("mention").alias("text")
+        F.col("mention_id").alias("id"),
+        F.col("mention").alias("text"),
+        F.lit(True).alias("is_mention"),
     )
     ents = cat.entities_df(spark).select(
         (F.lit(ENTITY_ID_OFFSET) - F.col("entity_id")).alias("id"),
         F.lower("title").alias("text"),
+        F.lit(False).alias("is_mention"),
     )
-    kw = dict(bands=12, rows=1, shingle_k=3)
-    mk = blocking_keys(ments.withColumn("pk", _prefix_key("text")), extra_key_cols=["pk"], **kw)
-    ek = blocking_keys(ents.withColumn("pk", _prefix_key("text")), extra_key_cols=["pk"], **kw)
-    cands = mention_entity_candidates(mk, ek)
+    surf = ments.unionByName(ents).withColumn("tk", tokens(F.col("text")))
+    pipe = LinkagePipeline(spark, bands=12, rows=1, shingle_k=3)
+    cands = pipe.build_candidates_from(surf.localCheckpoint()).select("a", "b")
     gold = me.where("label_id >= 0").select(
         F.col("mention_id").alias("a"),
         (F.lit(ENTITY_ID_OFFSET) - F.col("label_id")).alias("b"),

@@ -163,3 +163,72 @@ def test_iceberg_path_records_snapshot_lineage():
     assert man["rows"] == 7 and man["n_files"] == 2
     assert man["fingerprint"] == "fpX" and man["inputs"] == ["in1"]
     assert "lineage_error" not in man
+
+
+def _pre_probe_fingerprint(p, surfaces):
+    """LinkagePipeline._fingerprint as it was while the candidates stage
+    wrote (a, b) rows: the same keys, no candidates_schema."""
+    import hashlib
+
+    src = json.dumps(
+        {
+            "bands": p.bands,
+            "rows": p.rows,
+            "shingle_k": p.shingle_k,
+            "threshold": p.threshold,
+            "max_block": p.max_block,
+            "max_entity_block": p.max_entity_block,
+            "max_candidates_per_mention": p.max_candidates_per_mention,
+            "max_key_pairs": p.max_key_pairs,
+            "id_bits": p.id_bits,
+            "cos_source": p.cos_source,
+            "surfaces_schema": 2,
+            "surfaces": sorted(surfaces) if surfaces else None,
+        },
+        sort_keys=True,
+    )
+    return hashlib.sha256(src.encode()).hexdigest()[:16]
+
+
+def test_pre_probe_checkpoint_dir_rebuilds(spark, tmp_path):
+    """A checkpoint dir whose candidates stage holds (a, b) rows under the
+    fingerprint of the code before the probe kernel must be rebuilt, not
+    resumed: the links stage reads jw and cos from the candidates. The
+    rebuilt candidates manifest records the entity index it was built
+    from."""
+    import shutil
+
+    from blink_reloaded_spark import datagen
+    from blink_reloaded_spark.plans.pipeline import INDEX_METRICS, LinkagePipeline
+
+    cat = datagen.EntityCatalog.build(n_entities=15)
+    tr, me = datagen.generate_transcripts(
+        spark, cat, n_convs=10, turns_per_conv=4, hot_conv_factor=2
+    )
+    ents = cat.entities_df(spark)
+    d = str(tmp_path / "ck")
+    p1 = LinkagePipeline(spark, checkpoint_dir=d)
+    want = sorted(map(tuple, p1.run(tr, ents, mentions=me).collect()))
+    old_fp = _pre_probe_fingerprint(p1, None)
+    assert old_fp != p1._fingerprint(None)
+
+    # the dir as the older code left it, after losing links and clusters
+    cdir = os.path.join(d, "candidates")
+    pairs = spark.read.parquet(cdir).select("a", "b").collect()
+    shutil.rmtree(cdir)
+    spark.createDataFrame(pairs, "a long, b long").write.parquet(cdir)
+    for stage in ("mentions", "surfaces", "candidates"):
+        man = os.path.join(d, stage, "_MANIFEST.json")
+        meta = json.load(open(man)) if os.path.exists(man) else {"stage": stage}
+        meta["fingerprint"] = old_fp
+        json.dump(meta, open(man, "w"))
+    for stage in ("links", "clusters"):
+        shutil.rmtree(os.path.join(d, stage))
+
+    p2 = LinkagePipeline(spark, checkpoint_dir=d)
+    assert sorted(map(tuple, p2.run(tr, ents, mentions=me).collect())) == want
+    man = json.load(open(os.path.join(cdir, "_MANIFEST.json")))
+    assert man["fingerprint"] == p2._fingerprint(None)
+    assert "jw:double" in man["schema"] and "cos:double" in man["schema"]
+    assert set(man["metrics"]) == set(INDEX_METRICS)
+    assert man["metrics"]["index_keys"] > 0 and man["metrics"]["index_shards"] == 1

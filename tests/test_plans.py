@@ -129,3 +129,42 @@ def test_wholestage_codegen_in_text_kernels(spark):
     for name in ("text03_fingerprint", "dedup04_simhash", "multimodal01_metadata"):
         plan = _plan(spark, name)
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
+
+
+def _count_nodes(node, name: str) -> int:
+    """How many nodes of a SparkPlan (py4j) have `name` in their nodeName,
+    AdaptiveSparkPlan wrappers unwrapped via their initialPlan."""
+    if "AdaptiveSparkPlan" in node.nodeName():
+        return _count_nodes(node.initialPlan(), name)
+    return int(name in node.nodeName()) + sum(
+        _count_nodes(node.children().apply(i), name)
+        for i in range(node.children().size())
+    )
+
+
+def test_kb_join_is_one_arrow_pass(spark):
+    """The candidates and links stages of the KB join cross the Python
+    boundary once: the probe kernel (one MapInArrow, with purge and top-k
+    on), and no ArrowEvalPython pair UDF. The kernel's input is spread
+    over defaultParallelism partitions, so it runs on every core."""
+    from pyspark.sql import functions as F
+
+    from blink_reloaded_spark import datagen
+    from blink_reloaded_spark.plans.pipeline import LinkagePipeline
+
+    cat = datagen.EntityCatalog.build(n_entities=40, seed=2)
+    tr, me = datagen.generate_transcripts(spark, cat, n_convs=10, turns_per_conv=4)
+    pipe = LinkagePipeline(
+        spark, max_key_pairs=200, max_entity_block=20, max_candidates_per_mention=4
+    )
+    surf = pipe._surfaces(
+        me.select("mention_id", "mention"), "mention_id", cat.entities_df(spark)
+    ).localCheckpoint()
+    cands = pipe.build_candidates_from(surf)
+    links = pipe.build_links_from(cands, surf)
+    plan = links._jdf.queryExecution().executedPlan()
+    assert _count_nodes(plan, "MapInArrow") == 1, plan.toString()
+    assert _count_nodes(plan, "ArrowEvalPython") == 0, plan.toString()
+    par = spark.sparkContext.defaultParallelism
+    assert par >= 2 and cands.rdd.getNumPartitions() == par
+    assert links.where(F.col("score").isNull()).count() == 0 < links.count()
