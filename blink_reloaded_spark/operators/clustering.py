@@ -86,11 +86,16 @@ def star_components(edges: DataFrame) -> DataFrame:
     collapses to ONE aggregation + one join — no driver-side iterations at
     all.
 
-    This is the KB-linking case (pipeline.run): `link_best` emits at most one
-    argmax entity per surface, so the surface->entity edge set is a star
-    forest by construction. The precondition (one edge per leaf) is the
-    caller's invariant; component ids are canonicalized to the component
-    minimum, same as connected_components.
+    This is the KB-linking case: `link_best` emits at most one argmax
+    entity per surface, so the surface->entity edge set is a star forest
+    by construction. The precondition (one edge per leaf) is the caller's
+    invariant; component ids are canonicalized to the component minimum,
+    same as connected_components.
+
+    Only perfbench's traced run (its clustering layer) and the tests call
+    it: pipeline.run carries each surface's min mention id through the
+    links and groups them by entity in one aggregation
+    (LinkagePipeline._linked_clusters), which needs no component ids.
     """
     cmin = edges.groupBy("dst").agg(F.min("src").alias("_mn")).select(
         "dst", F.least(F.col("_mn"), F.col("dst")).alias("component")

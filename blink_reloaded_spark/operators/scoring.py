@@ -302,11 +302,12 @@ def score_probed_pairs(
 ) -> DataFrame:
     """Full scores of the KB join's candidates, JVM only: `cands` carries
     the probe kernel's jw and raw cos (blocking.probe_candidates), so the
-    tail joins (text, tk) of both sides — (id, text, tk) node tables —
-    adds the JVM text features, rounds and clamps cos exactly as the
-    column forms do (_cos_col) and combines the score. Returns (a, b,
-    a_text, b_text, jw, lev_sim, jacc, overlap, cos, score), the score
-    bit-identical to score_pairs on the same pair.
+    tail joins (text, tk) of both sides — (id, text, tk) node tables, the
+    a side's with its surf_min too — adds the JVM text features, rounds
+    and clamps cos exactly as the column forms do (_cos_col) and combines
+    the score. Returns (a, b, a_text, b_text, surf_min, jw, lev_sim, jacc,
+    overlap, cos, score), the score bit-identical to score_pairs on the
+    same pair.
 
     No prune: the two-phase bound only saved cos work, which the kernel
     has already done. Both node tables are broadcast, so the only exchange
@@ -318,7 +319,8 @@ def score_probed_pairs(
     stages per run). KNOWN LIMIT: like the index, both broadcasts are
     sized by the distinct surfaces, not by the corpus."""
     na = a_nodes.select(
-        F.col("id").alias("a"), F.col("text").alias("a_text"), F.col("tk").alias("a_tk")
+        F.col("id").alias("a"), F.col("text").alias("a_text"), F.col("tk").alias("a_tk"),
+        "surf_min",
     )
     nb = b_nodes.select(
         F.col("id").alias("b"), F.col("text").alias("b_text"), F.col("tk").alias("b_tk")
@@ -334,7 +336,8 @@ def score_probed_pairs(
         .withColumn("score", _full_score_col())
     )
     return scored.select(
-        "a", "b", "a_text", "b_text", "jw", "lev_sim", "jacc", "overlap", "cos", "score"
+        "a", "b", "a_text", "b_text", "surf_min", "jw", "lev_sim", "jacc", "overlap",
+        "cos", "score",
     )
 
 

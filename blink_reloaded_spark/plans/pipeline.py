@@ -8,25 +8,28 @@ idempotent checkpointed job:
                    top-k entities by shared keys -> JW and cos (J7/J8, U4)
   4. links       — JVM tail: Levenshtein, token features, the combined
                    score -> per-surface argmax link (U4/W4)
-  5. clusters    — large-star/small-star connected components on the surface
-                   graph; linear expansion back to mentions
+  5. clusters    — one aggregation over the links: each entity's linked
+                   surfaces with min(surf_min) as their cluster id, broadcast
+                   onto the mentions in one left join
 
 Mirrors the reference's DAG (`examples/zeshel/README.md:11-38`, SURVEY.md
 §3.3): retrieval bounds the candidate set (O2), the cross-encoder scores
 pairs, argmax picks the link, and mentions sharing a predicted entity form a
-cluster (§7.0) — realized here as transitive closure over accepted
-mention->entity edges, with cluster ids canonicalized to the minimum mention
-id (deterministic under partitioning / row order).
+cluster (§7.0). The argmax links form a star forest (at most one entity per
+surface), so the closure over them is the grouping by entity itself; cluster
+ids are canonicalized to the minimum mention id (deterministic under
+partitioning / row order).
 
 The four entry points are one fuzzy-join program (blocking -> similarity ->
 accept) over a shared private core: `_surfaces` (distinct surfaces +
-per-surface min id), `_blocking_keys`, `_surface_clusters` + `_expand`
-(min-id canonicalization and the join back onto mentions) and, for the
-KB-free pair, `_kb_free_components` (self-join -> score -> match edges ->
-connected components):
+per-surface min id), `_blocking_keys`, `_expand` (the join back onto
+mentions) and, for the KB-free pair, `_kb_free_components` (self-join ->
+score -> match edges -> connected components) + `_surface_clusters` (min-id
+canonicalization per component):
 
   run                 surfaces(+entities) -> build_candidates_from ->
-                      build_links_from -> star components -> canonicalize
+                      build_links_from -> per-entity min over the links
+                      (_linked_clusters) -> broadcast expand
   run_links           run()'s stages 2-4 -> join links onto mentions
   run_kb_free         surfaces -> KB-free chain -> canonicalize
   run_kb_free_append  surfaces(state ∪ delta) -> guards -> KB-free chain
@@ -38,6 +41,9 @@ Scale notes:
   mention×mention cross product; the driver holds the entity index once
   (operators/blocking.py KNOWN LIMIT), sharded above the session's
   autoBroadcastJoinThreshold;
+* run()'s clusters stage broadcasts one row per LINKED mention surface
+  onto the mentions, within the bound the links tail already broadcasts
+  (scoring.score_probed_pairs KNOWN LIMIT), so the mentions never shuffle;
 * entity anchors live in a disjoint negative id space so mention and entity
   ids share one node domain for clustering;
 * every stage checkpoint is an idempotent table -> kill/rerun resumes
@@ -54,6 +60,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from blink_reloaded_spark.functions.embedding import hashed_embedding_udf
 from blink_reloaded_spark.functions.hashing import xxhash64_mod
@@ -68,10 +81,7 @@ from blink_reloaded_spark.operators.blocking import (
     mention_key_counts,
     probe_candidates,
 )
-from blink_reloaded_spark.operators.clustering import (
-    connected_components,
-    star_components,
-)
+from blink_reloaded_spark.operators.clustering import connected_components
 from blink_reloaded_spark.operators.mentions import extract_mentions
 from blink_reloaded_spark.operators.scoring import (
     DEFAULT_THRESHOLD,
@@ -87,6 +97,21 @@ ENTITY_ID_OFFSET = -1_000_000
 # what build_candidates_from records about the entity index, in `metrics`
 # and in the candidates checkpoint's manifest
 INDEX_METRICS = ("index_keys", "index_bytes", "index_shards")
+
+
+def links_schema(id_bits: int) -> StructType:
+    """The links stage's output (build_links_from): one argmax entity per
+    linked mention surface, with the surface's text and min mention id
+    (long, or the 32-char hex string at id_bits=128). LinkagePipeline
+    fingerprints it, so a links checkpoint written under another schema
+    is rebuilt, never resumed."""
+    return StructType([
+        StructField("a", LongType()),
+        StructField("b", LongType()),
+        StructField("score", DoubleType()),
+        StructField("surf_text", StringType()),
+        StructField("surf_min", StringType() if id_bits == 128 else LongType()),
+    ])
 
 
 def _prefix_key(text_col: str) -> F.Column:
@@ -264,8 +289,11 @@ class LinkagePipeline:
         passes over the mention set: min-per-component = min over the
         component's surfaces of surf_min. Only MENTION surfaces map back —
         an exact alias equals its entity title, and entity-anchor ids must
-        never become cluster ids. All surface-cardinality; AQE picks the
-        join strategies (no broadcast hints on unbounded sides)."""
+        never become cluster ids. The KB-free entry points' tail; run()
+        groups its star-forest links directly (_linked_clusters). All
+        surface-cardinality; AQE picks the join strategies. No broadcast
+        hints: unlike run()'s linked surfaces, the KB-free components span
+        every distinct surface, a side no earlier stage broadcasts."""
         surf_comp = comps.join(
             surf.where("is_mention").select(
                 F.col("id").alias("node"),
@@ -278,6 +306,24 @@ class LinkagePipeline:
             F.min("surf_min").alias("cluster_id")
         )
         return surf_comp.join(cmin, "component").select("mention", "cluster_id")
+
+    @staticmethod
+    def _linked_clusters(links: DataFrame) -> DataFrame:
+        """(mention=surface, cluster_id) for every linked mention surface
+        of run()'s links (a, b, score, surf_text, surf_min), in ONE
+        aggregation: link_best emits at most one entity `b` per surface, so
+        the links form a star forest whose components are the entities,
+        and the cluster id (the component's min mention id) is
+        min(surf_min) over the links that share `b`. One row per linked
+        surface — the bound the KB join already broadcasts."""
+        return (
+            links.groupBy("b")
+            .agg(
+                F.min("surf_min").alias("cluster_id"),
+                F.collect_list("surf_text").alias("texts"),
+            )
+            .select(F.explode("texts").alias("mention"), "cluster_id")
+        )
 
     @staticmethod
     def _expand(mentions: DataFrame, surf_cluster: DataFrame) -> DataFrame:
@@ -359,13 +405,14 @@ class LinkagePipeline:
         surfaces_t: DataFrame,
         assume_partitioned: bool = False,
     ) -> DataFrame:
-        """Surface->entity argmax links (a, b, score, surf_text) from the
-        candidates stage's (a, b, jw, cos) + the surfaces node table: a
-        JVM-only tail (scoring.score_probed_pairs joins both sides' text
-        and tokens, adds Levenshtein, Jaccard and containment, and rounds
-        cos) -> threshold argmax (link_best). The surface text rides
-        link_best's max struct, so no re-attachment join. Public for
-        isolated stage timing.
+        """Surface->entity argmax links (a, b, score, surf_text, surf_min;
+        links_schema) from the candidates stage's (a, b, jw, cos) + the
+        surfaces node table: a JVM-only tail (scoring.score_probed_pairs
+        joins both sides' text and tokens and the surface's surf_min, adds
+        Levenshtein, Jaccard and containment, and rounds cos) -> threshold
+        argmax (link_best). The surface text and surf_min depend only on
+        `a`, so they ride link_best's max struct: no re-attachment join.
+        Public for isolated stage timing.
 
         `assume_partitioned` is accepted for existing callers and no
         longer changes the plan: the tail has no pair exchange to skip."""
@@ -374,9 +421,9 @@ class LinkagePipeline:
             surfaces_t.where("is_mention"),
             surfaces_t.where("NOT is_mention"),
         )
-        best = link_best(scored, self.threshold, carry=["a_text"])
+        best = link_best(scored, self.threshold, carry=["a_text", "surf_min"])
         return best.select(
-            "a", "b", "score", F.col("a_text").alias("surf_text")
+            "a", "b", "score", F.col("a_text").alias("surf_text"), "surf_min"
         )
 
     def _fingerprint(self, surfaces: list[str] | None) -> str:
@@ -405,6 +452,9 @@ class LinkagePipeline:
                 # the candidates checkpoint is the probe kernel's output:
                 # a dir written under another kernel schema rebuilds
                 "candidates_schema": PROBE_SCHEMA.simpleString(),
+                # the clusters stage reads surf_min from the links: a dir
+                # whose links predate it rebuilds
+                "links_schema": links_schema(self.id_bits).simpleString(),
                 "surfaces": sorted(surfaces) if surfaces else None,
             },
             sort_keys=True,
@@ -545,22 +595,18 @@ class LinkagePipeline:
 
         # -- 5. clustering -----------------------------------------------------
         def build_clusters() -> DataFrame:
-            # CC runs on the SURFACE graph (surface -> entity link edges) —
-            # provably equivalent to mention-level closure: mentions of the
+            # Clustering runs on the SURFACE graph (surface -> entity link
+            # edges) — equivalent to mention-level closure: mentions of the
             # same linked surface connect through the entity anchor, and
-            # mentions of unlinked surfaces have no edges (singletons). The
-            # expansion to mentions is one broadcast join + one groupBy —
-            # mention-level cost is two linear shuffles, never log-rounds of
-            # 10^12-edge CC iterations.
-            edges = links.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            # nodes=None: only LINKED surfaces get components — mentions of
-            # unlinked surfaces must stay singletons (FIXTURES F5: NIL
-            # mentions are singletons, the reference's no-prediction case).
-            # The graph is a star forest by construction (link_best emits at
-            # most ONE entity per surface), so components collapse to one
-            # aggregation — no log-round CC loop (star_components docstring)
-            comps = star_components(edges)
-            return self._expand(m_slim, self._surface_clusters(comps, surfaces_t))
+            # mentions of unlinked surfaces have no edges. The graph is a
+            # star forest (link_best emits at most ONE entity per surface),
+            # so its components are the entities: one aggregation of the
+            # links by entity gives each linked surface its cluster id
+            # (_linked_clusters). That frame is surface-cardinality, so it
+            # is broadcast and the mentions never shuffle; mentions of
+            # unlinked surfaces stay singletons (FIXTURES F5: the
+            # reference's NIL / no-prediction case).
+            return self._expand(m_slim, F.broadcast(self._linked_clusters(links)))
 
         clusters = stage(
             "clusters",

@@ -5,16 +5,16 @@ re-derivable artifact, not an in-session claim).
 
 Protocol (same discipline as bench_scaling.py):
 * inputs are PRE-MATERIALIZED once to tmpfs parquet — the surfaces node
-  table (id, text, is_mention, vec, tk) and the candidate-pair table
-  (a, b) exactly as the pipeline's checkpoints would hold them;
+  table (id, text, is_mention, surf_min, vec, tk) and the candidates table
+  (a, b, jw, cos) exactly as the pipeline's checkpoints would hold them;
 * each TRIAL is a fresh JVM; levels are interleaved; per-JVM warmup runs
   a small end-to-end chain first (JIT + codegen + Python UDF workers);
 * each timed stage reads ONLY its materialized input (localCheckpointed,
   counted), so the number is that stage's cost alone:
-    - candidates_sec: blocking keys + purge + key join + top-k budget,
-      from the surfaces table;
-    - links_sec: two-phase scoring + argmax link + surface-text join,
-      from the candidate pairs.
+    - candidates_sec: entity key index + purge + the probe kernel (top-k,
+      JW, cos), from the surfaces table;
+    - links_sec: the JVM score tail + argmax link (carrying the surface
+      text and surf_min), from the candidates.
 
 Usage: python scripts/bench_stages.py [n_convs] [tpc] [lo] [hi]
 Env: SPARK_GRAFT_ENTITIES (default 20000), SPARK_GRAFT_TRIALS (default 3).
@@ -54,13 +54,15 @@ surfaces = [a["surface"] for a in cat.aliases]
 m = extract_mentions(tr.select("conv_id", "turn_idx", "text"), surfaces,
                      with_context=False)
 ment_surf = (
-    m.select(F.col("mention").alias("text")).distinct()
+    m.groupBy(F.col("mention").alias("text"))
+    .agg(F.min("mention_id").alias("surf_min"))
     .select(F.xxhash64(F.lit("surf"), "text").alias("id"), "text",
-            F.lit(True).alias("is_mention"))
+            F.lit(True).alias("is_mention"), "surf_min")
 )
 ent_surf = cat.entities_df(spark).select(
     (F.lit(ENTITY_ID_OFFSET) - F.col("entity_id")).alias("id"),
     F.lower(F.col("title")).alias("text"), F.lit(False).alias("is_mention"),
+    F.lit(None).cast("long").alias("surf_min"),
 )
 surfaces_t = (
     ment_surf.unionByName(ent_surf)
@@ -131,24 +133,6 @@ links.write.format("noop").mode("overwrite").save()
 links_sec = time.time() - t0
 links_cpu = tree_cpu_seconds() - c0
 
-sub = {}
-if os.environ.get("SPARK_GRAFT_SUBSTAGES"):
-    from blink_reloaded_spark.operators.scoring import (
-        link_best, two_phase_scored_pairs,
-    )
-    t0 = time.time()
-    cands.write.format("noop").mode("overwrite").save()
-    sub["noop_cands"] = round(time.time() - t0, 2)
-    t0 = time.time()
-    scored = two_phase_scored_pairs(cands, surfaces_t,
-                                    threshold=pipe.threshold)
-    scored.write.format("noop").mode("overwrite").save()
-    sub["scored"] = round(time.time() - t0, 2)
-    t0 = time.time()
-    link_best(scored, pipe.threshold).write.format("noop").mode(
-        "overwrite").save()
-    sub["scored_plus_best"] = round(time.time() - t0, 2)
-
 if os.environ.get("SPARK_GRAFT_EXPLAIN"):
     with open("/tmp/links_plan.txt", "w") as f:
         f.write(links._jdf.queryExecution().executedPlan().toString())
@@ -157,8 +141,6 @@ out = {"cpus": int(cpus), "candidates_sec": round(cand_sec, 2),
        "links_sec": round(links_sec, 2),
        "candidates_cpu_sec": round(cand_cpu, 2),
        "links_cpu_sec": round(links_cpu, 2)}
-if sub:
-    out["sub"] = sub
 print(json.dumps(out))
 """
 

@@ -232,3 +232,95 @@ def test_pre_probe_checkpoint_dir_rebuilds(spark, tmp_path):
     assert "jw:double" in man["schema"] and "cos:double" in man["schema"]
     assert set(man["metrics"]) == set(INDEX_METRICS)
     assert man["metrics"]["index_keys"] > 0 and man["metrics"]["index_shards"] == 1
+
+
+def test_links_schema_is_what_build_links_from_writes(spark):
+    """The fingerprint's declared links schema is the one the links stage
+    produces, for long and for 128-bit string mention ids."""
+    from pyspark.sql import functions as F
+
+    from blink_reloaded_spark import datagen
+    from blink_reloaded_spark.plans.pipeline import LinkagePipeline, links_schema
+
+    cat = datagen.EntityCatalog.build(n_entities=15)
+    _, me = datagen.generate_transcripts(spark, cat, n_convs=6, turns_per_conv=4)
+    ents = cat.entities_df(spark)
+    m64 = me.select("mention_id", "mention")
+    m128 = m64.select(F.format_string("%032x", "mention_id").alias("mention_id"), "mention")
+    for id_bits, m in ((64, m64), (128, m128)):
+        p = LinkagePipeline(spark, id_bits=id_bits)
+        surf = p._surfaces(m, "mention_id", ents).localCheckpoint()
+        links = p.build_links_from(p.build_candidates_from(surf), surf)
+        assert links.schema.simpleString() == links_schema(id_bits).simpleString()
+    assert LinkagePipeline(spark)._fingerprint(None) != LinkagePipeline(
+        spark, id_bits=128
+    )._fingerprint(None)
+
+
+def _pre_surf_min_fingerprint(p, surfaces):
+    """LinkagePipeline._fingerprint as it was while the links stage wrote
+    (a, b, score, surf_text) rows: no links_schema."""
+    import hashlib
+
+    from blink_reloaded_spark.operators.blocking import PROBE_SCHEMA
+
+    src = json.dumps(
+        {
+            "bands": p.bands,
+            "rows": p.rows,
+            "shingle_k": p.shingle_k,
+            "threshold": p.threshold,
+            "max_block": p.max_block,
+            "max_entity_block": p.max_entity_block,
+            "max_candidates_per_mention": p.max_candidates_per_mention,
+            "max_key_pairs": p.max_key_pairs,
+            "id_bits": p.id_bits,
+            "cos_source": p.cos_source,
+            "surfaces_schema": 2,
+            "candidates_schema": PROBE_SCHEMA.simpleString(),
+            "surfaces": sorted(surfaces) if surfaces else None,
+        },
+        sort_keys=True,
+    )
+    return hashlib.sha256(src.encode()).hexdigest()[:16]
+
+
+def test_pre_surf_min_links_dir_rebuilds(spark, tmp_path):
+    """A checkpoint dir whose links stage holds (a, b, score, surf_text)
+    rows under the fingerprint of the code before the links carried
+    surf_min, with clusters lost, must be rebuilt, not resumed: the
+    clusters stage reads surf_min from the links."""
+    import shutil
+
+    from blink_reloaded_spark import datagen
+    from blink_reloaded_spark.plans.pipeline import LinkagePipeline
+
+    cat = datagen.EntityCatalog.build(n_entities=15)
+    tr, me = datagen.generate_transcripts(
+        spark, cat, n_convs=10, turns_per_conv=4, hot_conv_factor=2
+    )
+    ents = cat.entities_df(spark)
+    d = str(tmp_path / "ck")
+    p1 = LinkagePipeline(spark, checkpoint_dir=d)
+    want = sorted(map(tuple, p1.run(tr, ents, mentions=me).collect()))
+    old_fp = _pre_surf_min_fingerprint(p1, None)
+    assert old_fp != p1._fingerprint(None)
+
+    # the dir as the older code left it, after losing clusters
+    ldir = os.path.join(d, "links")
+    rows = spark.read.parquet(ldir).select("a", "b", "score", "surf_text").collect()
+    shutil.rmtree(ldir)
+    spark.createDataFrame(rows, "a long, b long, score double, surf_text string") \
+        .write.parquet(ldir)
+    for stage in ("mentions", "surfaces", "candidates", "links"):
+        man = os.path.join(d, stage, "_MANIFEST.json")
+        meta = json.load(open(man)) if os.path.exists(man) else {"stage": stage}
+        meta["fingerprint"] = old_fp
+        json.dump(meta, open(man, "w"))
+    shutil.rmtree(os.path.join(d, "clusters"))
+
+    p2 = LinkagePipeline(spark, checkpoint_dir=d)
+    assert sorted(map(tuple, p2.run(tr, ents, mentions=me).collect())) == want
+    man = json.load(open(os.path.join(ldir, "_MANIFEST.json")))
+    assert man["fingerprint"] == p2._fingerprint(None)
+    assert "surf_min:bigint" in man["schema"]

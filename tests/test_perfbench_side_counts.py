@@ -5,7 +5,10 @@ of some pipeline fields (`cos_source`, `max_entity_block`) and of the
 a renamed field or keyword fail in tier-1, not in a traced benchmark run;
 its key counts must match the keys `build_candidates_from` blocks on. The
 traced run's blocking and scoring layers call the public stage builders
-on perfbench's own surfaces table; their links must equal `run_links`'."""
+on perfbench's own surfaces table; their links must equal `run_links`'.
+Its clustering and expand layers keep the star-components chain over
+those links; their digest must equal `run()`'s, or `--trace 1` reports an
+incorrect run."""
 
 from __future__ import annotations
 
@@ -16,12 +19,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from blink_reloaded_spark import datagen
+from blink_reloaded_spark.operators.clustering import star_components
 from blink_reloaded_spark.operators.mentions import extract_mentions
 from blink_reloaded_spark.plans.pipeline import ENTITY_ID_OFFSET
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
 )
+import checks  # noqa: E402
 import workloads  # noqa: E402
 
 
@@ -80,3 +85,16 @@ def test_traced_layers_match_run_links(spark, inputs, name):
         .collect()
     }
     assert got == want and len(got) > 0
+
+
+@pytest.mark.parametrize("name", sorted(workloads.SPECS))
+def test_traced_clustering_and_expand_give_run_digest(spark, inputs, name):
+    tr, ents, surfaces, m, surf = inputs
+    pipe = workloads.new_pipeline(spark, workloads.SPECS[name])
+    # traced_run's "scoring", "clustering" and "expand" layers
+    cands = pipe.build_candidates_from(surf).localCheckpoint(eager=True)
+    links = pipe.build_links_from(cands, surf, assume_partitioned=True)
+    comps = star_components(links.select(F.col("a").alias("src"), F.col("b").alias("dst")))
+    got = checks.digest(workloads._expand(m, surf, comps))
+    assert got == checks.digest(pipe.run(tr, ents, surfaces=surfaces))
+    assert got[0] == m.count()

@@ -564,3 +564,25 @@ def test_text_without_a_token_does_not_crash_any_entry_point(spark):
     state = LinkagePipeline.cluster_state(pipe.run_kb_free(None, mentions=m0), m0)
     appended = pipe.run_kb_free_append(None, state, mentions=m.where("mention_id >= 2"))
     assert sorted(map(tuple, appended.collect())) == kb_free
+
+
+def test_run_submits_at_most_ten_jobs(spark, fixture):
+    """One run() into a noop sink, as the benchmark times it, submits at
+    most 10 Spark jobs on this fixture (status store). The star-components
+    tail (a groupBy, joins back onto the surfaces and a sort-merge join of
+    every mention) made it 20."""
+    cat, tr, me = fixture
+    ents = cat.entities_df(spark)
+    surfaces = [a["surface"] for a in cat.aliases]
+    sc = spark.sparkContext
+
+    def last_job_id() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs = sc._jsc.sc().statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+    tr.count()
+    j0 = last_job_id()
+    out = LinkagePipeline(spark, collect_metrics=False).run(tr, ents, surfaces=surfaces)
+    out.write.format("noop").mode("overwrite").save()
+    assert last_job_id() - j0 <= 10
